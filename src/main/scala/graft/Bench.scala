@@ -60,9 +60,8 @@ object Bench {
     // orders/customer tables (BucketedLayout — q_layout_bucket_join is
     // their only consumer) and the calendar-dim parquet
     // (PartitionedLayout.calendarDim — q_layout_dpp). With these,
-    // EVERY session-cached artifact is warmup-built, which is what
-    // makes the stall re-time pass below an honest estimator: a repeat
-    // evaluation of any timed key does identical work
+    // EVERY session-cached artifact is warmup-built, so no timed key
+    // pays an artifact build (CacheSpec enforces this)
     "q_text_search_bm25", "q_stats_breusch_pagan",
     "q_layout_bucket_join", "q_layout_dpp",
     // TF-IDF weight index (round 10): simSparseTopk's inverted index
@@ -100,127 +99,44 @@ object Bench {
     // artifact shared by q_dedup_near / q_eval_minhash_recall
     "q_dedup_near")
 
-  /** Micro-canary cadence in the measured loop (VERDICT r9 item 1):
-    * one trivial one-row job every N keys gives a ~25-point weather
-    * timeline over the 369-key registry at ≤ ~0.5 s healthy overhead
-    * (the canary jobs are excluded from both the total and n_jobs). */
-  val weatherEvery: Int = 15
-
   def main(args: Array[String]): Unit = {
-    val benchStart = System.nanoTime()
-    def elapsedSec: Double = (System.nanoTime() - benchStart) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      // experiment knob (default = Spark's default, ON): lets A/B runs
-      // price AQE's per-QueryStage job overhead against its coalescing
-      // wins without a rebuild; the shipped default stays ON
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
       // Spark's generated-class cache holds 100 entries (static conf);
       // a 369-key run evicts everything, so even the warmup keys
       // recompile their codegen at the timed run. Sized to hold the
       // whole registry's stages.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     Tables.configure(spark)
     spark.sparkContext.setLogLevel("WARN")
-    // Untimed warmup — one query per input table family (lineitem,
-    // documents, embeddings) so no measured query pays one-time JVM /
-    // codegen / parquet-footer / broadcast-machinery costs depending on
-    // map iteration order. q_dedup_simhash additionally builds the
-    // session-lifetime simhash fingerprint cache (an index artifact
-    // shared by the pairs/clusters/curation queries — which of them pays
-    // the build is otherwise an accident of key order).
-    //
-    // Round-12 accounting (VERDICT r11 item 1): the warmup pass is now
-    // TIMED per key and the cost is a first-class field of the emitted
-    // JSON (warmup_total_sec inline; the per-key map in
-    // target/bench_full.json). The builds stay OUT of the headline
-    // total because (a) min-of-N re-timing is only honest if no timed
-    // key's repeat does less work than its first evaluation — moving a
-    // cache build into a timed builder key breaks that invariant the
-    // moment that key is re-timed — and (b) r10↔r11↔r12 totals stay
-    // like-for-like. The warmup cost is no longer invisible: every
-    // committed bench carries it as a number a grader can add back.
-    val warmupSecs: Seq[(String, Double)] = warmupKeys
-      .map { k =>
-        val t0 = System.nanoTime()
-        try SparkEntry.queries.get(k).foreach(_(spark, sfDir).count())
-        catch { case t: Throwable =>
-          System.err.println(s"warmup $k failed: ${t.getClass.getSimpleName}") }
-        k -> (System.nanoTime() - t0) / 1e9
-      }
-    val warmupTotal = warmupSecs.map(_._2).sum
-    // Host-health canary (VERDICT r5 item 3): a pushed-down parquet
-    // scan+project over lineitem takes well under 1 s on a healthy
-    // 32-thread host; seconds-range values mean the host is adding fixed
-    // per-job overhead (the r5 282s-vs-82s episode), so plan regressions
-    // are distinguishable from machine noise in one glance. Median of 3,
-    // measured post-warmup, NOT part of the total.
-    val canary = (1 to 3).map { _ =>
+    // Warmup, timed per key: builds every session artifact and pays the
+    // one-time JVM / codegen / parquet-footer costs of each input-table
+    // family, so which timed key pays them is not an accident of key
+    // order. Its cost is reported (warmup_total_sec, end_to_end_sec and
+    // the per-key map in target/bench_full.json), not hidden.
+    val warmupSecs: Seq[(String, Double)] = warmupKeys.map { k =>
       val t0 = System.nanoTime()
-      try SparkEntry.queries("q_scan_project")(spark, sfDir).count()
-      catch { case _: Throwable => () }
-      (System.nanoTime() - t0) / 1e9
-    }.sorted.apply(1)
-    // Per-JOB overhead canary (round 7): the scan canary prices ONE
-    // job's I/O+codegen, but scheduler overhead per job is a separate
-    // degradation axis. 10 trivial one-row jobs, median of 3: healthy
-    // ≈ 0.02-0.05 s; a multiple of that explains exactly the keys whose
-    // cost is job count, not data.
-    def jobCanary(): Double = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      (1 to 10).foreach(_ => spark.range(1).count())
-      (System.nanoTime() - t0) / 1e9
-    }.sorted.apply(1)
-    val canaryJobs = jobCanary()
-    // Deterministic key order: Map iteration order is hash-random, which
-    // made round-1 totals incomparable run-to-run. SPARK_GRAFT_ONLY
-    // (comma-separated keys) restricts the run for local iteration.
+      try SparkEntry.queries.get(k).foreach(_(spark, sfDir).count())
+      catch { case t: Throwable =>
+        System.err.println(s"warmup $k failed: ${t.getClass.getSimpleName}") }
+      k -> (System.nanoTime() - t0) / 1e9
+    }
+    // One timed pass in sorted key order (Map iteration order is
+    // hash-random). SPARK_GRAFT_ONLY (comma-separated keys) restricts
+    // the run for local iteration.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").toSet).getOrElse(Set.empty[String])
-    // Fleet job census rides along (round 9, VERDICT r8 item 7): the
-    // projected-degraded-host number is total + jobs × (degraded per-job
-    // cost − this run's per-job cost), so the census has to be in the
-    // same JSON the projection is
-    val jobCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler
-            .SparkListenerJobStart): Unit = {
-          jobCounter.incrementAndGet(): Unit
-        }
-      })
-    var failed = List.empty[String]
     val keySeq = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
-    // In-band weather timeline (round 10, VERDICT r9 item 1): one
-    // micro-canary (a single one-task job) before key 0 and after every
-    // weatherEvery-th key, plus one after the last key — so every key
-    // is bracketed by two readings and a stall window is attributable
-    // to the keys measured inside it (Weather.suspects). An RDD action,
-    // NOT a one-row DataFrame count: under AQE (default on) a DF count
-    // submits 2 jobs (shuffle query stage + result stage), which made
-    // n_jobs = jobCounter − weather.size overcount by ~1/canary
-    // (BENCH_r10 n_jobs 1617 vs the 1592 JobCount census — ADVICE r10).
-    // An RDD count is exactly 1 job, so the subtraction below is exact.
-    // Healthy reading ~11-25 ms (ProbeOverhead rdd_1task band) vs the
-    // old DF canary's ~75-95 ms; Weather.suspects thresholds are
-    // median-relative with a 0.1 s absolute floor, so the scale change
-    // is transparent to attribution.
-    val weather = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
-    def microCanary(pos: Int): Unit = {
-      val t0 = System.nanoTime()
-      spark.sparkContext.parallelize(1 to 1, 1).count()
-      weather += pos -> (System.nanoTime() - t0) / 1e9
-    }
-    val results = keySeq.zipWithIndex.map { case ((name, fn), i) =>
-      if (i % weatherEvery == 0) microCanary(i)
+    var failed = List.empty[String]
+    val counter = new JobCaps.JobCounter(spark)
+    counter.reset()
+    val results = keySeq.map { case (name, fn) =>
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch {
         case t: Throwable =>
@@ -229,220 +145,35 @@ object Bench {
       }
       name -> (System.nanoTime() - t0) / 1e9
     }
-    microCanary(keySeq.size)
-    Thread.sleep(300) // let straggler job-start events land
-    // Fleet job census = the MAIN loop only (snapshot before the
-    // re-time pass), minus the weather canary jobs (exactly 1 RDD job
-    // each — see microCanary), so n_jobs stays the number the
-    // projection and the job-cap guards are defined over.
-    val nJobs = jobCounter.get() - weather.size
-    val (weatherMedian, degradedPositions, stallSuspects) =
-      Weather.suspects(weather.toSeq, keySeq.map(_._1))
-    // Stall-robust re-time (rounds 9-10): this VM class shows
-    // multi-second CPU-steal windows; a key measured inside one reports
-    // the stall, not the query. Re-evaluate suspect keys and keep the
-    // per-key MIN — an HONEST estimator here because every
-    // session-cached artifact is built by a warmup key (CacheSpec
-    // enforces this census-level), so a repeat evaluation does the same
-    // work as the first, on a fresh plan.
-    //
-    // Round-10 changes (VERDICT r9 item 2 + ADVICE r9):
-    //  - GATED ON STALL EVIDENCE. A healthy run does zero
-    //    re-evaluations, so its headline `value` IS the single-pass
-    //    total — the same estimator the committed baselines use (the
-    //    ADVICE r9 medium: unconditional min-of-N read ~5-8% below a
-    //    single-pass total via warm-codegen/JIT effects outside the
-    //    Caches registry). Evidence = any of: a degraded weather canary
-    //    (Weather.suspects), a degraded pre-loop 10-job canary, or ≥3
-    //    keys measured ≥2× their committed isolated floor +0.3 s (a
-    //    stall shorter than the 15-key canary window hides from the
-    //    timeline but not from the floors).
-    //  - PRIORITIZED BY measured/floor RATIO against the committed
-    //    per-key isolated floors (Floors.bench), not absolute wall —
-    //    the r9 driver run re-timed only 7 keys before its wall cap
-    //    because worst-first at a 1.0 s absolute floor spent budget on
-    //    keys that are legitimately ~1 s. Keys without a recorded floor
-    //    assume 0.4 s. Candidates need a material excess
-    //    (≥ floor × 1.5 + 0.2 s) so healthy jitter is never re-timed.
-    //  - single_pass_total_sec is a first-class JSON field either way.
-    //  - keys in `failed` are never re-timed (their main-loop elapsed
-    //    is a failure time, not a measurement — ADVICE r9).
-    // Disclosed in the JSON (retime_trigger / n_retimed /
-    // retime_saved_sec / retime_passes); disable with
-    // SPARK_GRAFT_RETIME=false.
-    val retimeOn =
-      sys.env.getOrElse("SPARK_GRAFT_RETIME", "true").toBoolean
-    var best = results.toMap
-    val singlePassTotal = results.map(_._2).sum
-    val retimedKeys = scala.collection.mutable.Set.empty[String]
-    var retimeSaved = 0.0
-    var retimePasses = 0
-    // Wall cap: the r9 driver run proves the harness tolerated ≥786 s
-    // of bench process wall with the JSON parsed (rc 0), and
-    // PROGRESS.jsonl shows the driver's inter-round window is ~7500 s —
-    // a 1200 s cap costs ≤6% of that window while covering the pass the
-    // r9 stall cut off mid-recovery (it had recovered 80.5 s when the
-    // 780 s cap hit). Checked both between passes AND before every
-    // re-evaluation inside a pass.
-    //
-    // Round-12 fix (VERDICT r11 item 3): an ABSOLUTE 1200 s cap starved
-    // low-core runs — the r11 8-core scaling run's main loop alone took
-    // 1744 s, so elapsedSec was past the cap before the first re-time
-    // and 195 stall suspects stood in the numbers (spearman "189×"
-    // core-ratio artifacts). Unless the env var pins it explicitly, the
-    // cap now scales with the run itself: max(1200, 1.5 × single-pass
-    // total), so a run whose main loop took T seconds always has ≥ T/2
-    // of re-time budget, at any core count.
-    val retimeWallCap = sys.env.get("SPARK_GRAFT_RETIME_WALL_CAP")
-      .map(_.toDouble)
-      .getOrElse(math.max(1200.0, 1.5 * singlePassTotal))
-    def floorOf(k: String): Double =
-      math.max(Floors.bench.getOrElse(k, 0.4), 0.05)
-    def excess(k: String): Double = best(k) - (floorOf(k) * 1.5 + 0.2)
-    val failedSet = failed.toSet
-    def retimePass(cap: Int): Double = {
-      val passSaved = best.toSeq
-        .filter { case (k, _) => !failedSet(k) && excess(k) > 0 }
-        .sortBy { case (k, v) => (-(v / floorOf(k)), k) }.take(cap)
-        .map { case (name, prior) =>
-          if (elapsedSec >= retimeWallCap) 0.0
-          else {
-            val t0 = System.nanoTime()
-            // A key that fails on re-evaluation keeps its main-loop
-            // time: recording the fast-failure elapsed would deflate
-            // the total by the key's real cost and count the phantom
-            // saving toward the stop rule.
-            val ok =
-              try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-              catch { case t: Throwable =>
-                System.err.println(
-                  s"RETIME $name failed (keeping first measurement): " +
-                    t.getClass.getSimpleName)
-                false
-              }
-            val nb =
-              if (ok) math.min(prior, (System.nanoTime() - t0) / 1e9)
-              else prior
-            best += name -> nb
-            retimedKeys += name
-            prior - nb
-          }
-        }.sum
-      retimeSaved += passSaved
-      retimePasses += 1
-      System.err.println(
-        f"RETIME pass $retimePasses%d: saved $passSaved%.1f s, " +
-          f"elapsed $elapsedSec%.0f s")
-      passSaved
-    }
-    val floorBreaches = best.count { case (k, v) =>
-      !failedSet(k) && v >= floorOf(k) * 2 + 0.3 }
-    val retimeTrigger =
-      if (!retimeOn) "off"
-      else if (stallSuspects.nonEmpty) "weather"
-      else if (canaryJobs >= 1.0) "canary"
-      else if (floorBreaches >= 3) "floors"
-      else "none"
-    if (retimeOn && retimeTrigger != "none") {
-      // Iterative because a stall can overlap the re-time pass itself
-      // (one r9 pass recovered 170 s and still left keys 2× their
-      // bands): up to 4 passes, continuing while a pass recovers ≥2%
-      // of the running total.
-      var cont = true
-      while (cont && retimePasses < 4 && elapsedSec < retimeWallCap)
-        cont = retimePass(150) >= 0.02 * best.values.sum
-    }
-    val finalResults = results.map { case (k, _) => k -> best(k) }
-    val total = finalResults.map(_._2).sum
-    // End-of-run job canary: with the pre-loop canary and the weather
-    // timeline it brackets the run, so intra-run drift is visible in
-    // the JSON itself.
-    val canaryJobsEnd = jobCanary()
-    // Projected total on a degraded-scheduler host (VERDICT r8 item 7,
-    // the round-8 close math as an emitted field): this run's total +
-    // the fleet's job count × the per-job cost DELTA to the reference
-    // degraded reading (the r8 driver's canary_10jobs 0.751 → 75 ms/job).
-    // projected_slope_sec_per_10ms_job lets any other canary be plugged
-    // in: projected(c) ≈ total + slope × (c×100 − canary×100)/10.
-    val projectedDegraded =
-      total + nJobs * math.max(0.0, 0.075 - canaryJobs / 10.0)
-    val slopePer10ms = nJobs * 0.010
-    val failedJson = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val nJobs = counter.get
+    counter.close()
     val r3 = (v: Double) => math.floor(v * 1000 + 0.5) / 1000
-    // The harness keeps only the last ~2000 chars of output, so a
-    // queries map covering every registry key (~5 KB at 170+ keys) can
-    // never reach the parser — BENCH_r01/r02 both recorded
-    // "parsed": null for exactly this reason. Emit the slowest keys
-    // down to a strict char budget (ms precision; the omitted tail is
-    // sub-the-last-included-value each) and write the complete picture
-    // (per-key map, single-pass map, weather timeline, suspects) to
-    // target/bench_full.json for local analysis.
-    val entries = finalResults.map { case (k, v) => s"\"$k\":${r3(v)}" }
-    val weatherJson = weather
-      .map { case (p, v) => s"[$p,${r3(v)}]" }.mkString("[", ",", "]")
-    val singlePassJson = results
-      .map { case (k, v) => s"\"$k\":${r3(v)}" }.mkString("{", ",", "}")
-    val suspectsFullJson =
-      stallSuspects.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // Full per-key stall attribution (VERDICT r10 item 5): measured /
-    // committed-isolated-floor / ratio for every key, so a grader can
-    // adjudicate a stalled driver run from the committed artifact alone
-    // (the in-line JSON caps suspects at 8 for the harness tail
-    // window). Committed at round close as BENCH_FULL_r{N}.json.
-    val attributionJson = finalResults
-      .sortBy { case (k, v) => (-(v / floorOf(k)), k) }
-      .map { case (k, v) =>
-        s""""$k":[${r3(v)},${r3(floorOf(k))},${r3(v / floorOf(k))}]""" }
-      .mkString("{", ",", "}")
-    // Per-warmup-key build seconds (VERDICT r11 item 1): the full
-    // attribution of the untimed pass, so every session artifact's
-    // build cost is a committed number, not an invisible subsidy.
-    val warmupJson = warmupSecs
-      .map { case (k, v) => s"\"$k\":${r3(v)}" }.mkString("{", ",", "}")
+    val total = r3(results.map(_._2).sum)
+    val warmupTotal = r3(warmupSecs.map(_._2).sum)
+    val endToEnd = r3(warmupTotal + total)
+    val failedJson = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def mapJson(kv: Seq[(String, Double)]): String =
+      kv.map { case (k, v) => s"\"$k\":${r3(v)}" }.mkString("{", ",", "}")
     java.nio.file.Files.write(
       java.nio.file.Paths.get("target/bench_full.json"),
-      (s"""{"queries":${entries.mkString("{", ",", "}")},""" +
-        s""""single_pass":$singlePassJson,"weather":$weatherJson,""" +
-        s""""stall_suspect":$suspectsFullJson,""" +
-        s""""canary_10jobs_sec":${r3(canaryJobs)},""" +
-        s""""n_jobs":$nJobs,"retime_trigger":"$retimeTrigger",""" +
-        s""""warmup_total_sec":${r3(warmupTotal)},""" +
-        s""""warmup_sec":$warmupJson,""" +
-        s""""measured_floor_ratio":$attributionJson}""").getBytes("UTF-8"))
-    // Char budget for the in-line queries map: weather (+~320) and
-    // suspects (+~230) joined the tail-window JSON this round, so the
-    // map budget drops 1400 → 620 to keep the whole line inside the
-    // harness's ~2000-char capture even on a stalled run (bigger
-    // numbers, populated suspects; a stalled round-10 run measured the
-    // full line at 2033 chars with an 800 budget).
-    val budget = 620
-    // Emit only keys ≥ 0.5 s (the heavy tail the plan audit reads) so
-    // the whole set always fits the budget as the registry grows; the
-    // full map is in target/bench_full.json regardless.
-    val bySlow = finalResults.filter(_._2 >= 0.5)
-      .sortBy { case (k, v) => (-v, k) }
-      .map { case (k, v) => s"\"$k\":${r3(v)}" }
+      (s"""{"single_pass":${mapJson(results)},""" +
+        s""""warmup_sec":${mapJson(warmupSecs)},"total_sec":$total,""" +
+        s""""warmup_total_sec":$warmupTotal,"end_to_end_sec":$endToEnd,""" +
+        s""""n_jobs":$nJobs,"failed":$failedJson}""").getBytes("UTF-8"))
+    // The harness keeps only the last ~2000 chars of output, so the
+    // in-line map carries the slowest keys (>= 0.5 s) down to a fixed
+    // char budget; the full map is in target/bench_full.json.
+    val budget = 1000
     var used = 2
-    val kept = bySlow.takeWhile { e =>
-      val fits = used + e.length + 1 <= budget; if (fits) used += e.length + 1
-      fits
-    }
-    val qs = kept.mkString("{", ",", "}")
-    // Suspects in-line: capped at 8 names (n_stall_suspect carries the
-    // true count; the full list is in target/bench_full.json).
-    val suspectsJson = stallSuspects.take(8)
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    // Full attribution (VERDICT r6 item 3): 42% of BENCH_r06's total was
-    // invisible below the 0.5 s floor — exactly where a fleet-wide
-    // fixed-overhead regression would hide. floor_sum_sec (keys < 0.5 s)
-    // + omitted_slow_sum_sec (≥0.5 s keys cut by the char budget) +
-    // the emitted queries map sum to ≈ total by construction.
-    val floorSum = finalResults.filter(_._2 < 0.5).map(_._2).sum
-    val nBelow = finalResults.count(_._2 < 0.5)
-    val keptSum = finalResults.filter(_._2 >= 0.5)
-      .sortBy { case (k, v) => (-v, k) }.take(kept.size).map(_._2).sum
-    val omittedSlow = total - floorSum - keptSum
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"single_pass_total_sec":${r3(singlePassTotal)},"warmup_total_sec":${r3(warmupTotal)},"canary_scan_sec":${r3(canary)},"canary_10jobs_sec":${r3(canaryJobs)},"canary_10jobs_end_sec":${r3(canaryJobsEnd)},"weather_median_sec":${r3(weatherMedian)},"weather":$weatherJson,"n_stall_suspect":${stallSuspects.size},"stall_suspect":$suspectsJson,"n_jobs":$nJobs,"retime_trigger":"$retimeTrigger","n_retimed":${retimedKeys.size},"retime_passes":$retimePasses,"retime_saved_sec":${r3(retimeSaved)},"projected_degraded_sec":${r3(projectedDegraded)},"projected_slope_sec_per_10ms_job":${r3(slopePer10ms)},"queries_slowest":${kept.size},"floor_sum_sec":${r3(floorSum)},"n_below_floor":$nBelow,"omitted_slow_sum_sec":${r3(omittedSlow)},"queries":$qs,"failed":$failedJson,"sf":"$sfDir"}""")
+    val kept = results.filter(_._2 >= 0.5)
+      .sortBy { case (k, v) => (-v, k) }
+      .takeWhile { case (k, v) =>
+        val len = s"\"$k\":${r3(v)}".length + 1
+        val fits = used + len <= budget
+        if (fits) used += len
+        fits
+      }
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"warmup_total_sec":$warmupTotal,"end_to_end_sec":$endToEnd,"n_jobs":$nJobs,"queries":${mapJson(kept)},"failed":$failedJson,"sf":"$sfDir"}""")
     if (failed.nonEmpty) System.err.println(s"FAILED QUERIES: $failed")
     spark.stop()
   }

@@ -1288,10 +1288,12 @@ object TextOps {
       .select(col("doc_id"), col("p.a").as("a"), col("p.b").as("b"))
       .groupBy("doc_id", "a", "b").agg(count(lit(1)).as("k"))
       .localCheckpoint()
+    // |vocab|-bounded census feeding the total AND the b side; left
+    // lazy — a localCheckpoint here cost one more job and measured no
+    // faster (sf0.1, local[4]: 1.86 s vs 1.68 s warm median)
     val uni = Tables.documents(s, d)
       .select(explode(toks()).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("c"))
-      .localCheckpoint() // |vocab|-bounded; feeds the total AND the b side
     // total as a window over the |vocab|-row census, carried on the
     // a-side broadcast (round 10) — the old tot aggregate + crossJoin
     // re-ran the unigram census and paid a broadcast QueryStage job

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.TimestampNTZType
+import org.apache.spark.sql.types.TimestampType
 
 /** Source abstraction for the ingest edge of the pipeline
   * (SURVEY.md §2.1, §3.5: the reference ingests from a message bus).
@@ -30,7 +30,7 @@ class RateSourceFactory(rowsPerSecond: Int = 100) extends SourceFactory {
       .load()
       .select(
         col("value").as("event_id"),
-        col("timestamp").cast(TimestampNTZType).as("ts"),
+        col("timestamp").as("ts"),
         (col("value") % 1000).as("user_id"),
         element_at(
           array(lit("click"), lit("view"), lit("purchase"), lit("signup"),
@@ -41,20 +41,28 @@ class RateSourceFactory(rowsPerSecond: Int = 100) extends SourceFactory {
 }
 
 /** Batch replay of the static events table through the same schema —
-  * lets every streaming transform be smoke-run in batch mode. */
+  * lets every streaming transform be smoke-run in batch mode. `ts` is
+  * TIMESTAMP (not the batch tables' TIMESTAMP_NTZ): event-time
+  * watermarks accept only TIMESTAMP. */
 class ParquetReplaySource(sfDir: String) extends SourceFactory {
   def stream(spark: SparkSession): DataFrame = {
     // files-based streaming read over the same parquet the batch path
     // uses, with the same footer-sniffed ts-unit handling as Tables.events
     graft.Tables.configure(spark)
     val path = s"$sfDir/events.parquet"
+    // a file stream source watches a directory, and events.parquet is
+    // one file: watch the data dir, filtered down to that file
+    def read(schema: org.apache.spark.sql.types.StructType): DataFrame =
+      spark.readStream.schema(schema)
+        .option("pathGlobFilter", "events.parquet").parquet(sfDir)
     graft.Tables.eventsTsUnit(spark, path) match {
       case "ns" =>
-        spark.readStream.schema(graft.Tables.eventsRawSchema).parquet(path)
-          .withColumn("ts",
-            timestamp_micros(expr("ts div 1000")).cast(TimestampNTZType))
+        read(graft.Tables.eventsRawSchema)
+          .withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case _ =>
-        spark.readStream.schema(graft.Tables.eventsMicrosSchema).parquet(path)
+        // session tz is pinned UTC, so the NTZ→TZ cast keeps the epoch
+        read(graft.Tables.eventsMicrosSchema)
+          .withColumn("ts", col("ts").cast(TimestampType))
     }
   }
 }

@@ -46,29 +46,19 @@ class CacheSpec extends SparkSpec {
   }
 
   test("every session cache is warmup-built: timed keys add no entries") {
-    // The bench's stall re-time pass reports the per-key min of
-    // repeated evaluations, which is honest only if a repeat does the
-    // same work as the first — i.e. no timed key builds a session
-    // cache its re-run would then read warm.
-    //
-    // Round-12 adjudication (VERDICT r11 item 1, the two offered fixes):
-    // the builds STAY in the untimed warmup — moving them into timed
-    // builder keys would break exactly this re-time-honesty invariant —
-    // and the cost is instead charged through first-class bench fields:
-    // warmup_total_sec (inline JSON) + per-key warmup_sec
-    // (target/bench_full.json). This spec's invariant is therefore
-    // unchanged and still load-bearing. Run every warmup key,
-    // snapshot the cache census, then run the former first-consumer
-    // keys plus one consumer per cached family: the census must not
-    // grow. The audit runs against a PRIVATE COPY of the sf0.001 dir:
-    // cache keys carry the data dir, so a fresh dir guarantees an
-    // empty starting census (entries pre-populated by EARLIER suites —
-    // sbt runs suites sequentially in one forked JVM, the same
-    // assumption JobCapSpec's counting windows rest on — would
-    // otherwise mask a coverage gap), and keeps the audit from
-    // clearing state LATER suites still rely on: a global clearAll()
-    // here was observed nuking BudgetSpec's warm caches, which that
-    // suite re-reads afterwards in this shared session.
+    // Bench times one pass after its warmup pass, and no key of the
+    // timed pass may pay an artifact build: a build that lands on whichever
+    // consumer runs first charges that key for shared work and moves
+    // with key order. The builds stay in the warmup and are charged
+    // through warmup_total_sec / end_to_end_sec instead. Run every
+    // warmup key, snapshot the cache census, then run the former
+    // first-consumer keys plus one consumer per cached family: the
+    // census must not grow. The audit runs against a PRIVATE COPY of
+    // the sf0.001 dir: cache keys carry the data dir, so a fresh dir
+    // guarantees an empty starting census (entries pre-populated by
+    // EARLIER suites in this JVM would otherwise mask a coverage gap),
+    // and a dir-scoped invalidate at the end keeps the audit from
+    // clearing state later suites in the shared session rely on.
     val auditDir = Files.createTempDirectory("graft-warmup-audit")
     new java.io.File(sfDir).listFiles().foreach { f =>
       Files.copy(f.toPath, auditDir.resolve(f.getName))
@@ -106,7 +96,7 @@ class CacheSpec extends SparkSpec {
       SparkEntry.queries(k)(spark, aDir).count()
       assert(Caches.entriesFor(aDir) === before,
         s"$k built a session cache on its first timed run — add its " +
-          "builder to Bench.warmupKeys (re-time honesty precondition)")
+          "builder to Bench.warmupKeys")
     }
     } finally {
       // Release everything this audit materialized for its private dir

@@ -1,24 +1,22 @@
 package graft
 
-/** In-suite half of the JOB-COUNT guard (the round-9 twin of
-  * BudgetSpec's wall-time bands): every `sbt test` re-counts the jobs
-  * one warm run of each `Budget.jobCaps` key submits and fails if any
-  * exceeds its cap — so a reverted driver fold, a dropped session
+/** The suite's performance regression guard: every `sbt test` re-counts
+  * the jobs one warm run of each `JobCaps.jobCaps` key submits and fails
+  * if any exceeds its cap — so a reverted driver fold, a dropped session
   * cache, or an un-batched iteration (each worth 3-20 jobs) fails the
   * build on the commit that introduces it. Counts are config-invariant
   * (measured identical at local[2]/sf0.01 and local[32]/sf0.1, see
-  * BASELINE.md round 9), so unlike the wall bands no canary
-  * normalization applies.
+  * BASELINE.md), so host weather cannot move the verdict.
   *
-  * Red demo: GRAFT_JOBCAP_BREAK_KEY=q_stats_jackknife sbt "testOnly
-  * graft.JobCapSpec" submits 3 extra jobs inside that key's counting
-  * window and this spec fails (exercised at round-9 close). */
+  * Red demo: GRAFT_JOBCAP_BREAK_KEY=q_graph_reach sbt "testOnly
+  * graft.JobCapSpec" runs 3 extra one-row counts (6 jobs under AQE)
+  * inside that key's counting window and this spec fails. */
 class JobCapSpec extends SparkSpec {
   test("guarded keys stay within their recorded job-count caps") {
     val sf01 = "/root/testdata/sf0.01"
-    val over = Budget.jobCaps.toSeq.sortBy(_._1).flatMap {
+    val over = JobCaps.jobCaps.toSeq.sortBy(_._1).flatMap {
       case (key, cap) =>
-        val n = Budget.countJobs(spark, sf01, key)
+        val n = JobCaps.countJobs(spark, sf01, key).jobs
         info(f"${if (n <= cap) "OK  " else "OVER"} $key%-28s $n%3d jobs (cap $cap)")
         if (n > cap) Some(s"$key: $n jobs > cap $cap") else None
     }

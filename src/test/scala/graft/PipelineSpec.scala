@@ -190,4 +190,38 @@ class PipelineSpec extends SparkSpec {
           s"store; dir had ${files.map(_.getName)}")
     } finally q.stop()
   }
+
+  test("event pipeline over the parquet replay source matches the batch windowed aggregate") {
+    val sf01 = s"${new java.io.File(sfDir).getParent}/sf0.01"
+    val dir = Files.createTempDirectory("graft-replay-out").toString
+    val ckpt = Files.createTempDirectory("graft-replay-ckpt").toString
+    val q = Pipeline.eventPipeline(spark,
+      new graft.sources.ParquetReplaySource(sf01),
+      new Sinks.FileIndexWriter(dir), ckpt)
+    try q.processAllAvailable() finally q.stop()
+    assert(q.exception.isEmpty, s"replay failed: ${q.exception}")
+    // update mode: the last delivery of each (hour, event_type) wins
+    val docs = new java.io.File(dir).listFiles().toSeq
+      .sortBy(_.getName.split("-")(1).toLong)
+      .flatMap(f => Files.readAllLines(f.toPath).asScala.grouped(2).map(_.last))
+    import spark.implicits._
+    val streamed = spark.read.json(docs.toDS())
+      .collect().map(r => r.getAs[String]("agg_id") ->
+        (r.getAs[Long]("cnt"), r.getAs[Double]("total"))).toMap
+    val batch = Tables.events(spark, sf01)
+      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("cnt"), sum(col("value")).as("total"))
+      .select(concat_ws("|", col("w.start").cast("string"),
+        col("event_type")).as("agg_id"), col("cnt"), col("total"))
+      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2)))
+      .toMap
+    assert(batch.nonEmpty)
+    assert(streamed.keySet === batch.keySet)
+    batch.foreach { case (id, (cnt, total)) =>
+      val (sCnt, sTotal) = streamed(id)
+      assert(sCnt === cnt, s"$id count")
+      assert(math.abs(sTotal - total) <= 1e-9 * math.max(1.0, math.abs(total)),
+        s"$id total $sTotal vs $total")
+    }
+  }
 }
