@@ -1,104 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  /** Untimed warmup keys — one per input-table family plus the shared
-    * simhash index build. Referenced by RegistrySpec so a rename here
-    * can't silently drop a warmup. */
-  val warmupKeys: Seq[String] = Seq("q_agg_pricing_summary",
-    "q_text_tokencount", "q_sim_cosine_topk", "q_dedup_simhash",
-    // verified-pair caches (unigram@0.8, bigram@0.6, embedding exact +
-    // LSH) and the near-dup cluster labels — like the simhash
-    // fingerprints, shared index artifacts whose one-time build should
-    // not land on whichever consumer runs first
-    "q_dedup_minhash", "q_dedup_ngram", "q_dedup_embed",
-    "q_dedup_embed_lsh", "q_dedup_clusters",
-    // graph index artifacts (bipartite + co-purchase edge caches) — like
-    // the simhash fingerprints, which query pays the one-time build is
-    // otherwise an accident of key order
-    "q_graph_pagerank", "q_graph_triangles",
-    // one-time partitioned-layout ETL (PartitionedLayout) — the measured
-    // run then times the pruned READ, which is what the key is about
-    "q_layout_partition_prune",
-    // orders-family warmup (round 7): the table families above covered
-    // lineitem/documents/embeddings/events but NOT orders, so the first
-    // alphabetical orders reader (q_agg_histo_quantile's neighborhood)
-    // paid the one-time footer-sniff + scan codegen — the likely
-    // warmup-attribution component of its 7.4 s BENCH_r06 outlier
-    // (healthy steady state is 0.4-0.5 s, measured 3x round 7)
-    "q_agg_merge_days",
-    // trained-quantizer caches (round 7): k-means centroids + PQ
-    // codebook are session index artifacts shared by five keys; build
-    // them untimed so q_ann_ivfpq (alphabetically first consumer)
-    // doesn't carry the one-time Lloyd collects
-    "q_ann_kmeans", "q_embed_pq",
-    // trained-classifier cache (round 7): one deterministic GD train
-    // shared by six eval keys; untimed so q_eval_auroc (alphabetically
-    // first consumer) doesn't carry the build
-    "q_text_quality_classifier",
-    // multimodal shared artifacts (round 8, VERDICT r7 items 1-2): the
-    // packed aHash fingerprint frame (phash + phash_hamming) and the
-    // 64-byte block inventory (chunk_dedup/block_jaccard/storage_audit)
-    // are session caches now — build them untimed; scene_cut has no
-    // cache but is the most CPU-dense lambda chain in the registry, so
-    // warm its codegen/JIT the way orders got q_agg_merge_days
-    "q_multimodal_phash", "q_multimodal_chunk_dedup",
-    "q_multimodal_scene_cut",
-    // layout-stats artifact (round 9, VERDICT r8 item 2): the four
-    // exact-ntile file-census passes build once per (session, dir) and
-    // are shared by q_layout_skipping / q_layout_hilbert
-    "q_layout_hilbert",
-    // trained BPE artifact (round 9): the 5-round merge loop builds
-    // once per (session, dir), shared by bpe_train / bpe_encode
-    "q_text_bpe_train",
-    // the remaining first-consumer-pays caches (round 9, retime
-    // audit): the BM25 per-doc stats frame (bm25DocCache — otherwise
-    // q_search_rrf, the alphabetically first consumer, pays the corpus
-    // pass), the daily event census (dayCensusCache — otherwise
-    // q_stats_breusch_pagan pays it for dw/ljung_box/pacf/pettitt),
-    // and the two disk-backed layout ETLs the review pass found living
-    // in maps OUTSIDE the Caches registry: the co-bucketed
-    // orders/customer tables (BucketedLayout — q_layout_bucket_join is
-    // their only consumer) and the calendar-dim parquet
-    // (PartitionedLayout.calendarDim — q_layout_dpp). With these,
-    // EVERY session-cached artifact is warmup-built, so no timed key
-    // pays an artifact build (CacheSpec enforces this)
-    "q_text_search_bm25", "q_stats_breusch_pagan",
-    "q_layout_bucket_join", "q_layout_dpp",
-    // TF-IDF weight index (round 10): simSparseTopk's inverted index
-    // became a session artifact (it re-built per evaluation before —
-    // ~10 of the key's 16 jobs); shared with q_text_keywords
-    "q_sim_sparse_topk",
-    // PQ assigned-codes + query-ADC-table artifacts (round 10):
-    // q_embed_pq (already above) builds the codes; the 32-row query
-    // table's first consumer is q_ann_ivfpq — warm it here
-    "q_ann_ivfpq",
-    // nearest-centroid prediction frame (round 11): session artifact
-    // shared by q_vec_centroid_classify and q_eval_kappa — build it
-    // untimed so q_eval_kappa (alphabetically first consumer) doesn't
-    // carry the scoring join + argmax window
-    "q_vec_centroid_classify",
-    // per-type daily census (round 11): pinned session artifact shared
-    // by granger / kendall_tau / wilcoxon_signed
-    "q_stats_granger",
-    // KS test-family census (round 11): pinned session artifact shared
-    // by q_stats_bh / q_stats_holm / q_stats_fisher_combine
-    "q_stats_bh",
-    // n-gram pair-overlap frame (round 11): session artifact shared by
-    // q_eval_rouge / q_eval_bleu
-    "q_eval_bleu",
-    // ranked retrieval frame (round 11): session artifact shared by
-    // q_eval_ndcg / q_eval_map
-    "q_eval_map",
-    // per-doc DSIR score frame (round 11): session artifact shared by
-    // q_sample_dsir / q_sample_ess
-    "q_sample_dsir",
-    // wedge common-neighbor frame (round 11): session artifact shared
-    // by q_graph_link_jaccard / q_graph_local_bridges
-    "q_graph_link_jaccard",
-    // exact near-dup ground-truth pair set (round 11): session
-    // artifact shared by q_dedup_near / q_eval_minhash_recall
-    "q_dedup_near")
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -106,25 +8,24 @@ object Bench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       // Spark's generated-class cache holds 100 entries (static conf);
-      // a 369-key run evicts everything, so even the warmup keys
-      // recompile their codegen at the timed run. Sized to hold the
-      // whole registry's stages.
+      // a 369-key run evicts everything. Sized to hold the whole
+      // registry's stages.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     Tables.configure(spark)
     spark.sparkContext.setLogLevel("WARN")
-    // Warmup, timed per key: builds every session artifact and pays the
-    // one-time JVM / codegen / parquet-footer costs of each input-table
-    // family, so which timed key pays them is not an accident of key
-    // order. Its cost is reported (warmup_total_sec, end_to_end_sec and
-    // the per-key map in target/bench_full.json), not hidden.
-    val warmupSecs: Seq[(String, Double)] = warmupKeys.map { k =>
+    // Warmup, timed per artifact: builds every declared session
+    // artifact for sfDir, so which timed key pays a build is not an
+    // accident of key order. Its cost is reported (warmup_total_sec,
+    // end_to_end_sec and the per-artifact map in target/bench_full.json),
+    // not hidden.
+    val warmupSecs: Seq[(String, Double)] = Caches.declared.map { a =>
       val t0 = System.nanoTime()
-      try SparkEntry.queries.get(k).foreach(_(spark, sfDir).count())
+      try a.warm(spark, sfDir)
       catch { case t: Throwable =>
-        System.err.println(s"warmup $k failed: ${t.getClass.getSimpleName}") }
-      k -> (System.nanoTime() - t0) / 1e9
+        System.err.println(s"warmup ${a.name} failed: ${t.getClass.getSimpleName}") }
+      a.name -> (System.nanoTime() - t0) / 1e9
     }
     // One timed pass in sorted key order (Map iteration order is
     // hash-random). SPARK_GRAFT_ONLY (comma-separated keys) restricts

@@ -1,94 +1,140 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.CopyOnWriteArrayList
+import java.util.concurrent.{ConcurrentHashMap, CopyOnWriteArrayList}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.OneToOneDependency
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
-/** Central registry for the session-lifetime derived-data caches
-  * (TokenBitmap dictionaries/bitmaps, DedupOps simhash fingerprints and
-  * cluster labels, TextOps BM25 per-doc stats).
+/** A session artifact: a value built once per (session, data dir,
+  * param) from the files under that dir and reused by every query of the
+  * session that needs it (fingerprints, pair sets, censuses, trained
+  * models, on-disk layouts). `params` are the values the query registry
+  * asks for; the warmup builds each of them.
   *
-  * Staleness contract: every cache is keyed by (SparkSession, data dir
-  * [, tokenizer]) and holds a persisted DataFrame built from the parquet
-  * under that dir AT FIRST USE. If the files under a dir are rewritten
+  * Getting an artifact is exactly as lazy as its build function: a
+  * lazily persisted frame is filled by its first consumer, and only
+  * `warm` forces it. Every artifact owns its own map, because builds
+  * nest (bitmaps build the vocab, which builds the tokens) and a
+  * ConcurrentHashMap rejects a recursive update of itself. */
+final class Artifact[P, V] private (val name: String, params: => Seq[P],
+    build: (SparkSession, String, P) => V) {
+  private val entries = new ConcurrentHashMap[(SparkSession, String, P), V]()
+  Caches.declare(this)
+
+  def apply(s: SparkSession, d: String, p: P): V =
+    entries.computeIfAbsent((s, d, p), _ => build(s, d, p))
+
+  def apply(s: SparkSession, d: String)(implicit unit: Unit =:= P): V =
+    apply(s, d, unit(()))
+
+  /** Build every registry param for `d` and materialize the values. */
+  def warm(s: SparkSession, d: String): Unit =
+    params.foreach(p => Caches.materialize(apply(s, d, p)))
+
+  def size: Int = entries.size
+
+  def entriesFor(d: String): Int = entries.keySet.asScala.count(_._2 == d)
+
+  /** Release and drop the entries of one dir (Some) or of all (None). */
+  private[graft] def drop(dir: Option[String]): Unit =
+    entries.keySet.asScala.filter(k => dir.forall(_ == k._2)).foreach { k =>
+      Option(entries.remove(k)).foreach(Caches.release)
+    }
+}
+
+object Artifact {
+  def apply[V](name: String)(build: (SparkSession, String) => V)
+      : Artifact[Unit, V] =
+    new Artifact[Unit, V](name, Seq(()), (s, d, _) => build(s, d))
+
+  def apply[P, V](name: String, params: => Seq[P])(
+      build: (SparkSession, String, P) => V): Artifact[P, V] =
+    new Artifact(name, params, build)
+}
+
+/** Registry of the declared session artifacts.
+  *
+  * Staleness contract: every artifact holds what it built from the
+  * files under its dir AT FIRST USE. If those files are rewritten
   * within a session, cached consumers (including the public
   * Pipeline.curateCorpus / publishCurated entry points) serve the
   * snapshot they first read until `invalidate(dir)` (or `clearAll()`) is
-  * called — which unpersists the cached frames and releases their
-  * executor memory (cluster results are persisted through an RDD handle
-  * the cache owns, so their blocks release promptly too; only the
-  * loop's INTERMEDIATE per-round checkpoints are left to the
-  * ContextCleaner). This mirrors Spark's own `spark.catalog.
-  * refreshTable` contract for cached file-backed tables: explicit
-  * refresh, never mid-query invalidation (a query planned against a
-  * half-invalidated snapshot would be worse than a stale-but-consistent
-  * one). At 100 TB the dirs are immutable dated snapshots and
-  * invalidation is a no-op by construction; this API exists for
-  * long-lived sessions pointed at mutable staging dirs. */
+  * called — which releases what the dropped values hold on the
+  * executors. This mirrors Spark's own `spark.catalog.refreshTable`
+  * contract for cached file-backed tables: explicit refresh, never
+  * mid-query invalidation (a query planned against a half-invalidated
+  * snapshot would be worse than a stale-but-consistent one). At 100 TB
+  * the dirs are immutable dated snapshots and invalidation is a no-op by
+  * construction; this API exists for long-lived sessions pointed at
+  * mutable staging dirs. */
 object Caches {
 
-  /** Each handler drops entries for one cache map: given Some(dir) only
-    * that dir's entries, given None all of them. */
-  private val handlers = new CopyOnWriteArrayList[Option[String] => Unit]()
+  private val artifacts = new CopyOnWriteArrayList[Artifact[_, _]]()
 
-  /** One size supplier per registered map — backs `totalEntries`. */
-  private val sizers = new CopyOnWriteArrayList[() => Int]()
+  private[graft] def declare(a: Artifact[_, _]): Unit = artifacts.add(a)
 
-  /** One dir-scoped counter per registered map — backs `entriesFor`. */
-  private val counters = new CopyOnWriteArrayList[String => Int]()
+  /** Every declared artifact, in declaration order. Artifacts are
+    * declared when their owning object initializes: the query registry
+    * initializes the operator packs, and the helpers outside it are
+    * named here. */
+  def declared: Seq[Artifact[_, _]] = {
+    SparkEntry.queries
+    Seq(Tables, operators.TokenBitmap, sources.PartitionedLayout,
+      sources.BucketedLayout)
+    artifacts.asScala.toSeq
+  }
 
-  private[graft] def register(h: Option[String] => Unit): Unit =
-    handlers.add(h)
+  /** Live entry count across every artifact. CacheSpec's warmup audit
+    * checks through it that no query builds an artifact the warmup has
+    * not built. */
+  def totalEntries: Int = artifacts.asScala.map(_.size).sum
 
-  /** Register a ConcurrentHashMap-backed cache. `dirOf` extracts the data
-    * dir from the key; `release` unpersists whatever the value pins. */
-  private[graft] def registerMap[K, V](map: ConcurrentHashMap[K, V],
-      dirOf: K => String, release: V => Unit): Unit = {
-    sizers.add(() => map.size)
-    counters.add { (dir: String) =>
-      var n = 0
-      map.forEach((k, _) => if (dirOf(k) == dir) n += 1)
-      n
-    }
-    register { dirOpt =>
-      val it = map.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (dirOpt.forall(_ == dirOf(e.getKey))) {
-          release(e.getValue)
-          it.remove()
-        }
+  /** Live entry count for ONE data dir across every artifact, so an
+    * audit on a private dir is not moved by other users of the session. */
+  def entriesFor(dir: String): Int = artifacts.asScala.map(_.entriesFor(dir)).sum
+
+  /** Drop every artifact built from `dir` (all sessions, all params),
+    * releasing what it holds. The next query rebuilds from the files as
+    * they are then. */
+  def invalidate(dir: String): Unit = artifacts.forEach(_.drop(Some(dir)))
+
+  /** Drop every artifact entry (all dirs). */
+  def clearAll(): Unit = artifacts.forEach(_.drop(None))
+
+  /** Fill what a value holds lazily: a persisted frame is counted once.
+    * Checkpointed and driver-local frames are materialized already. */
+  private[graft] def materialize(v: Any): Unit = v match {
+    case df: Dataset[_] => if (df.storageLevel != StorageLevel.NONE) df.count()
+    case p: Product => p.productIterator.foreach(materialize)
+    case xs: Iterable[_] => xs.foreach(materialize)
+    case _ =>
+  }
+
+  /** Release what a value holds, by how it was materialized: a persisted
+    * frame is unpersisted; a checkpointed frame (or one lifted from a
+    * persisted RDD) has its persisted RDD behind the LogicalRDD
+    * unpersisted, which `Dataset.unpersist` cannot reach; driver-local
+    * frames and plain values hold nothing. */
+  private[graft] def release(v: Any): Unit = v match {
+    case df: Dataset[_] =>
+      if (df.storageLevel != StorageLevel.NONE) df.unpersist()
+      else df.queryExecution.logical match {
+        case r: LogicalRDD => persisted(r.rdd).foreach(_.unpersist(false))
+        case _ =>
       }
+    case p: Product => p.productIterator.foreach(release)
+    case xs: Iterable[_] => xs.foreach(release)
+    case _ =>
+  }
+
+  /** The nearest persisted RDD along one-to-one dependencies. */
+  private def persisted(rdd: RDD[_]): Option[RDD[_]] =
+    if (rdd.getStorageLevel != StorageLevel.NONE) Some(rdd)
+    else rdd.dependencies match {
+      case Seq(d: OneToOneDependency[_]) => persisted(d.rdd)
+      case _ => None
     }
-  }
-
-  /** Live entry count across every registered cache map. The bench's
-    * stall re-time pass reports min-of-N per key, which is honest only
-    * if a repeat evaluation repeats the first one's work — i.e. every
-    * session cache is built by an UNTIMED warmup key, never by the
-    * first timed consumer. CacheSpec's warmup-coverage audit asserts
-    * that invariant through this census. */
-  def totalEntries: Int = {
-    var n = 0
-    sizers.forEach(s => n += s())
-    n
-  }
-
-  /** Live entry count for ONE data dir across every registered cache
-    * map. The warmup-coverage audit runs against a private copy of the
-    * test data so concurrent suites (which share the session and the
-    * cache maps, but never that dir) cannot move the count it asserts
-    * on. */
-  def entriesFor(dir: String): Int = {
-    var n = 0
-    counters.forEach(c => n += c(dir))
-    n
-  }
-
-  /** Drop every cached frame built from `dir` (all sessions, all
-    * tokenizers), unpersisting them. The next query rebuilds from the
-    * files as they are then. */
-  def invalidate(dir: String): Unit = handlers.forEach(_(Some(dir)))
-
-  /** Drop every registered cache entry (all dirs). */
-  def clearAll(): Unit = handlers.forEach(_(None))
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   *    factors and the parquet footer read is skipped on the hot path.
   *  - `events.ts` has been generated as both TIMESTAMP(NANOS) (rounds 1-4)
   *    and TIMESTAMP(MICROS) (round 5 regen) — the unit is SNIFFED from the
-  *    footer per path (eventsTsUnit), never assumed. NANOS needs
+  *    footer per (session, dir) (eventsTsUnit), never assumed. NANOS needs
   *    `spark.sql.legacy.parquet.nanosAsLong=true` and a `ts div 1000`
   *    µs truncation (matching DuckDB, the correctness oracle); MICROS reads
   *    natively as TIMESTAMP_NTZ. Either way callers get the same contract:
@@ -142,37 +142,27 @@ object Tables {
   def documents(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "documents")
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "embeddings")
 
-  /** Detected `ts` unit per events.parquet path ("ns" | "us"), cached so
-    * the footer sniff is one driver-side schema read per path per JVM —
-    * events() is called hundreds of times per bench run. */
-  private val tsUnitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  // in the Caches registry (census + invalidation) like every other
-  // session cache: keyed by the parquet path, whose parent is the dir
-  graft.Caches.registerMap(tsUnitCache,
-    (p: String) => Option(new java.io.File(p).getParent).getOrElse(p),
-    (_: String) => ())
-
   /** Sniff the parquet logical type of `ts` via Spark's own schema
     * inference (with nanosAsLong=true a TIMESTAMP(NANOS) column infers as
     * LongType; TIMESTAMP(MICROS, NTZ) infers as TimestampNTZType). The
     * round-5 testdata regeneration silently flipped NANOS→MICROS and a
     * hardcoded `div 1000` collapsed a month of events into 43 minutes of
-    * 1970 — hence unit detection instead of a declared assumption. */
-  def eventsTsUnit(spark: SparkSession, path: String): String =
-    tsUnitCache.computeIfAbsent(path, p => {
-      configure(spark)
-      spark.read.parquet(p).schema.fields.find(_.name == "ts")
-        .map(_.dataType) match {
-        case Some(LongType)                              => "ns"
-        case Some(TimestampNTZType) | Some(TimestampType) => "us"
-        case other => sys.error(
-          s"events.ts at $p has unsupported parquet-inferred type $other " +
-            "(expected TIMESTAMP(NANOS)->long or TIMESTAMP(MICROS)->ntz); " +
-            "update Tables.eventsTsUnit for the new testdata layout")
-      }
-    })
+    * 1970 — hence unit detection instead of a declared assumption. An
+    * artifact, so the sniff is one driver-side schema read per (session,
+    * dir) although events() is called hundreds of times per bench run. */
+  val eventsTsUnit = Artifact("events_ts_unit") { (spark, dir) =>
+    configure(spark)
+    val p = s"$dir/events.parquet"
+    spark.read.parquet(p).schema.fields.find(_.name == "ts")
+      .map(_.dataType) match {
+      case Some(LongType)                              => "ns"
+      case Some(TimestampNTZType) | Some(TimestampType) => "us"
+      case other => sys.error(
+        s"events.ts at $p has unsupported parquet-inferred type $other " +
+          "(expected TIMESTAMP(NANOS)->long or TIMESTAMP(MICROS)->ntz); " +
+          "update Tables.eventsTsUnit for the new testdata layout")
+    }
+  }
 
   /** Events with a stable two-column time contract regardless of the
     * on-disk unit: `ts` = TIMESTAMP_NTZ at µs precision (floor from ns,
@@ -183,7 +173,7 @@ object Tables {
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     configure(spark)
     val path = s"$sfDir/events.parquet"
-    eventsTsUnit(spark, path) match {
+    eventsTsUnit(spark, sfDir) match {
       case "ns" =>
         spark.read.schema(eventsRawSchema).parquet(path)
           .withColumn("ts_ns", col("ts"))

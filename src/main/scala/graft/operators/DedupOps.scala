@@ -1,7 +1,8 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Artifact, Tables}
 import graft.Par.r6
+import TokenBitmap.unigrams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -173,30 +174,16 @@ object DedupOps {
     * persisted frame instead of re-deriving shingles → signatures →
     * bands → candidates → bitmap verify. Deterministic, so the sharing
     * is invisible to results (DeterminismSpec re-proves per run). */
-  private val pairCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String, Double), DataFrame]()
-
-  graft.Caches.registerMap(pairCache,
-    (k: (SparkSession, String, String, Double)) => k._2,
-    (v: DataFrame) => v.unpersist())
-
-  private def verifiedPairs(s: SparkSession, d: String, tokensExpr: String,
-      threshold: Double): DataFrame =
-    pairCache.computeIfAbsent((s, d, tokensExpr, threshold),
-      _ => verifyJaccard(s, d, tokensExpr,
-        bandedCandidates(s, d, tokensExpr), threshold).persist())
+  private val verifiedPairs = Artifact("verified_pairs",
+      Seq((unigrams, 0.8), (TokenBitmap.bigramExpr, 0.6))) {
+    (s, d, p: (String, Double)) =>
+      verifyJaccard(s, d, p._1, bandedCandidates(s, d, p._1), p._2).persist()
+  }
 
   /** MinHash(16) → LSH(4 bands × 4 rows) candidates → exact-Jaccard
     * verification at 0.8 on unigram token sets. */
   private val dedupMinhash: Q = (s, d) =>
-    verifiedPairs(s, d, "split(text, ' ')", 0.8)
-
-  private val simhashCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  graft.Caches.registerMap(simhashCache,
-    (k: (SparkSession, String)) => k._2,
-    (v: DataFrame) => v.unpersist())
+    verifiedPairs(s, d, (unigrams, 0.8))
 
   /** Charikar SimHash fingerprints: 64-char bit string per doc from
     * token-frequency-weighted md5 bit votes. Computed per *distinct
@@ -204,9 +191,9 @@ object DedupOps {
     * per-doc counts — linear in corpus size. Persisted per (session,
     * dir): the fingerprint query, the banded pair query, and the cluster
     * query all start from this frame. */
-  private def simhashes(s: SparkSession, d: String): DataFrame =
-    simhashCache.computeIfAbsent(((s, d)),
-      _ => simhashesUncached(s, d).persist())
+  private val simhashes = Artifact("simhashes") { (s, d) =>
+    simhashesUncached(s, d).persist()
+  }
 
   private def simhashesUncached(s: SparkSession, d: String): DataFrame = {
     val tokc = Tables.documents(s, d)
@@ -286,7 +273,7 @@ object DedupOps {
     * Threshold 0.6: bigram overlap runs lower than unigram overlap on the
     * same corpus. */
   private val dedupNgram: Q = (s, d) =>
-    verifiedPairs(s, d, bigramExpr, 0.6)
+    verifiedPairs(s, d, (bigramExpr, 0.6))
 
   /** Dedup CLUSTER assignment — the step after pair generation that an
     * actual dedup pipeline needs (keep one representative per group of
@@ -304,34 +291,10 @@ object DedupOps {
     * is persisted so lineage stays O(1) per round. The driver-side loop
     * only checks the per-round convergence COUNT — no row data ever
     * reaches the driver. Input pairs here: q_dedup_simhash_pairs. */
-  private val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  /** Persisted result-RDD handles for the distributed loop path —
-    * DataFrame.unpersist() cannot reach RDD-level persistence (it is not
-    * a CacheManager entry), so the cache owns the RDD and releases it
-    * directly. The union-find path returns a LocalRelation (no executor
-    * memory) and stores no handle. */
-  private val clusterRddHandles =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]()
-
-  graft.Caches.registerMap(clusterCache,
-    (k: (SparkSession, String)) => k._2,
-    (_: DataFrame) => ())
-  graft.Caches.registerMap(clusterRddHandles,
-    // handle keys may carry a "<tag>::" prefix (the graph pack shares
-    // this machinery); invalidation matches on the dir suffix
-    (k: (SparkSession, String)) => k._2.split("::").last,
-    (rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) =>
-      rdd.unpersist(blocking = false))
-
   /** (doc_id, cluster_rep) for every doc that appears in a near-dup pair
     * — cached per (session, dir) so the cluster query and the curation
     * pipeline run the iterative propagation once. */
-  private def clusterReps(s: SparkSession, d: String): DataFrame =
-    clusterCache.computeIfAbsent(((s, d)),
-      _ => clusterRepsUncached(s, d))
+  private val clusterReps = Artifact("cluster_reps")(clusterRepsUncached)
 
   private val dedupClusters: Q = (s, d) =>
     clusterReps(s, d).orderBy("doc_id")
@@ -383,7 +346,7 @@ object DedupOps {
   }
 
   private[graft] def clusterRepsUncached(s: SparkSession, d: String): DataFrame =
-    connectedComponents(s, dedupSimhashPairs(s, d).select("a", "b"), d)
+    connectedComponents(s, dedupSimhashPairs(s, d).select("a", "b"))
 
   /** Generic connected components over an (a, b) long edge list —
     * extracted so the graph pack (q_graph_components) and the dedup
@@ -393,7 +356,7 @@ object DedupOps {
     * the broadcast-sized edge threshold, distributed min-label +
     * pointer-jumping loop above it. */
   private[graft] def connectedComponents(
-      s: SparkSession, edges: DataFrame, handleKey: String): DataFrame = {
+      s: SparkSession, edges: DataFrame): DataFrame = {
     // localCheckpoint (eager) — THE iterative-algorithm pattern: it
     // materializes AND truncates lineage. persist()/unpersist() pairs are
     // a trap here: unpersisting round k's frame invalidates the cache of
@@ -445,8 +408,9 @@ object DedupOps {
     // Every materialization in the loop goes through an RDD handle WE
     // persist, so block lifetimes are deterministic: each round frees
     // the previous round's blocks as soon as its own are materialized,
-    // and the final result's handle is owned by the cache (released on
-    // Caches.invalidate) instead of waiting on GC + ContextCleaner.
+    // and the final result's persisted RDD is released by the artifact
+    // that holds it (Caches.invalidate) instead of waiting on GC +
+    // ContextCleaner.
     // (localCheckpoint was the previous mechanism; its blocks are not
     // reachable from DataFrame.unpersist, so nothing could be freed
     // eagerly.)
@@ -512,14 +476,11 @@ object DedupOps {
     val res = lab.select(col("v").as("doc_id"), col("lbl").as("cluster_rep"))
     // Hand the result back on the CALLER's session so downstream plans
     // (cluster query, curation joins) compile with its conf, not the
-    // loop's. The cache owns the handle; a displaced predecessor (repeat
-    // uncached build for the same key) is unpersisted, not leaked.
+    // loop's.
     val matRdd = res.toDF().rdd.persist(StorageLevel.MEMORY_AND_DISK)
     matRdd.count()
     undRdd.unpersist(blocking = false)
     labRdd.unpersist(blocking = false)
-    Option(clusterRddHandles.put((s, handleKey), matRdd))
-      .foreach(_.unpersist(blocking = false))
     s.createDataFrame(matRdd, res.schema)
   }
 
@@ -604,16 +565,10 @@ object DedupOps {
     * clusters; pairs broadcast onto them. A SESSION ARTIFACT since
     * round 11 (the centroidPred pattern): both consumers re-ran the
     * n-gram explode + overlap joins per evaluation (rouge 7 + bleu 7 →
-    * 2 + 2 jobs, A/B'd; q_eval_bleu is the warmup builder). */
-  private val pairOverlapsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  graft.Caches.registerMap(pairOverlapsCache,
-    (k: (SparkSession, String)) => k._2, (v: DataFrame) => v.unpersist())
-
-  private def pairOverlaps(s: SparkSession, d: String): DataFrame =
-    pairOverlapsCache.computeIfAbsent((s, d),
-      _ => pairOverlapsUncached(s, d).persist())
+    * 2 + 2 jobs, A/B'd). */
+  private val pairOverlaps = Artifact("pair_overlaps") { (s, d) =>
+    pairOverlapsUncached(s, d).persist()
+  }
 
   private def pairOverlapsUncached(s: SparkSession, d: String): DataFrame = {
     val pairs = clusterReps(s, d)
@@ -780,7 +735,7 @@ object DedupOps {
   private val dedupIncremental: Q = (s, d) => {
     val cut = Tables.documents(s, d)
       .agg(expr("(max(doc_id) + 1) * 4 div 5").as("cutoff"))
-    verifiedPairs(s, d, "split(text, ' ')", 0.8)
+    verifiedPairs(s, d, (unigrams, 0.8))
       .crossJoin(broadcast(cut))
       .filter(col("a") < col("cutoff") && col("b") >= col("cutoff"))
       .select(col("b").as("new_id"), col("a").as("base_id"), col("jacc_r"))

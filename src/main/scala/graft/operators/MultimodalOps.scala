@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Artifact, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,38 +25,21 @@ object MultimodalOps {
     * independently per key (3 corpus scans + 3 block explodes per
     * bench pass); the index-artifact rationale is the same as the
     * simhash fingerprint and k-means centroid caches: one build,
-    * every consumer starts from the persisted frame. Keyed by
-    * (session, dir) through the central Caches registry so
-    * invalidate(dir) releases it. */
-  private val blockCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  /** Session-lifetime cache of the packed aHash fingerprint frame
-    * (doc_id, h1, h2, b0..b3, barr) shared by q_multimodal_phash and
-    * q_multimodal_phash_hamming — round 7 ran the explode → sum →
-    * re-join → pack build twice per bench pass. */
-  private val packedCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  graft.Caches.registerMap(blockCache,
-    (k: (SparkSession, String)) => k._2, (v: DataFrame) => v.unpersist())
-  graft.Caches.registerMap(packedCache,
-    (k: (SparkSession, String)) => k._2, (v: DataFrame) => v.unpersist())
-
-  /** The shared block inventory: one row per (asset, 64-byte block)
-    * with the block's md5 signature and true length (last blocks are
-    * partial). Linear — one corpus scan, one explode; the persist is
-    * the materialization barrier every consumer reuses. */
-  private def blockFrame(s: SparkSession, d: String): DataFrame =
-    blockCache.computeIfAbsent((s, d), _ =>
-      Tables.documents(s, d)
-        .filter(length(col("text")) > 0)
-        .select(col("doc_id"), col("text"),
-          explode(expr("sequence(0, (length(text) - 1) div 64)")).as("blk"))
-        .select(col("doc_id"),
-          md5(expr("substring(text, blk * 64 + 1, 64)")).as("bsig"),
-          least(lit(64), length(col("text")) - col("blk") * 64).as("blen"))
-        .persist())
+    * every consumer starts from the persisted frame. One row per
+    * (asset, 64-byte block) with the block's md5 signature and true
+    * length (last blocks are partial). Linear — one corpus scan, one
+    * explode; the persist is the materialization barrier every consumer
+    * reuses. */
+  private val blockFrame = Artifact("block_inventory") { (s, d) =>
+    Tables.documents(s, d)
+      .filter(length(col("text")) > 0)
+      .select(col("doc_id"), col("text"),
+        explode(expr("sequence(0, (length(text) - 1) div 64)")).as("blk"))
+      .select(col("doc_id"),
+        md5(expr("substring(text, blk * 64 + 1, 64)")).as("bsig"),
+        least(lit(64), length(col("text")) - col("blk") * 64).as("blen"))
+      .persist()
+  }
 
   /** Binary ingestion + metadata extraction: cast text → BINARY, derive
     * byte length, fake-decoded dimensions, and a content signature. All
@@ -294,35 +277,34 @@ object MultimodalOps {
     * aggregate's Exchange is the materialization barrier that keeps
     * each pixel read evaluated once — and since round 8 the persisted
     * frame itself is the barrier both phash keys share. */
-  private def packedFingerprints(s: SparkSession, d: String): DataFrame =
-    packedCache.computeIfAbsent((s, d), _ => {
-      val px = Tables.documents(s, d).filter(length(col("text")) >= 64)
-        .select(col("doc_id"), col("text"),
-          explode(expr("sequence(1, 64)")).as("i"))
-        .select(col("doc_id"), col("i"),
-          ascii(expr("substring(text, i, 1)")).as("v"))
-      val tot = px.groupBy("doc_id").agg(sum(col("v")).as("st"))
-      px.join(tot, "doc_id")
-        .select(col("doc_id"), col("i"),
-          when(col("v") * 64 > col("st"), 1L).otherwise(0L).as("b"))
-        .groupBy("doc_id")
-        .agg(
-          sum(expr("CASE WHEN i <= 32 THEN shiftleft(b, 32 - i)" +
-            " ELSE 0 END")).as("h1"),
-          sum(expr("CASE WHEN i > 32 THEN shiftleft(b, 64 - i)" +
-            " ELSE 0 END")).as("h2"),
-          sum(expr("CASE WHEN i <= 16 THEN shiftleft(b, 16 - i)" +
-            " ELSE 0 END")).as("b0"),
-          sum(expr("CASE WHEN i > 16 AND i <= 32 THEN" +
-            " shiftleft(b, 32 - i) ELSE 0 END")).as("b1"),
-          sum(expr("CASE WHEN i > 32 AND i <= 48 THEN" +
-            " shiftleft(b, 48 - i) ELSE 0 END")).as("b2"),
-          sum(expr("CASE WHEN i > 48 THEN shiftleft(b, 64 - i)" +
-            " ELSE 0 END")).as("b3"))
-        .withColumn("barr", array(col("b0"), col("b1"), col("b2"),
-          col("b3")))
-        .persist()
-    })
+  private val packedFingerprints = Artifact("packed_fingerprints") { (s, d) =>
+    val px = Tables.documents(s, d).filter(length(col("text")) >= 64)
+      .select(col("doc_id"), col("text"),
+        explode(expr("sequence(1, 64)")).as("i"))
+      .select(col("doc_id"), col("i"),
+        ascii(expr("substring(text, i, 1)")).as("v"))
+    val tot = px.groupBy("doc_id").agg(sum(col("v")).as("st"))
+    px.join(tot, "doc_id")
+      .select(col("doc_id"), col("i"),
+        when(col("v") * 64 > col("st"), 1L).otherwise(0L).as("b"))
+      .groupBy("doc_id")
+      .agg(
+        sum(expr("CASE WHEN i <= 32 THEN shiftleft(b, 32 - i)" +
+          " ELSE 0 END")).as("h1"),
+        sum(expr("CASE WHEN i > 32 THEN shiftleft(b, 64 - i)" +
+          " ELSE 0 END")).as("h2"),
+        sum(expr("CASE WHEN i <= 16 THEN shiftleft(b, 16 - i)" +
+          " ELSE 0 END")).as("b0"),
+        sum(expr("CASE WHEN i > 16 AND i <= 32 THEN" +
+          " shiftleft(b, 32 - i) ELSE 0 END")).as("b1"),
+        sum(expr("CASE WHEN i > 32 AND i <= 48 THEN" +
+          " shiftleft(b, 48 - i) ELSE 0 END")).as("b2"),
+        sum(expr("CASE WHEN i > 48 THEN shiftleft(b, 64 - i)" +
+          " ELSE 0 END")).as("b3"))
+      .withColumn("barr", array(col("b0"), col("b1"), col("b2"),
+        col("b3")))
+      .persist()
+  }
 
   private val multimodalPhashHamming: Q = (s, d) => {
     // Candidates from the band-bucket equi-join over the shared packed

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Artifact, Tables}
 import graft.Par.{r2, r6}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -679,60 +679,53 @@ object RelationalOps {
     * lakehouse table maintains incrementally at 100 TB, where each
     * OPTIMIZE pass appends file stats rather than re-sorting the corpus
     * per audit query. The zx/zy data bounds ride along as columns so the
-    * skipping box needs no extra scan. Keyed through graft.Caches so
-    * invalidate(dir) releases it. */
-  private val layoutStatsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  graft.Caches.registerMap(layoutStatsCache,
-    (k: (SparkSession, String)) => k._2, (v: DataFrame) => v.unpersist())
-
-  private def layoutStats(s: SparkSession, d: String): DataFrame =
-    layoutStatsCache.computeIfAbsent((s, d), _ => {
-      // one shared base scan: Morton coords (zx, zy, zval — mod-65536
-      // keys) plus the 8-bit multiplicative-hash grid (hx, hy) and its
-      // curve indices from the constant 65536-row broadcast LUT. The
-      // eager checkpoint pins it across the four withNtile passes (each
-      // evaluates its input ~3×: range sampling, offsets, final pass).
-      val lut = s.createDataFrame(curveLut).toDF("hx", "hy", "hil", "mor")
-      val coords = Tables.lineitem(s, d).select(
-          col("l_orderkey"), col("l_linenumber"),
-          (col("l_partkey") % 65536).as("zx"),
-          (col("l_suppkey") % 65536).as("zy"),
-          expr("(l_partkey * 2654435761L) % 256").as("hx"),
-          expr("(l_suppkey * 2246822519L) % 256").as("hy"))
-        .withColumn("zval",
-          spreadBits(col("zx")).bitwiseOR(
-            shiftleft(spreadBits(col("zy")), 1)))
-        .join(broadcast(lut), Seq("hx", "hy"))
-        .localCheckpoint()
-      // each ntile pass checkpoints its own ranged copy (Dist.ranged),
-      // so prune to (sort key + stat columns) per pass — half the
-      // materialized bytes vs ranging the full 9-column frame 4×
-      def files(layout: String, xc: String, yc: String,
-          ord: Seq[Column], keep: Seq[String]) =
-        Dist.withNtile(coords.select(keep.map(col): _*), "f", 16, Nil, ord)
-          .groupBy(lit(layout).as("layout"), col("f"))
-          .agg(count(lit(1)).as("rows"),
-            min(col(xc)).as("x0"), max(col(xc)).as("x1"),
-            min(col(yc)).as("y0"), max(col(yc)).as("y1"))
-      val bounds = coords.agg(
-        min(col("zx")).as("bx0"), max(col("zx")).as("bx1"),
-        min(col("zy")).as("by0"), max(col("zy")).as("by1"))
-      files("natural", "zx", "zy",
-          Seq(col("l_orderkey"), col("l_linenumber")),
-          Seq("l_orderkey", "l_linenumber", "zx", "zy"))
-        .unionAll(files("zorder", "zx", "zy",
-          Seq(col("zval"), col("l_orderkey"), col("l_linenumber")),
-          Seq("zval", "l_orderkey", "l_linenumber", "zx", "zy")))
-        .unionAll(files("hilbert", "hx", "hy",
-          Seq(col("hil"), col("l_orderkey"), col("l_linenumber")),
-          Seq("hil", "l_orderkey", "l_linenumber", "hx", "hy")))
-        .unionAll(files("morton", "hx", "hy",
-          Seq(col("mor"), col("l_orderkey"), col("l_linenumber")),
-          Seq("mor", "l_orderkey", "l_linenumber", "hx", "hy")))
-        .crossJoin(broadcast(bounds))
-        .persist()
-    })
+    * skipping box needs no extra scan. */
+  private val layoutStats = Artifact("layout_stats") { (s, d) =>
+    // one shared base scan: Morton coords (zx, zy, zval — mod-65536
+    // keys) plus the 8-bit multiplicative-hash grid (hx, hy) and its
+    // curve indices from the constant 65536-row broadcast LUT. The
+    // eager checkpoint pins it across the four withNtile passes (each
+    // evaluates its input ~3×: range sampling, offsets, final pass).
+    val lut = s.createDataFrame(curveLut).toDF("hx", "hy", "hil", "mor")
+    val coords = Tables.lineitem(s, d).select(
+        col("l_orderkey"), col("l_linenumber"),
+        (col("l_partkey") % 65536).as("zx"),
+        (col("l_suppkey") % 65536).as("zy"),
+        expr("(l_partkey * 2654435761L) % 256").as("hx"),
+        expr("(l_suppkey * 2246822519L) % 256").as("hy"))
+      .withColumn("zval",
+        spreadBits(col("zx")).bitwiseOR(
+          shiftleft(spreadBits(col("zy")), 1)))
+      .join(broadcast(lut), Seq("hx", "hy"))
+      .localCheckpoint()
+    // each ntile pass checkpoints its own ranged copy (Dist.ranged),
+    // so prune to (sort key + stat columns) per pass — half the
+    // materialized bytes vs ranging the full 9-column frame 4×
+    def files(layout: String, xc: String, yc: String,
+        ord: Seq[Column], keep: Seq[String]) =
+      Dist.withNtile(coords.select(keep.map(col): _*), "f", 16, Nil, ord)
+        .groupBy(lit(layout).as("layout"), col("f"))
+        .agg(count(lit(1)).as("rows"),
+          min(col(xc)).as("x0"), max(col(xc)).as("x1"),
+          min(col(yc)).as("y0"), max(col(yc)).as("y1"))
+    val bounds = coords.agg(
+      min(col("zx")).as("bx0"), max(col("zx")).as("bx1"),
+      min(col("zy")).as("by0"), max(col("zy")).as("by1"))
+    files("natural", "zx", "zy",
+        Seq(col("l_orderkey"), col("l_linenumber")),
+        Seq("l_orderkey", "l_linenumber", "zx", "zy"))
+      .unionAll(files("zorder", "zx", "zy",
+        Seq(col("zval"), col("l_orderkey"), col("l_linenumber")),
+        Seq("zval", "l_orderkey", "l_linenumber", "zx", "zy")))
+      .unionAll(files("hilbert", "hx", "hy",
+        Seq(col("hil"), col("l_orderkey"), col("l_linenumber")),
+        Seq("hil", "l_orderkey", "l_linenumber", "hx", "hy")))
+      .unionAll(files("morton", "hx", "hy",
+        Seq(col("mor"), col("l_orderkey"), col("l_linenumber")),
+        Seq("mor", "l_orderkey", "l_linenumber", "hx", "hy")))
+      .crossJoin(broadcast(bounds))
+      .persist()
+  }
 
   private val layoutSkipping: Q = (s, d) =>
     layoutStats(s, d)
@@ -1208,7 +1201,8 @@ object RelationalOps {
       .orderBy("o_orderstatus")
 
   /** HLL approx-distinct — deliberately NOT oracle-checked (Spark and
-    * DuckDB use different sketches); unit test asserts ≤5% error vs exact.
+    * DuckDB use different sketches); OperatorEdgeSpec asserts ≤5% error
+    * vs the exact distinct count for every event type.
     * At 100 TB this is the right default for distinct-user counts. */
   private val aggApproxDistinct: Q = (s, d) =>
     Tables.events(s, d)

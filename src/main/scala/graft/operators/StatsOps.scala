@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Artifact, Tables}
 import graft.Par.{r2, r6, sql => rsql}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -40,37 +40,25 @@ object StatsOps {
     * the shared spine of the time-series test family (pettitt, pacf,
     * and the dailyOls fit behind dw/breusch_pagan/cooks). One corpus
     * scan per session instead of one per downstream job. */
-  private val dayCensusCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  graft.Caches.registerMap(dayCensusCache,
-    (k: (SparkSession, String)) => k._2, (_: DataFrame) => ())
-
-  private def dailyCensus(s: SparkSession, d: String): DataFrame =
-    dayCensusCache.computeIfAbsent((s, d), _ =>
-      pinDays(s, Tables.events(s, d)
-        .groupBy(expr("(ts_ns div 1000) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("c"))))
+  private val dailyCensus = Artifact("daily_census") { (s, d) =>
+    pinDays(s, Tables.events(s, d)
+      .groupBy(expr("(ts_ns div 1000) div 86400000000").as("day"))
+      .agg(count(lit(1)).as("c")))
+  }
 
   /** The (day, n_click, n_purchase, n_view) per-type daily census,
     * pinned + session-cached (round 11) — the typed sibling of
     * dailyCensus, shared by granger / kendall_tau / wilcoxon_signed
     * (each re-scanned events per evaluation for a |days|-bounded
-    * frame; q_stats_granger is the warmup builder). */
-  private val dayTypeCensusCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  graft.Caches.registerMap(dayTypeCensusCache,
-    (k: (SparkSession, String)) => k._2, (_: DataFrame) => ())
-
-  private def dailyTypeCensus(s: SparkSession, d: String): DataFrame =
-    dayTypeCensusCache.computeIfAbsent((s, d), _ =>
-      pinDays(s, Tables.events(s, d)
-        .groupBy(expr("(ts_ns div 1000) div 86400000000").as("day"))
-        .agg(count(when(col("event_type") === "click", 1)).as("n_click"),
-          count(when(col("event_type") === "purchase", 1))
-            .as("n_purchase"),
-          count(when(col("event_type") === "view", 1)).as("n_view"))))
+    * frame). */
+  private val dailyTypeCensus = Artifact("daily_type_census") { (s, d) =>
+    pinDays(s, Tables.events(s, d)
+      .groupBy(expr("(ts_ns div 1000) div 86400000000").as("day"))
+      .agg(count(when(col("event_type") === "click", 1)).as("n_click"),
+        count(when(col("event_type") === "purchase", 1))
+          .as("n_purchase"),
+        count(when(col("event_type") === "view", 1)).as("n_view")))
+  }
 
   /** Welch's unequal-variance t-test: F-status vs O-status order values
     * per market segment. One shuffle join (orders ⋈ customer on the FK)
@@ -599,18 +587,12 @@ object StatsOps {
     * session-cached since round 11 (the dailyCensus pattern): three
     * consumers (bh, holm, fisher_combine) each re-ran the corpus KS
     * pass per evaluation for a ≤|event types|-row census (19 → 6 jobs
-    * across the trio, A/B'd; q_stats_bh is the warmup builder). Every
+    * across the trio, A/B'd). Every
     * consumer orders explicitly, so LocalRelation row order is never
     * observed. */
-  private val ksFamilyCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  graft.Caches.registerMap(ksFamilyCache,
-    (k: (SparkSession, String)) => k._2, (_: DataFrame) => ())
-
-  private def ksFamily(s: SparkSession, d: String): DataFrame =
-    ksFamilyCache.computeIfAbsent((s, d), _ =>
-      pinDays(s, ksFamilyUncached(s, d)))
+  private val ksFamily = Artifact("ks_family") { (s, d) =>
+    pinDays(s, ksFamilyUncached(s, d))
+  }
 
   private def ksFamilyUncached(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)

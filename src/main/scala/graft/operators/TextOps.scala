@@ -1,7 +1,8 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Artifact, Tables}
 import graft.Par.{r2, r4, r6, sql => rsql}
+import TokenBitmap.unigrams
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -288,37 +289,33 @@ object TextOps {
     * 11, like the verified-pair caches the LSH paths already hold: it
     * is the ground truth q_eval_minhash_recall audits against, and
     * both consumers re-ran the (ceiling-guarded) pair join per
-    * evaluation (near 5 + recall 7 → 2 + 4 jobs, A/B'd;
-    * q_dedup_near is the warmup builder). The cache key CARRIES the
-    * ceiling, so the flip-boundary spec's ceiling override still
+    * evaluation (near 5 + recall 7 → 2 + 4 jobs, A/B'd). The cache key
+    * CARRIES the ceiling, so the flip-boundary spec's ceiling override still
     * executes the banded plan instead of reading the sub-ceiling
     * cache; ExplainPlansOnly (the GraphOps audit hook's twin) bypasses
     * the cache entirely so the plan audit shows the real pair-join
     * shapes, not an InMemoryRelation. */
   private[graft] var ExplainPlansOnly = false
 
-  private val nearPairsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), DataFrame]()
-
-  graft.Caches.registerMap(nearPairsCache,
-    (k: (SparkSession, String, Long)) => k._2,
-    (v: DataFrame) => v.unpersist())
-
-  private[operators] def nearPairs(s: SparkSession, d: String): DataFrame = {
-    def build() =
-      if (TokenBitmap.bitmaps(s, d).count() > AllPairsRowCeiling)
-        dedupPrefixFilter(s, d) // identical declared output, banded plan
-      else dedupNearAllPairs(s, d)
-    if (ExplainPlansOnly) build()
-    else nearPairsCache.computeIfAbsent((s, d, AllPairsRowCeiling),
-      _ => build().persist())
+  private val nearPairsCached = Artifact("near_pairs", Seq(AllPairsRowCeiling)) {
+    (s, d, ceiling: Long) => nearPairsBuild(s, d, ceiling).persist()
   }
+
+  private def nearPairsBuild(s: SparkSession, d: String,
+      ceiling: Long): DataFrame =
+    if (TokenBitmap.bitmaps(s, d, unigrams).count() > ceiling)
+      dedupPrefixFilter(s, d) // identical declared output, banded plan
+    else dedupNearAllPairs(s, d)
+
+  private[operators] def nearPairs(s: SparkSession, d: String): DataFrame =
+    if (ExplainPlansOnly) nearPairsBuild(s, d, AllPairsRowCeiling)
+    else nearPairsCached(s, d, AllPairsRowCeiling)
 
   private val dedupNear: Q = (s, d) =>
     nearPairs(s, d).orderBy("a", "b")
 
   private val dedupNearAllPairs: Q = (s, d) => {
-    val base = TokenBitmap.bitmaps(s, d)
+    val base = TokenBitmap.bitmaps(s, d, unigrams)
     val a = base.select(col("doc_id").as("a"), col("bm").as("ba"),
       col("sz").as("sa"))
     val b = base.select(col("doc_id").as("b"), col("bm").as("bb"),
@@ -368,7 +365,7 @@ object TextOps {
     // candidate SET is identical either way (pairs whose prefixes
     // intersect); at 100 TB with a real vocab, swap the enumeration to
     // the token-hash-partitioned postings join and keep this verify.
-    val (vdf, nWords) = TokenBitmap.vocab(s, d)
+    val (vdf, nWords) = TokenBitmap.vocab(s, d, unigrams)
     val pm = Tables.documents(s, d)
       .select(col("doc_id"), array_distinct(toks()).as("ts"))
       .withColumn("pl",
@@ -389,7 +386,7 @@ object TextOps {
     // both self-join sides, and unpinned the whole prefix-bitmap build
     // (explode + two groupBys) ran twice — once per side (11 → 8 jobs).
     // Eager: the two sides consume it in parallel stages.
-    val base = TokenBitmap.bitmaps(s, d).join(pm, Seq("doc_id"))
+    val base = TokenBitmap.bitmaps(s, d, unigrams).join(pm, Seq("doc_id"))
       .localCheckpoint()
     val a = base.select(col("doc_id").as("a"), col("bm").as("ba"),
       col("sz").as("sa"), col("pm").as("pa"))
@@ -627,7 +624,7 @@ object TextOps {
   private val searchTfidf: Q = (s, d) => {
     // score = Σ over the query's tokens of the SAME tf·idf weight the
     // shared index stores (df per token is corpus-global either way),
-    // so this key is a filtered read of the warmup-built tfidfIndex
+    // so this key is a filtered read of the session-built tfidfIndex
     // (round 10) — the old form re-ran the corpus explode + df + count
     // per evaluation (8 → 3 jobs, same per-term doubles)
     val queryTerms = Seq("spark", "query", "fast")
@@ -688,22 +685,16 @@ object TextOps {
     * dir): the frame feeds tf, df, and the score join without rescans,
     * and repeated builder invocations in one session reuse one persisted
     * copy instead of stacking orphaned cache entries. */
-  private val bm25DocCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  graft.Caches.registerMap(bm25DocCache,
-    (k: (SparkSession, String)) => k._2,
-    (v: DataFrame) => v.unpersist())
-  private def bm25PerDoc(s: SparkSession, d: String): DataFrame =
-    bm25DocCache.computeIfAbsent(((s, d)), _ =>
-      Tables.documents(s, d)
-        .select(col("doc_id"), explode(toks()).as("tok"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("dl"),
-          bm25Terms.zipWithIndex.map { case (t, i) =>
-            sum(when(col("tok") === t, 1L).otherwise(0L)).as(s"tf$i")
-          }: _*)
-        .persist())
+  private val bm25PerDoc = Artifact("bm25_per_doc") { (s, d) =>
+    Tables.documents(s, d)
+      .select(col("doc_id"), explode(toks()).as("tok"))
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("dl"),
+        bm25Terms.zipWithIndex.map { case (t, i) =>
+          sum(when(col("tok") === t, 1L).otherwise(0L)).as(s"tf$i")
+        }: _*)
+      .persist()
+  }
 
   private val searchBm25: Q = (s, d) =>
     bm25Scored(s, d)
@@ -820,37 +811,29 @@ object TextOps {
     * so every evaluation re-paid the corpus explode + tf aggregate +
     * two broadcasts (~10 of the key's 16 jobs). The inverted index is
     * a session artifact exactly like the BM25 per-doc stats
-    * (bm25DocCache above): built once by the warmup, reused by every
+    * (bm25PerDoc above): built once per session, reused by every
     * evaluation, dropped by Caches.invalidate(dir). */
-  private val tfidfIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  graft.Caches.registerMap(tfidfIdxCache,
-    (k: (SparkSession, String)) => k._2,
-    (v: DataFrame) => v.unpersist())
-
-  private def tfidfIndex(s: SparkSession, d: String): DataFrame =
-    tfidfIdxCache.computeIfAbsent(((s, d)), _ => {
-      val tf = Tables.documents(s, d)
-        .select(col("doc_id"), explode(toks()).as("tok"))
-        .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-      val dfreq =
-        tf.groupBy("tok").agg(countDistinct(col("doc_id")).as("df"))
-      val nDocs = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
-      tf.join(broadcast(dfreq), Seq("tok"))
-        .crossJoin(broadcast(nDocs))
-        .select(col("doc_id"), col("tok"),
-          (col("tf") * log(col("n_docs").cast("double") / col("df")))
-            .as("w"))
-        // per-doc L2 norm rides the index rows (round 10): a window
-        // partitioned by doc_id — data-parallel at any scale — so the
-        // cosine consumer reads both norms off the join sides instead
-        // of re-aggregating + twice re-joining the index per query
-        .withColumn("nrm", sqrt(sum(col("w") * col("w")).over(
-          Window.partitionBy("doc_id").rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing))))
-        .persist()
-    })
+  private val tfidfIndex = Artifact("tfidf_index") { (s, d) =>
+    val tf = Tables.documents(s, d)
+      .select(col("doc_id"), explode(toks()).as("tok"))
+      .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
+    val dfreq =
+      tf.groupBy("tok").agg(countDistinct(col("doc_id")).as("df"))
+    val nDocs = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
+    tf.join(broadcast(dfreq), Seq("tok"))
+      .crossJoin(broadcast(nDocs))
+      .select(col("doc_id"), col("tok"),
+        (col("tf") * log(col("n_docs").cast("double") / col("df")))
+          .as("w"))
+      // per-doc L2 norm rides the index rows (round 10): a window
+      // partitioned by doc_id — data-parallel at any scale — so the
+      // cosine consumer reads both norms off the join sides instead
+      // of re-aggregating + twice re-joining the index per query
+      .withColumn("nrm", sqrt(sum(col("w") * col("w")).over(
+        Window.partitionBy("doc_id").rowsBetween(
+          Window.unboundedPreceding, Window.unboundedFollowing))))
+      .persist()
+  }
 
   private val simSparseTopk: Q = (s, d) => {
     val w = tfidfIndex(s, d)
@@ -1508,7 +1491,7 @@ object TextOps {
   private val keywords: Q = (s, d) => {
     // the TF-IDF weights here were built inline with the exact same
     // formula as simSparseTopk's index — round 10 points both at the
-    // shared warmup-built session artifact (tfidfIndex): the key's own
+    // shared session artifact (tfidfIndex): the key's own
     // cost is the per-doc top-3 window, not a corpus re-derivation
     // (9 → 4 jobs, same weights by construction)
     val wt = tfidfIndex(s, d)
@@ -1531,7 +1514,7 @@ object TextOps {
     * (index each doc under its lowest-df token only), same shape as the
     * MinHash banding beside it. */
   private val dedupContainment: Q = (s, d) => {
-    val n = TokenBitmap.bitmaps(s, d).count() // cached frame — cheap
+    val n = TokenBitmap.bitmaps(s, d, unigrams).count() // cached frame — cheap
     // supersets of a: either the exact all-pairs scan (≤ ceiling) or
     // the prefix-filtered candidate join (above it — the flip the
     // AllPairsRowCeiling scaladoc describes); outputs are identical
@@ -1539,7 +1522,7 @@ object TextOps {
     // candidate generator for containment ≥ 0.9
     val sup = if (n > AllPairsRowCeiling) containmentSupersBanded(s, d)
       else containmentSupersAllPairs(s, d)
-    TokenBitmap.bitmaps(s, d)
+    TokenBitmap.bitmaps(s, d, unigrams)
       .select(col("doc_id"), col("sz").cast("long").as("n_distinct"))
       .join(sup.select(col("a").as("doc_id"), col("n_super")),
         Seq("doc_id"), "left")
@@ -1554,7 +1537,7 @@ object TextOps {
     * bitmap-AND verify. */
   private def containmentSupersAllPairs(s: SparkSession, d: String)
       : DataFrame = {
-    val base = TokenBitmap.bitmaps(s, d)
+    val base = TokenBitmap.bitmaps(s, d, unigrams)
     val a = base.select(col("doc_id").as("a"), col("bm").as("ba"),
       col("sz").as("sa"))
     val b = base.select(col("doc_id").as("b"), col("bm").as("bb"),
@@ -1593,7 +1576,7 @@ object TextOps {
     val full = Tables.documents(s, d)
       .select(col("doc_id").as("b"),
         explode(array_distinct(toks())).as("tok"))
-    val base = TokenBitmap.bitmaps(s, d)
+    val base = TokenBitmap.bitmaps(s, d, unigrams)
     pre.join(full, Seq("tok"))
       .filter(col("a") =!= col("b"))
       .select("a", "b").distinct()
@@ -1672,17 +1655,8 @@ object TextOps {
     * the classifier / k-means / PQ caches: one 5-round merge loop per
     * (session, dir), shared by q_text_bpe_train and q_text_bpe_encode
     * (round 9: the two keys were the registry's top job count, 24 each,
-    * re-running the identical loop). Frames are localCheckpointed, so
-    * releasing the map entry is enough. */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Seq[DataFrame], DataFrame)]()
-  graft.Caches.registerMap(bpeCache,
-    (k: (SparkSession, String)) => k._2,
-    (_: (Seq[DataFrame], DataFrame)) => ())
-
-  private def bpeTrained(s: SparkSession, d: String)
-      : (Seq[DataFrame], DataFrame) =
-    bpeCache.computeIfAbsent((s, d), _ => bpeTrainedBuild(s, d))
+    * re-running the identical loop). */
+  private val bpeTrained = Artifact("bpe_trained")(bpeTrainedBuild)
 
   private def bpeTrainedBuild(s: SparkSession, d: String)
       : (Seq[DataFrame], DataFrame) = {
@@ -1779,16 +1753,10 @@ object TextOps {
     * rule). A SESSION ARTIFACT since round 11 (the centroidPred
     * pattern): both consumers re-ran the token explode + LLR broadcast
     * + doc aggregate per evaluation (dsir 7 + ess 6 → 1 + 2 jobs,
-    * A/B'd; q_sample_dsir is the warmup builder). */
-  private val dsirCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  graft.Caches.registerMap(dsirCache,
-    (k: (SparkSession, String)) => k._2, (v: DataFrame) => v.unpersist())
-
-  private def dsirScores(s: SparkSession, d: String): DataFrame =
-    dsirCache.computeIfAbsent((s, d),
-      _ => dsirScoresUncached(s, d).persist())
+    * A/B'd). */
+  private val dsirScores = Artifact("dsir_scores") { (s, d) =>
+    dsirScoresUncached(s, d).persist()
+  }
 
   private def dsirScoresUncached(s: SparkSession, d: String): DataFrame = {
     val tok = Tables.documents(s, d)
@@ -1952,15 +1920,7 @@ object TextOps {
     * deterministic training run; without the cache each re-paid the two
     * GD passes (~1.1 s each at sf0.1). Training is fully deterministic
     * (integer-micros gradients), so caching cannot change any output. */
-  private val qclfCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), QclfState]()
-
-  graft.Caches.registerMap(qclfCache,
-    (k: (SparkSession, String)) => k._2,
-    (v: QclfState) => { v.f.unpersist(); v.scored.unpersist(); () })
-
-  private[graft] def qclfTrain(s: SparkSession, d: String): QclfState =
-    qclfCache.computeIfAbsent((s, d), _ => qclfTrainUncached(s, d))
+  private[graft] val qclfTrain = Artifact("quality_classifier")(qclfTrainUncached)
 
   private def qclfTrainUncached(s: SparkSession, d: String): QclfState = {
     val nb = 16

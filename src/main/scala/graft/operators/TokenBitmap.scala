@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{Artifact, Tables}
 import org.apache.spark.sql.functions._
 
 /** Dictionary-encoded token-set bitmaps: each doc's distinct-token set
@@ -26,29 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object TokenBitmap {
 
-  /** (vocab dictionary persisted, nWords) per (session, dir, tokenizer). */
-  private val vocabCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String),
-      (DataFrame, Int)]()
-  private val bitmapCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String),
-      DataFrame]()
-  private val tokenCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String),
-      DataFrame]()
-
-  // Registered with the central invalidation API (graft.Caches): see its
-  // scaladoc for the staleness contract these caches operate under.
-  graft.Caches.registerMap(vocabCache,
-    (k: (SparkSession, String, String)) => k._2,
-    (v: (DataFrame, Int)) => v._1.unpersist())
-  graft.Caches.registerMap(bitmapCache,
-    (k: (SparkSession, String, String)) => k._2,
-    (v: DataFrame) => v.unpersist())
-  graft.Caches.registerMap(tokenCache,
-    (k: (SparkSession, String, String)) => k._2,
-    (v: DataFrame) => v.unpersist())
-
   /** Word-bigram shingles as array<string> (SQL, engine-portable shape).
     * Used as a `tokens()` key; the actual evaluation goes through the
     * window-lead fast path below. */
@@ -56,6 +32,11 @@ object TokenBitmap {
     """zip_with(slice(split(text, ' '), 1, size(split(text, ' ')) - 1),
       |         slice(split(text, ' '), 2, size(split(text, ' ')) - 1),
       |         (a, b) -> concat(a, ' ', b))""".stripMargin
+
+  /** The tokenizers the registry builds token sets with: unigrams and
+    * word bigrams (q_dedup_ngram). */
+  private[graft] val unigrams = "split(text, ' ')"
+  private val tokenizers = Seq(unigrams, bigramExpr)
 
   /** One row per (doc_id, distinct token), persisted per (session, dir,
     * tokenizer): the tokenizer expression can be genuinely expensive (the
@@ -66,61 +47,54 @@ object TokenBitmap {
     * benchmarked for the bigram path and lost: at bench corpus sizes the
     * two extra shuffles' fixed overhead exceeds the lambda cost; at
     * 100 TB the same cached-once linear pass still holds.) */
-  private[graft] def tokens(s: SparkSession, d: String,
-      tokensExpr: String): DataFrame =
-    tokenCache.computeIfAbsent(((s, d, tokensExpr)),
-      _ => Tables.documents(s, d)
-        .select(col("doc_id"),
-          explode(array_distinct(expr(tokensExpr))).as("tok"))
-        .persist())
+  private[graft] val tokens = Artifact("tokens", tokenizers) {
+    (s, d, tokensExpr: String) => Tables.documents(s, d)
+      .select(col("doc_id"),
+        explode(array_distinct(expr(tokensExpr))).as("tok"))
+      .persist()
+  }
 
   /** (tok, id) dictionary with dense deterministic alphabetical ids,
     * plus the derived bitmap word count. Built once per (session, dir,
     * tokenizer) and persisted; the one driver-side action (zipWithIndex's
     * offset pass + the sizing count on the persisted result) is paid once,
     * not per query build. */
-  def vocab(s: SparkSession, d: String,
-      tokensExpr: String = "split(text, ' ')"): (DataFrame, Int) =
-    vocabCache.computeIfAbsent(((s, d, tokensExpr)),
-      _ => {
-        // df.sort = globally range-partitioned sorted layout; zipWithIndex
-        // numbers partitions in order → id = alphabetical rank, whatever
-        // the partition boundaries were.
-        val sorted = tokens(s, d, tokensExpr).select("tok").distinct()
-          .sort("tok")
-        val ids = sorted.rdd.zipWithIndex()
-          .map { case (r, i) => (r.getString(0), i) }
-        val vdf = s.createDataFrame(ids).toDF("tok", "id").persist()
-        val n = vdf.count()
-        (vdf, math.max(1L, (n + 63) / 64).toInt)
-      })
+  val vocab = Artifact("vocab", tokenizers) { (s, d, tokensExpr: String) =>
+    // df.sort = globally range-partitioned sorted layout; zipWithIndex
+    // numbers partitions in order → id = alphabetical rank, whatever
+    // the partition boundaries were.
+    val sorted = tokens(s, d, tokensExpr).select("tok").distinct()
+      .sort("tok")
+    val ids = sorted.rdd.zipWithIndex()
+      .map { case (r, i) => (r.getString(0), i) }
+    val vdf = s.createDataFrame(ids).toDF("tok", "id").persist()
+    val n = vdf.count()
+    (vdf, math.max(1L, (n + 63) / 64).toInt)
+  }
 
   /** (doc_id, bm: array<bigint>, sz: int) — bitmap + distinct-token count.
     * `tokensExpr` is any SQL expression producing array<string> from `text`
-    * (unigrams by default; n-gram shingles for q_dedup_ngram). Persisted
+    * (unigrams, or word-bigram shingles for q_dedup_ngram). Persisted
     * per (session, dir, tokenizer): the minhash verifier and the exact
     * near-dup baseline share one build. */
-  def bitmaps(s: SparkSession, d: String,
-      tokensExpr: String = "split(text, ' ')"): DataFrame =
-    bitmapCache.computeIfAbsent(((s, d, tokensExpr)),
-      _ => {
-        val (vdf, nWords) = vocab(s, d, tokensExpr)
-        tokens(s, d, tokensExpr)
-          .join(broadcast(vdf), Seq("tok"))
-          .withColumn("w", expr("CAST(id div 64 AS INT)"))
-          .withColumn("bit", expr("shiftleft(1L, CAST(id % 64 AS INT))"))
-          .groupBy("doc_id", "w")
-          .agg(expr("bit_or(bit)").as("bits"))
-          .groupBy("doc_id")
-          .agg(map_from_entries(collect_list(struct(col("w"), col("bits"))))
-            .as("wm"))
-          .withColumn("bm",
-            expr(s"transform(sequence(0, ${nWords - 1}), i -> coalesce(wm[i], 0L))"))
-          .withColumn("sz",
-            expr("aggregate(bm, 0, (acc, x) -> acc + bit_count(x))"))
-          .select("doc_id", "bm", "sz")
-          .persist()
-      })
+  val bitmaps = Artifact("bitmaps", tokenizers) { (s, d, tokensExpr: String) =>
+    val (vdf, nWords) = vocab(s, d, tokensExpr)
+    tokens(s, d, tokensExpr)
+      .join(broadcast(vdf), Seq("tok"))
+      .withColumn("w", expr("CAST(id div 64 AS INT)"))
+      .withColumn("bit", expr("shiftleft(1L, CAST(id % 64 AS INT))"))
+      .groupBy("doc_id", "w")
+      .agg(expr("bit_or(bit)").as("bits"))
+      .groupBy("doc_id")
+      .agg(map_from_entries(collect_list(struct(col("w"), col("bits"))))
+        .as("wm"))
+      .withColumn("bm",
+        expr(s"transform(sequence(0, ${nWords - 1}), i -> coalesce(wm[i], 0L))"))
+      .withColumn("sz",
+        expr("aggregate(bm, 0, (acc, x) -> acc + bit_count(x))"))
+      .select("doc_id", "bm", "sz")
+      .persist()
+  }
 
   /** |A ∩ B| via the native fused-loop expression
     * (graft.functions.BitmapIntersectCount). */

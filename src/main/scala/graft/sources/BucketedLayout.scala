@@ -1,8 +1,6 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-import graft.Tables
-import org.apache.spark.sql.SparkSession
+import graft.{Artifact, Tables}
 
 /** Session-lifetime materializer for co-bucketed table pairs, so query
   * keys can exercise a REAL exchange-free join (the scan itself reports
@@ -11,22 +9,15 @@ import org.apache.spark.sql.SparkSession
   * their join key; every subsequent join between them is co-located —
   * the single biggest shuffle eliminated from a recurring workload.
   * Catalog-backed (bucket metadata lives in the table catalog), written
-  * once per (JVM, data dir). */
+  * once per (session, data dir). */
 object BucketedLayout {
-  private val built = new ConcurrentHashMap[String, (String, String)]()
-
-  // in the Caches registry (census + invalidation): invalidate(dir)
-  // drops the marker, so the next use re-runs the ETL (which starts by
-  // dropping/overwriting the catalog tables) against the files as they
-  // are then — same rebuild contract as the persisted-frame caches
-  graft.Caches.registerMap(built, (dir: String) => dir,
-    (_: (String, String)) => ())
-
   /** orders ⋈ customer co-bucketed on custkey; returns the two table
-    * names registered in the session catalog. */
-  def ordersCustomerByCustkey(spark: SparkSession,
-      dir: String): (String, String) =
-    built.computeIfAbsent(dir, _ => {
+    * names registered in the session catalog. An artifact like the
+    * persisted frames: invalidate(dir) drops it, so the next use re-runs
+    * the ETL (which starts by dropping/overwriting the catalog tables)
+    * against the files as they are then. */
+  val ordersCustomerByCustkey = Artifact("orders_customer_bucketed") {
+    (spark, dir) =>
       val tag = Integer.toHexString(dir.hashCode & 0x7fffffff)
       val (ot, ct) = (s"graft_orders_bck_$tag", s"graft_customer_bck_$tag")
       // clean any orphaned warehouse dirs from an aborted earlier JVM —
@@ -53,5 +44,5 @@ object BucketedLayout {
           .select("c_custkey", "c_mktsegment"),
         ct, "c_custkey", buckets = 8)
       (ot, ct)
-    })
+  }
 }

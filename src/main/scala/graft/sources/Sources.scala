@@ -49,13 +49,12 @@ class ParquetReplaySource(sfDir: String) extends SourceFactory {
     // files-based streaming read over the same parquet the batch path
     // uses, with the same footer-sniffed ts-unit handling as Tables.events
     graft.Tables.configure(spark)
-    val path = s"$sfDir/events.parquet"
     // a file stream source watches a directory, and events.parquet is
     // one file: watch the data dir, filtered down to that file
     def read(schema: org.apache.spark.sql.types.StructType): DataFrame =
       spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(sfDir)
-    graft.Tables.eventsTsUnit(spark, path) match {
+    graft.Tables.eventsTsUnit(spark, sfDir) match {
       case "ns" =>
         read(graft.Tables.eventsRawSchema)
           .withColumn("ts", timestamp_micros(expr("ts div 1000")))

@@ -3,8 +3,8 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.storage.StorageLevel
 
-/** The derived-data cache invalidation API (graft.Caches): entries are
-  * per-(session, dir[, tokenizer]) singletons, invalidate(dir) is
+/** The session-artifact invalidation API (graft.Caches): entries are
+  * per-(session, dir[, param]) singletons, invalidate(dir) is
   * dir-scoped and unpersists what it drops, and rebuilds read the files
   * as they are at rebuild time.
   *
@@ -45,64 +45,22 @@ class CacheSpec extends SparkSpec {
     assert(rebuilt.select("doc_id").distinct().count() === 5)
   }
 
-  test("every session cache is warmup-built: timed keys add no entries") {
-    // Bench times one pass after its warmup pass, and no key of the
-    // timed pass may pay an artifact build: a build that lands on whichever
-    // consumer runs first charges that key for shared work and moves
-    // with key order. The builds stay in the warmup and are charged
-    // through warmup_total_sec / end_to_end_sec instead. Run every
-    // warmup key, snapshot the cache census, then run the former
-    // first-consumer keys plus one consumer per cached family: the
-    // census must not grow. The audit runs against a PRIVATE COPY of
-    // the sf0.001 dir: cache keys carry the data dir, so a fresh dir
-    // guarantees an empty starting census (entries pre-populated by
-    // EARLIER suites in this JVM would otherwise mask a coverage gap),
-    // and a dir-scoped invalidate at the end keeps the audit from
-    // clearing state later suites in the shared session rely on.
+  /** A private copy of the sf0.001 dir: artifact keys carry the data
+    * dir, so a fresh dir starts with an empty census (entries built by
+    * EARLIER suites in this JVM would otherwise mask a gap), and a
+    * dir-scoped invalidate at the end leaves the artifacts later suites
+    * in the shared session rely on alone. */
+  private def withPrivateDir(body: String => Unit): Unit = {
     val auditDir = Files.createTempDirectory("graft-warmup-audit")
     new java.io.File(sfDir).listFiles().foreach { f =>
       Files.copy(f.toPath, auditDir.resolve(f.getName))
     }
     val aDir = auditDir.toString
-    try {
-    assert(Caches.entriesFor(aDir) === 0)
-    Bench.warmupKeys.foreach { k =>
-      assert(SparkEntry.queries.contains(k), s"warmup key $k missing")
-      SparkEntry.queries(k)(spark, aDir).count()
-    }
-    val before = Caches.entriesFor(aDir)
-    val probes = Seq(
-      "q_search_rrf", // bm25DocCache (warmup: q_text_search_bm25)
-      // dayCensusCache consumers (warmup: q_stats_breusch_pagan)
-      "q_stats_dw", "q_stats_pettitt", "q_stats_pacf",
-      "q_stats_ljung_box",
-      "q_dedup_near", // TokenBitmap vocab/bitmaps/tokens
-      "q_ann_ivf", "q_ann_ivfpq", // kmeansCache / pqCbCache
-      "q_eval_auroc", // qclfCache
-      "q_multimodal_phash_hamming", // packedCache
-      "q_multimodal_block_jaccard", // blockCache
-      "q_layout_skipping", // layoutStatsCache
-      "q_text_bpe_encode", // bpeCache
-      "q_dedup_simhash_pairs", "q_dedup_containment", // pair caches
-      "q_graph_hits", "q_graph_modularity", // edge/copurchase caches
-      // disk-backed layout ETL markers (now registered): co-bucketed
-      // tables, day-partitioned events, calendar dim
-      "q_layout_bucket_join", "q_layout_dpp", // BucketedLayout / calBuilt
-      "q_sim_sparse_topk", // tfidfIdxCache (self-warming)
-      "q_text_keywords", "q_text_search_tfidf", // tfidfIdxCache consumers
-      "q_eval_pq_recall", "q_embed_pq") // pqCodesCache / pqQdCache
-    probes.foreach { k =>
-      assert(SparkEntry.queries.contains(k), s"probe key $k missing")
-      SparkEntry.queries(k)(spark, aDir).count()
-      assert(Caches.entriesFor(aDir) === before,
-        s"$k built a session cache on its first timed run — add its " +
-          "builder to Bench.warmupKeys")
-    }
-    } finally {
-      // Release everything this audit materialized for its private dir
-      // (ADVICE r9): the registry markers + persisted frames, the
-      // tmpdir layout parquets and warehouse bucket tables keyed by the
-      // fresh dir's hash, and the copied data itself.
+    try body(aDir)
+    finally {
+      // Release everything built for the private dir: the artifacts,
+      // the tmpdir layout parquets and warehouse bucket tables keyed by
+      // the fresh dir's hash, and the copied data itself.
       Caches.invalidate(aDir)
       val tag = Integer.toHexString(aDir.hashCode & 0x7fffffff)
       Seq(s"graft_orders_bck_$tag", s"graft_customer_bck_$tag")
@@ -116,6 +74,67 @@ class CacheSpec extends SparkSpec {
         .foreach(d => rmTree(
           new java.io.File(sys.props("java.io.tmpdir"), d)))
       rmTree(auditDir.toFile)
+    }
+  }
+
+  test("every session cache is warmup-built: timed keys add no entries") {
+    // Bench times one pass after its warmup, and no key of the timed
+    // pass may pay an artifact build: a build that lands on whichever
+    // consumer runs first charges that key for shared work and moves
+    // with key order. Warm every declared artifact the way Bench does,
+    // check each holds an entry, then run one consumer per artifact
+    // family: the census must not grow.
+    withPrivateDir { aDir =>
+      assert(Caches.entriesFor(aDir) === 0)
+      Caches.declared.foreach(_.warm(spark, aDir))
+      Caches.declared.foreach(a =>
+        assert(a.entriesFor(aDir) > 0, s"artifact ${a.name} was not warmed"))
+      val before = Caches.entriesFor(aDir)
+      val probes = Seq(
+        "q_search_rrf", // bm25_per_doc
+        "q_stats_dw", "q_stats_pettitt", "q_stats_pacf", // daily_census
+        "q_stats_ljung_box",
+        "q_dedup_near", // tokens / vocab / bitmaps / near_pairs
+        "q_ann_ivf", "q_ann_ivfpq", // kmeans_centroids / pq_codebook
+        "q_eval_auroc", // quality_classifier
+        "q_multimodal_phash_hamming", // packed_fingerprints
+        "q_multimodal_block_jaccard", // block_inventory
+        "q_layout_skipping", // layout_stats
+        "q_text_bpe_encode", // bpe_trained
+        "q_dedup_simhash_pairs", "q_dedup_containment", // simhashes / pairs
+        "q_graph_hits", "q_graph_modularity", // graph edges / components
+        // disk-backed layouts: co-bucketed tables, calendar dim
+        "q_layout_bucket_join", "q_layout_dpp",
+        "q_sim_sparse_topk", "q_text_keywords", // tfidf_index
+        "q_text_search_tfidf",
+        "q_eval_pq_recall", "q_embed_pq") // pq_codes / pq_query_dist
+      probes.foreach { k =>
+        assert(SparkEntry.queries.contains(k), s"probe key $k missing")
+        SparkEntry.queries(k)(spark, aDir).count()
+        assert(Caches.entriesFor(aDir) === before,
+          s"$k built a session cache the warmup did not — declare it " +
+            "as a graft.Artifact")
+      }
+    }
+  }
+
+  test("invalidate(dir) releases checkpointed artifacts") {
+    // q_text_quality_classifier's trained state holds a localCheckpoint
+    // frame, and the distributed cluster loop hands back a frame over a
+    // persisted RDD: Dataset.unpersist reaches neither
+    withPrivateDir { aDir =>
+      def persisted = spark.sparkContext.getPersistentRDDs.keySet
+      val idsBefore = persisted
+      SparkEntry.queries("q_text_quality_classifier")(spark, aDir).count()
+      val saved = operators.DedupOps.DriverCcEdgeThreshold
+      operators.DedupOps.DriverCcEdgeThreshold = -1L
+      try SparkEntry.queries("q_dedup_clusters")(spark, aDir).count()
+      finally operators.DedupOps.DriverCcEdgeThreshold = saved
+      val built = persisted -- idsBefore
+      assert(built.nonEmpty)
+      Caches.invalidate(aDir)
+      assert((persisted intersect built).isEmpty,
+        s"still persisted after invalidate: ${persisted intersect built}")
     }
   }
 

@@ -14,7 +14,7 @@ class IngestCanarySpec extends SparkSpec {
   test("events.ts lands in 2024-01 for every shipped SF (unit-sniffed read)") {
     for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
       val dir = s"/root/testdata/$sf"
-      val unit = Tables.eventsTsUnit(spark, s"$dir/events.parquet")
+      val unit = Tables.eventsTsUnit(spark, dir)
       val r = Tables.events(spark, dir)
         .agg(min("ts").as("lo"), max("ts").as("hi")).head
       val (lo, hi) =

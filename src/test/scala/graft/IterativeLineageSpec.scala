@@ -83,7 +83,7 @@ class IterativeLineageSpec extends SparkSpec {
     operators.DedupOps.CcPlanNodeLog = log
     try {
       val res = operators.DedupOps
-        .connectedComponents(spark, edges, "lineage-spec")
+        .connectedComponents(spark, edges)
         .collect()
       assert(res.length === 17)
       assert(res.map(_.getLong(1)).distinct.toSeq === Seq(0L))

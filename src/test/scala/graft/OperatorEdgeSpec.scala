@@ -121,6 +121,16 @@ class OperatorEdgeSpec extends SparkSpec {
     val approx = df.agg(approx_count_distinct("user_id")).as[Long].head()
     val exact = df.agg(countDistinct("user_id")).as[Long].head()
     assert(math.abs(approx - exact).toDouble / exact < 0.05)
+    // the registered key, per event type: the one key with no oracle
+    val exactPerType = df.groupBy("event_type")
+      .agg(countDistinct("user_id")).as[(String, Long)].collect().toMap
+    val got = SparkEntry.queries("q_agg_approx_distinct")(spark, sfDir)
+      .as[(String, Long)].collect().toMap
+    assert(got.keySet === exactPerType.keySet)
+    exactPerType.foreach { case (t, n) =>
+      assert(math.abs(got(t) - n).toDouble / n < 0.05,
+        s"$t: approx_users ${got(t)} vs exact $n")
+    }
   }
 
   test("graft_kmv matches a reference KMV computed outside Spark") {

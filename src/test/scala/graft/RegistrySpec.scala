@@ -2,8 +2,8 @@ package graft
 
 /** Consistency of the declared contract surface itself — the failure
   * modes here are silent (a duplicate key across operator packs shadows
-  * an implementation; a renamed key quietly drops out of warmup or the
-  * plan audit) so they get explicit guards. */
+  * an implementation; a renamed key quietly drops out of the plan
+  * audit) so they get explicit guards. */
 class RegistrySpec extends SparkSpec {
 
   test("no key is declared by two operator packs (silent shadowing)") {
@@ -25,11 +25,11 @@ class RegistrySpec extends SparkSpec {
     assert(all.size === SparkEntry.queries.size)
   }
 
-  test("bench warmup keys exist in the query registry") {
-    // shared val, not a copy — a renamed key would silently skip its
-    // warmup and re-randomize which query pays one-time costs
-    Bench.warmupKeys.foreach(k =>
-      assert(SparkEntry.queries.contains(k), s"warmup key $k missing"))
+  test("declared artifact names are unique") {
+    // Bench's warmup_sec map is keyed by artifact name
+    val names = Caches.declared.map(_.name)
+    assert(names.distinct.size === names.size,
+      s"artifact names declared twice: ${names.diff(names.distinct)}")
   }
 
   test("plan-audit keys exist in the query registry") {
