@@ -1,20 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Spark's generated-class cache holds 100 entries (static conf);
-      // a 369-key run evicts everything. Sized to hold the whole
-      // registry's stages.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Tables.configure(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("WARN")
     // Warmup, timed per artifact: builds every declared session
     // artifact for sfDir, so which timed key pays a build is not an
     // accident of key order. Its cost is reported (warmup_total_sec,

@@ -81,9 +81,8 @@ object Caches {
     * initializes the operator packs, and the helpers outside it are
     * named here. */
   def declared: Seq[Artifact[_, _]] = {
-    SparkEntry.queries
-    Seq(Tables, operators.TokenBitmap, sources.PartitionedLayout,
-      sources.BucketedLayout)
+    Seq(SparkEntry, Tables, operators.TokenBitmap,
+      sources.PartitionedLayout, sources.BucketedLayout)
     artifacts.asScala.toSeq
   }
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for representative queries — the
   * scale-readiness audit (SURVEY.md §4): filter/projection pushdown into
   * the parquet scan, broadcast vs sort-merge join selection, partial
@@ -262,14 +260,7 @@ object ExplainAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Tables.configure(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local("ERROR")
     // optional args after sfDir restrict the audit to those keys (any
     // registry key, not just the curated list) for local iteration
     val only = args.drop(1).toSet

@@ -1,24 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-key wall-clock timer for local iteration: runs each named query
-  * at sf0.1 under the bench session config and a noop sink, printing
-  * one line per key. Run a key twice to separate JVM/codegen warmup
-  * from steady-state cost (the number BENCH_r*.json sees is the warm
-  * one — Bench runs 290+ keys in one JVM).
+  * at sf0.1 in Bench's session and a noop sink, printing one line per
+  * key. Run a key twice to separate JVM/codegen warmup from
+  * steady-state cost (the number BENCH_r*.json sees is the warm one —
+  * Bench runs every key in one JVM).
   * Usage: sbt "runMain graft.TimeOne q_key [q_key ...]" */
 object TimeOne {
   def main(a: Array[String]): Unit = {
-    // Same core-count source as Bench (ADVICE r6): a hardcoded 32 made
-    // TimeOne numbers incomparable to Bench on smaller hosts.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    Tables.configure(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local("ERROR")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     a.foreach { k =>
       val t0 = System.nanoTime()

@@ -12,9 +12,7 @@ object Verify {
     * show up as attempted-and-failed, never silently vanish from the
     * round's report (the q_events_churn lesson). Returns the error. */
   def runOne(spark: SparkSession, sfDir: String, outDir: String,
-      name: String,
-      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-      : Option[String] =
+      name: String, fn: Query.Q): Option[String] =
     try {
       fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -35,18 +33,7 @@ object Verify {
     // optional extra args = restrict to these keys (local iteration only;
     // the driver always passes exactly two args → full run)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // hold the whole registry's generated classes (the Bench rule,
-      // round 8): the 100-entry default evicts across 369 keys
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    Tables.configure(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("WARN")
     new java.io.File(outDir).mkdirs()
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
     SparkEntry.queries

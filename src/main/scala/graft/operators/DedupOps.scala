@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.{Artifact, Tables}
+import graft.{Artifact, Query, Tables}
+import graft.Query.Q
 import graft.Par.r6
 import TokenBitmap.unigrams
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -32,8 +33,6 @@ import org.apache.spark.sql.functions._
   * element array compare per candidate row, map-side, inside codegen.
   */
 object DedupOps {
-  type Q = (SparkSession, String) => DataFrame
-
   private val NumHashes = 16
   private val BandRows = 4 // → 4 bands of 4 rows
 
@@ -795,24 +794,6 @@ object DedupOps {
       .orderBy("n_bands", "s")
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_dedup_lsh_planner" -> lshPlanner,
-    "q_pipeline_export" -> pipelineExport,
-    "q_dedup_incremental" -> dedupIncremental,
-    "q_dedup_cluster_sizes" -> clusterSizes,
-    "q_dedup_keep_best" -> dedupKeepBest,
-    "q_sample_split_leakfree" -> sampleSplitLeakfree,
-    "q_sample_rep_weight" -> sampleRepWeight,
-    "q_eval_minhash_recall" -> minhashRecall,
-    "q_dedup_minhash" -> dedupMinhash,
-    "q_dedup_simhash" -> dedupSimhash,
-    "q_dedup_simhash_pairs" -> dedupSimhashPairs,
-    "q_dedup_clusters" -> dedupClusters,
-    "q_eval_rouge" -> evalRouge,
-    "q_eval_bleu" -> evalBleu,
-    "q_pipeline_curate" -> pipelineCurate,
-    "q_dedup_ngram" -> dedupNgram)
-
   /** Shared CTE chain ending in `curated` = the four q_pipeline_curate
     * gates (quality ∧ exact-dedup keeper ∧ near-dup cluster rep ∧ hash
     * sample) — reused verbatim by the curate and export oracles so the
@@ -922,8 +903,8 @@ object DedupOps {
                     AS hd
            FROM cand)"""
 
-  val oracle: Map[String, String] = Map(
-    "q_dedup_lsh_planner" -> {
+  val declared: Seq[Query] = Seq(
+    Query("q_dedup_lsh_planner", lshPlanner, {
       val branches = lshConfigs.map { case (b, r) =>
         val p = s"1.0 - ${powChain(s"(1.0 - ${powChain("s", r)})", b)}"
         s"""SELECT $b AS n_bands, $r AS n_rows, s,
@@ -934,8 +915,8 @@ object DedupOps {
                        / 20.0 AS s)
           $branches
           ORDER BY n_bands, s"""
-    },
-    "q_dedup_incremental" ->
+    }),
+    Query("q_dedup_incremental", dedupIncremental,
       s"""WITH cut AS (SELECT (max(doc_id) + 1) * 4 // 5 AS cutoff
                        FROM documents)
          SELECT b AS new_id, a AS base_id, jacc_r
@@ -945,13 +926,13 @@ object DedupOps {
          FROM documents""", 0.8)}) pairs
          CROSS JOIN cut
          WHERE a < cutoff AND b >= cutoff
-         ORDER BY new_id, base_id""",
-    "q_dedup_minhash" -> lshOracle(
+         ORDER BY new_id, base_id"""),
+    Query("q_dedup_minhash", dedupMinhash, lshOracle(
       """SELECT doc_id,
                 unnest(list_distinct(string_split(text, ' '))) AS tok
-         FROM documents""", 0.8),
-    "q_eval_minhash_recall" ->
-      s"""WITH exact AS (${TextOps.oracle("q_dedup_near")}),
+         FROM documents""", 0.8)),
+    Query("q_eval_minhash_recall", minhashRecall,
+      s"""WITH exact AS (${TextOps.dedupNearSql}),
          lsh AS (${lshOracle(
         """SELECT doc_id,
                 unnest(list_distinct(string_split(text, ' '))) AS tok
@@ -962,15 +943,15 @@ object DedupOps {
          FROM (SELECT count(*) AS n_exact FROM exact) ne
          CROSS JOIN (SELECT count(*) AS n_lsh FROM lsh) nl
          CROSS JOIN (SELECT count(*) AS n_hit
-                     FROM lsh JOIN exact USING (a, b)) h""",
-    "q_dedup_ngram" -> lshOracle(
+                     FROM lsh JOIN exact USING (a, b)) h""", cap = 6),
+    Query("q_dedup_ngram", dedupNgram, lshOracle(
       """SELECT doc_id,
                 unnest(list_distinct(list_transform(
                   generate_series(1, len(string_split(text, ' ')) - 1),
                   i -> string_split(text, ' ')[i] || ' ' ||
                        string_split(text, ' ')[i + 1]))) AS tok
-         FROM documents""", 0.6),
-    "q_dedup_cluster_sizes" ->
+         FROM documents""", 0.6)),
+    Query("q_dedup_cluster_sizes", clusterSizes,
       s"""WITH RECURSIVE $simhashPairCtes,
          pairs AS (SELECT a, b FROM ham WHERE hd <= $HammingMax),
          und AS (SELECT a, b FROM pairs
@@ -985,10 +966,10 @@ object DedupOps {
          sz AS (SELECT cluster_rep, count(*) AS size
                 FROM c GROUP BY cluster_rep)
          SELECT size, count(*) AS n_clusters
-         FROM sz GROUP BY size ORDER BY size""",
+         FROM sz GROUP BY size ORDER BY size"""),
     // same cluster CTEs; weight table = 1/size per size bucket, plus
     // the singleton row (docs in no cluster) at weight 1
-    "q_sample_rep_weight" ->
+    Query("q_sample_rep_weight", sampleRepWeight,
       s"""WITH RECURSIVE $simhashPairCtes,
          pairs AS (SELECT a, b FROM ham WHERE hd <= $HammingMax),
          und AS (SELECT a, b FROM pairs
@@ -1014,16 +995,16 @@ object DedupOps {
            SELECT size, n_docs FROM bysize)
          SELECT size, n_docs,
                 floor(1.0 / size * 1000000 + 0.5) / 1000000.0 AS weight_r
-         FROM allrows ORDER BY size""",
-    "q_dedup_simhash_pairs" ->
+         FROM allrows ORDER BY size"""),
+    Query("q_dedup_simhash_pairs", dedupSimhashPairs,
       s"""WITH $simhashPairCtes
          SELECT a, b, hd FROM ham WHERE hd <= $HammingMax
-         ORDER BY a, b""",
-    "q_pipeline_curate" ->
+         ORDER BY a, b""", cap = 8),
+    Query("q_pipeline_curate", pipelineCurate,
       s"""WITH RECURSIVE $curateCtes
          SELECT doc_id, lang, n_tok, quality_r FROM curated
-         ORDER BY doc_id""",
-    "q_pipeline_export" ->
+         ORDER BY doc_id"""),
+    Query("q_pipeline_export", pipelineExport,
       s"""WITH RECURSIVE $curateCtes,
          ordered AS (
            SELECT doc_id, n_tok,
@@ -1034,8 +1015,8 @@ object DedupOps {
          SELECT doc_id, pos,
                 CAST((pos - 1) % 4 AS INT) AS shard,
                 (pos - 1) // 4 AS shard_pos, n_tok
-         FROM ordered ORDER BY pos""",
-    "q_dedup_clusters" ->
+         FROM ordered ORDER BY pos"""),
+    Query("q_dedup_clusters", dedupClusters,
       s"""WITH RECURSIVE $simhashPairCtes,
          pairs AS (SELECT a, b FROM ham WHERE hd <= $HammingMax),
          und AS (SELECT a, b FROM pairs
@@ -1045,11 +1026,11 @@ object DedupOps {
            UNION
            SELECT r.src, u.b FROM reach r JOIN und u ON u.a = r.dst)
          SELECT src AS doc_id, least(src, min(dst)) AS cluster_rep
-         FROM reach GROUP BY src ORDER BY doc_id""",
+         FROM reach GROUP BY src ORDER BY doc_id"""),
     // member↔rep pairs from the same component chain as
     // q_dedup_clusters; clipped n-gram overlaps via least(ca, cb)
     // joins; F1 = 2·overlap/(len_a + len_b).
-    "q_eval_rouge" ->
+    Query("q_eval_rouge", evalRouge,
       s"""WITH RECURSIVE $simhashPairCtes,
          spairs AS (SELECT a, b FROM ham WHERE hd <= $HammingMax),
          und AS (SELECT a, b FROM spairs
@@ -1095,10 +1076,10 @@ object DedupOps {
          JOIN rlen lb ON lb.doc_id = p.b
          LEFT JOIN ov1 ON ov1.a = p.a AND ov1.b = p.b
          LEFT JOIN ov2 ON ov2.a = p.a AND ov2.b = p.b
-         ORDER BY p.a, p.b""",
+         ORDER BY p.a, p.b""", cap = 4),
     // Same member↔rep overlap chain as q_eval_rouge; the final select
     // computes clipped precisions + brevity penalty instead of F1.
-    "q_eval_bleu" ->
+    Query("q_eval_bleu", evalBleu,
       s"""WITH RECURSIVE $simhashPairCtes,
          spairs AS (SELECT a, b FROM ham WHERE hd <= $HammingMax),
          und AS (SELECT a, b FROM spairs
@@ -1150,8 +1131,8 @@ object DedupOps {
                          * (CAST(o2 AS DOUBLE) / (n_b - 1))))
                          * 1000000 + 0.5) / 1000000.0
                   ELSE 0.0 END AS bleu2_r
-         FROM bp ORDER BY a, b""",
-    "q_dedup_keep_best" ->
+         FROM bp ORDER BY a, b""", cap = 4),
+    Query("q_dedup_keep_best", dedupKeepBest,
       s"""WITH RECURSIVE $simhashPairCtes,
          pairs AS (SELECT a, b FROM ham WHERE hd <= $HammingMax),
          und AS (SELECT a, b FROM pairs
@@ -1177,8 +1158,8 @@ object DedupOps {
                 FROM clus c JOIN qq q ON c.doc_id = q.doc_id)
          SELECT cluster_rep, doc_id AS keep_doc, q_r AS keep_quality_r,
                 n_members
-         FROM rk WHERE rn = 1 ORDER BY cluster_rep""",
-    "q_sample_split_leakfree" ->
+         FROM rk WHERE rn = 1 ORDER BY cluster_rep"""),
+    Query("q_sample_split_leakfree", sampleSplitLeakfree,
       s"""WITH RECURSIVE $simhashPairCtes,
          pairs AS (SELECT a, b FROM ham WHERE hd <= $HammingMax),
          und AS (SELECT a, b FROM pairs
@@ -1202,8 +1183,8 @@ object DedupOps {
                FROM keyed)
          SELECT split, count(*) AS n_docs,
                 count(DISTINCT gkey) AS n_groups
-         FROM g GROUP BY split ORDER BY split""",
-    "q_dedup_simhash" ->
+         FROM g GROUP BY split ORDER BY split"""),
+    Query("q_dedup_simhash", dedupSimhash,
       """WITH tokc AS (
            SELECT doc_id, tok, count(*) AS cnt
            FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
@@ -1224,5 +1205,7 @@ object DedupOps {
          SELECT doc_id,
                 string_agg(CASE WHEN s >= 0 THEN '1' ELSE '0' END, ''
                            ORDER BY j) AS simhash
-         FROM sums GROUP BY doc_id ORDER BY doc_id""")
+         FROM sums GROUP BY doc_id ORDER BY doc_id"""))
+
+  val queries: Map[String, Q] = Query.builders(declared)
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
+import graft.Query.Q
 import graft.Par.{r2, r6}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -16,8 +17,6 @@ import org.apache.spark.sql.functions._
   * shuffle key for per-entity state).
   */
 object EventOps {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Hourly tumbling counts+sums per event_type — uses the streaming-native
     * window() operator (start == date_trunc('hour') for 1h/epoch-aligned). */
   private val tumbling: Q = (s, d) =>
@@ -1437,54 +1436,6 @@ object EventOps {
       .orderBy("depth")
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_eval_holt_backtest" -> holtBacktest,
-    "q_events_holt_winters" -> holtWinters,
-    "q_events_window_funnel" -> windowFunnel,
-    "q_events_markov_stationary" -> markovStationary,
-    "q_events_seq_support" -> seqSupport,
-    "q_events_holt" -> holt,
-    "q_events_heavy_hitters" -> heavyHitters,
-    "q_agg_bitmap_distinct" -> bitmapDistinct,
-    "q_events_streaks" -> streaks,
-    "q_events_concurrency" -> concurrency,
-    "q_events_lateness" -> lateness,
-    "q_events_cohort_ltv" -> cohortLtv,
-    "q_events_growth_acct" -> growthAccounting,
-    "q_events_interpolate" -> interpolate,
-    "q_events_forecast_naive" -> forecastNaive,
-    "q_events_ohlc" -> ohlc,
-    "q_events_churn" -> churn,
-    "q_win_rolling_median" -> rollingMedian,
-    "q_events_bursts" -> bursts,
-    "q_join_interval_overlap" -> intervalOverlap,
-    "q_events_rate_limit" -> rateLimit,
-    "q_events_seasonality" -> seasonality,
-    "q_orders_gap" -> orderGaps,
-    "q_events_interarrival" -> interarrival,
-    "q_events_survival" -> survival,
-    "q_events_logrank" -> logrank,
-    "q_events_rolling_uniques" -> rollingUniques,
-    "q_events_funnel_time" -> funnelTime,
-    "q_events_attribution" -> attribution,
-    "q_events_session_stats" -> sessionStats,
-    "q_events_path_topk" -> pathTopk,
-    "q_events_rolling_7d" -> rolling7d,
-    "q_events_dau_mau" -> dauMau,
-    "q_events_cdc_apply" -> cdcApply,
-    "q_events_anomaly" -> anomaly,
-    "q_events_scd2" -> scd2,
-    "q_join_temporal" -> joinTemporal,
-    "q_events_markov" -> markov,
-    "q_events_funnel" -> funnel,
-    "q_events_retention" -> retention,
-    "q_stream_tumbling" -> tumbling,
-    "q_stream_sliding" -> sliding,
-    "q_stream_session" -> session,
-    "q_stream_interval_join" -> intervalJoin,
-    "q_stream_left_join" -> intervalJoinLeft,
-    "q_agg_pivot" -> pivot)
-
   /** Shared recursive-CTE chain replaying the Holt fold (daily census →
     * rn-ordered recursion carrying level/trend/one-step fit) — used by
     * the forecast oracle and the rolling-origin backtest oracle. */
@@ -1629,8 +1580,8 @@ object EventOps {
              AS pi
         FROM p JOIN $prev ON p.a = $prev.t GROUP BY p.b"""
 
-  val oracle: Map[String, String] = Map(
-    "q_events_window_funnel" ->
+  val declared: Seq[Query] = Seq(
+    Query("q_events_window_funnel", windowFunnel,
       """WITH ev AS (SELECT user_id, event_id, event_type,
                             epoch_us(ts) AS ts_us
                      FROM events),
@@ -1666,8 +1617,8 @@ object EventOps {
                 floor((CAST(count(*) AS DOUBLE) / n_total)
                   * 1000000 + 0.5) / 1000000.0 AS share
          FROM pu CROSS JOIN tot
-         GROUP BY depth, n_total ORDER BY depth""",
-    "q_events_markov_stationary" ->
+         GROUP BY depth, n_total ORDER BY depth""", cap = 14),
+    Query("q_events_markov_stationary", markovStationary,
       s"""WITH pr AS (
            SELECT user_id, event_type AS a,
                   lead(event_type) OVER (PARTITION BY user_id
@@ -1689,8 +1640,8 @@ object EventOps {
          pi3 AS (${piIterSql("pi2")}),
          pi4 AS (${piIterSql("pi3")})
          SELECT t AS event_type, pi, CAST(4 AS BIGINT) AS n_iter
-         FROM pi4 ORDER BY event_type""",
-    "q_events_seq_support" ->
+         FROM pi4 ORDER BY event_type""", cap = 8),
+    Query("q_events_seq_support", seqSupport,
       """WITH p AS (
            SELECT user_id,
                   lag(event_type) OVER (PARTITION BY user_id
@@ -1706,8 +1657,8 @@ object EventOps {
                 floor((CAST(n_users AS DOUBLE) / n_users_total)
                   * 1000000 + 0.5) / 1000000.0 AS support
          FROM g CROSS JOIN tot
-         ORDER BY n_trans DESC, a, b""",
-    "q_events_holt" ->
+         ORDER BY n_trans DESC, a, b"""),
+    Query("q_events_holt", holt,
       s"""$holtRecCtes,
          lastrow AS (SELECT day, l, b FROM rec
                      WHERE rn = (SELECT max(rn) FROM rec)),
@@ -1723,8 +1674,8 @@ object EventOps {
                 floor(fit * 1000000 + 0.5) / 1000000.0 AS fit
          FROM (SELECT day, c, l, b, fit FROM rec
                UNION ALL SELECT * FROM fc)
-         ORDER BY day""",
-    "q_eval_holt_backtest" ->
+         ORDER BY day"""),
+    Query("q_eval_holt_backtest", holtBacktest,
       s"""$holtRecCtes,
          $hwRecCte,
          naive AS (SELECT day + 7 AS day, c AS naive7 FROM rec),
@@ -1745,8 +1696,8 @@ object EventOps {
                   / 1000000.0 AS mape_hw,
                 floor(avg(abs(CAST(c - naive7 AS DOUBLE)) / c)
                   * 1000000 + 0.5) / 1000000.0 AS mape_naive
-         FROM j""",
-    "q_events_holt_winters" ->
+         FROM j"""),
+    Query("q_events_holt_winters", holtWinters,
       s"""$holtRecCtes,
          $hwRecCte,
          lastrow AS (SELECT * FROM hwrec
@@ -1768,8 +1719,8 @@ object EventOps {
                 floor(fit * 1000000 + 0.5) / 1000000.0 AS fit
          FROM (SELECT day, c, l, b, seas, fit FROM hwrec
                UNION ALL SELECT * FROM fc)
-         ORDER BY day""",
-    "q_events_heavy_hitters" ->
+         ORDER BY day"""),
+    Query("q_events_heavy_hitters", heavyHitters,
       """WITH c AS (SELECT user_id, CAST(count(*) AS BIGINT) AS cnt
                     FROM events GROUP BY user_id),
          t AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM events)
@@ -1778,8 +1729,8 @@ object EventOps {
                   / 1000000.0 AS share
          FROM c CROSS JOIN t
          WHERE cnt * 256 > n_total
-         ORDER BY cnt DESC, user_id""",
-    "q_agg_bitmap_distinct" ->
+         ORDER BY cnt DESC, user_id"""),
+    Query("q_agg_bitmap_distinct", bitmapDistinct,
       """WITH words AS (
            SELECT epoch_us(ts)::BIGINT // 86400000000 AS day,
                   user_id // 32 AS w,
@@ -1799,8 +1750,8 @@ object EventOps {
                   CAST(count(*) AS BIGINT) AS n_words
            FROM corpus0)
          SELECT * FROM daily UNION ALL SELECT * FROM corpus
-         ORDER BY day""",
-    "q_events_streaks" ->
+         ORDER BY day"""),
+    Query("q_events_streaks", streaks,
       """WITH d AS (
            SELECT DISTINCT user_id,
                   epoch_us(ts)::BIGINT // 86400000000 AS day_num
@@ -1814,8 +1765,8 @@ object EventOps {
          SELECT user_id, CAST(sum(len) AS BIGINT) AS active_days,
                 CAST(max(len) AS BIGINT) AS longest_streak,
                 count(*) AS n_streaks
-         FROM st GROUP BY user_id ORDER BY user_id""",
-    "q_events_concurrency" ->
+         FROM st GROUP BY user_id ORDER BY user_id"""),
+    Query("q_events_concurrency", concurrency,
       """WITH e AS (
            SELECT user_id, event_id, epoch_us(ts)::BIGINT AS ts_us
            FROM events),
@@ -1850,8 +1801,8 @@ object EventOps {
                 CAST(max(running) AS BIGINT) AS peak,
                 CAST(sum(CASE WHEN delta > 0 THEN 1 ELSE 0 END) AS BIGINT)
                   AS n_starts
-         FROM r GROUP BY 1 ORDER BY 1""",
-    "q_events_lateness" ->
+         FROM r GROUP BY 1 ORDER BY 1""", cap = 7),
+    Query("q_events_lateness", lateness,
       s"""WITH e AS (
             SELECT event_id, epoch_us(ts)::BIGINT AS ts_us,
                    md5(CAST(event_id AS VARCHAR)) AS h
@@ -1879,8 +1830,8 @@ object EventOps {
           SELECT bucket_id, count(*) AS n,
                  ${graft.Par.sql("count(*) / CAST(n_tot AS DOUBLE)", 1000000)} AS pct,
                  max(late_us) AS max_late_us
-          FROM b, t GROUP BY bucket_id, n_tot ORDER BY bucket_id""",
-    "q_events_cohort_ltv" ->
+          FROM b, t GROUP BY bucket_id, n_tot ORDER BY bucket_id""", cap = 9),
+    Query("q_events_cohort_ltv", cohortLtv,
       """WITH fe AS (
            SELECT user_id, min(epoch_us(ts) // 604800000000) AS cw
            FROM events GROUP BY user_id),
@@ -1902,8 +1853,8 @@ object EventOps {
                 floor((c.cum_rev / co.n_users) * 1000000 + 0.5)
                   / 1000000.0 AS ltv
          FROM cum c JOIN co ON c.cw = co.cw
-         ORDER BY cohort_week, week_offset""",
-    "q_events_growth_acct" ->
+         ORDER BY cohort_week, week_offset"""),
+    Query("q_events_growth_acct", growthAccounting,
       """WITH uw AS (
            SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day
            FROM events WHERE event_type = 'purchase'),
@@ -1919,8 +1870,8 @@ object EventOps {
                   AS BIGINT) AS n_resurrected,
                 CAST(count(*) FILTER (nd IS NULL OR nd > day + 1)
                   AS BIGINT) AS n_lapsing
-         FROM lagd GROUP BY day ORDER BY day""",
-    "q_events_interpolate" ->
+         FROM lagd GROUP BY day ORDER BY day"""),
+    Query("q_events_interpolate", interpolate,
       """WITH hourly AS (
            SELECT epoch_us(ts) // 3600000000 AS hr,
                   floor(sum(value) * 100 + 0.5) / 100.0 AS v
@@ -1947,8 +1898,8 @@ object EventOps {
                        ELSE pv + (nv - pv) * CAST(hr - ph AS DOUBLE)
                             / (nh - ph) END) * 1000000 + 0.5)
                   / 1000000.0 AS v_fill
-         FROM f ORDER BY hr""",
-    "q_events_forecast_naive" ->
+         FROM f ORDER BY hr"""),
+    Query("q_events_forecast_naive", forecastNaive,
       """WITH daily AS (
            SELECT epoch_us(ts) // 86400000000 AS day,
                   CAST(count(*) AS BIGINT) AS c
@@ -1960,8 +1911,8 @@ object EventOps {
                   AS mae,
                 floor(avg(CAST(abs(actual - fc) AS DOUBLE) / actual)
                   * 1000000 + 0.5) / 1000000.0 AS mape
-         FROM bt""",
-    "q_events_ohlc" ->
+         FROM bt"""),
+    Query("q_events_ohlc", ohlc,
       """WITH e AS (
            SELECT epoch_us(ts) // 3600000000 AS hr, event_type, value,
                   lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0') ||
@@ -1974,8 +1925,8 @@ object EventOps {
                 arg_max(value, k) AS close,
                 count(*) AS n_events,
                 floor(sum(value) * 100 + 0.5) / 100.0 AS volume
-         FROM e GROUP BY hr, event_type ORDER BY hr, event_type""",
-    "q_events_churn" ->
+         FROM e GROUP BY hr, event_type ORDER BY hr, event_type"""),
+    Query("q_events_churn", churn,
       """WITH p AS (
            SELECT user_id, epoch_us(ts) // 86400000000 AS day_num
            FROM events WHERE event_type = 'purchase'),
@@ -1989,8 +1940,8 @@ object EventOps {
                 count(*) FILTER (late = 0) AS n_churned,
                 floor((CAST(count(*) FILTER (late = 0) AS DOUBLE)
                   / count(*)) * 1000000 + 0.5) / 1000000.0 AS churn_rate
-         FROM pu WHERE early > 0""",
-    "q_win_rolling_median" ->
+         FROM pu WHERE early > 0"""),
+    Query("q_win_rolling_median", rollingMedian,
       """WITH daily AS (
            SELECT epoch(o_orderdate)::BIGINT // 86400 AS day_num,
                   floor(sum(o_totalprice) * 100 + 0.5) / 100.0 AS rev
@@ -1999,10 +1950,10 @@ object EventOps {
          SELECT day, count(*) AS n_days,
                 floor(quantile_cont(rev, 0.5) * 100 + 0.5) / 100.0 AS med7
          FROM daily JOIN spine ON day_num >= day - 6 AND day_num <= day
-         GROUP BY day ORDER BY day""",
+         GROUP BY day ORDER BY day"""),
     // Token bucket folded with the identical integer lambda; the init
     // state is prepended (list_reduce seeds from the first element).
-    "q_events_rate_limit" ->
+    Query("q_events_rate_limit", rateLimit,
       """WITH u AS (
            SELECT user_id, list(epoch_us(ts) ORDER BY epoch_us(ts)) AS ts
            FROM events GROUP BY user_id),
@@ -2026,12 +1977,12 @@ object EventOps {
          SELECT user_id, CAST(n_events AS BIGINT) AS n_events,
                 CAST(n_admitted AS BIGINT) AS n_admitted,
                 CAST(n_events - n_admitted AS BIGINT) AS n_dropped
-         FROM f ORDER BY user_id""",
+         FROM f ORDER BY user_id"""),
     // Session×burst interval overlap: the oracle needs no blocking —
     // it joins the two interval CTEs on the raw half-open overlap
     // predicate; the engine's bucketed plan must produce identical
     // pairs (completeness proof for the blocking scheme).
-    "q_join_interval_overlap" ->
+    Query("q_join_interval_overlap", intervalOverlap,
       """WITH flagged AS (
            SELECT user_id, event_id, epoch_us(ts) AS ts_us,
                   CASE WHEN epoch_us(ts) - lag(epoch_us(ts), 1) OVER w
@@ -2075,8 +2026,8 @@ object EventOps {
                 CAST(sum(ov_us) AS BIGINT) AS overlap_us_sum,
                 CAST(sum(ov_us) AS BIGINT) / 1000000.0 AS overlap_s
          FROM pairs GROUP BY b_start_hr, b_end_hr
-         ORDER BY b_start_hr""",
-    "q_events_bursts" ->
+         ORDER BY b_start_hr"""),
+    Query("q_events_bursts", bursts,
       """WITH hourly AS (
            SELECT epoch_us(ts) // 3600000000 AS hr, count(*) AS c
            FROM events GROUP BY hr),
@@ -2092,8 +2043,8 @@ object EventOps {
            FROM flagged)
          SELECT min(hr) AS start_hr, max(hr) AS end_hr,
                 count(*) AS n_hours, max(c) AS peak
-         FROM grp GROUP BY grp ORDER BY start_hr""",
-    "q_events_seasonality" ->
+         FROM grp GROUP BY grp ORDER BY start_hr"""),
+    Query("q_events_seasonality", seasonality,
       """WITH b AS (
            SELECT (epoch_us(ts) // 86400000000 + 4) % 7 AS dow,
                   (epoch_us(ts) // 3600000000) % 24 AS hod
@@ -2103,8 +2054,8 @@ object EventOps {
                 floor((CAST(count(*) AS DOUBLE) / tot) * 1000000 + 0.5)
                   / 1000000.0 AS share
          FROM b CROSS JOIN tot
-         GROUP BY dow, hod, tot ORDER BY dow, hod""",
-    "q_events_logrank" ->
+         GROUP BY dow, hod, tot ORDER BY dow, hod"""),
+    Query("q_events_logrank", logrank,
       """WITH RECURSIVE u AS (
            SELECT user_id,
                   min(epoch_us(ts) // 86400000000) AS first_day,
@@ -2160,8 +2111,8 @@ object EventOps {
                 floor(((rec.oa - rec.ea) * (rec.oa - rec.ea) / rec.v)
                   * 1000000 + 0.5) / 1000000.0 AS chi2
          FROM rec CROSS JOIN tot
-         WHERE rec.rn = (SELECT max(rn) FROM ds)""",
-    "q_events_survival" ->
+         WHERE rec.rn = (SELECT max(rn) FROM ds)"""),
+    Query("q_events_survival", survival,
       """WITH RECURSIVE u AS (
            SELECT user_id,
                   min(epoch_us(ts) // 86400000000) AS first_day,
@@ -2198,8 +2149,8 @@ object EventOps {
                 cen AS n_censored,
                 floor(hazard * 1000000 + 0.5) / 1000000.0 AS hazard,
                 floor(surv * 1000000 + 0.5) / 1000000.0 AS survival
-         FROM rec ORDER BY t""",
-    "q_events_interarrival" ->
+         FROM rec ORDER BY t"""),
+    Query("q_events_interarrival", interarrival,
       """WITH ev AS (
            SELECT user_id, event_type, event_id,
                   epoch_us(ts) AS ts_us
@@ -2218,8 +2169,8 @@ object EventOps {
                 floor((quantile_cont(gap_us, 0.95) / 1000000.0)
                   * 100 + 0.5) / 100.0 AS p95_sec
          FROM g WHERE gap_us IS NOT NULL
-         GROUP BY event_type ORDER BY event_type""",
-    "q_orders_gap" ->
+         GROUP BY event_type ORDER BY event_type"""),
+    Query("q_orders_gap", orderGaps,
       """WITH d AS (
            SELECT o_custkey, o_orderkey,
                   epoch(o_orderdate)::BIGINT // 86400 AS day_num
@@ -2234,8 +2185,8 @@ object EventOps {
                   AS p50_days,
                 floor(quantile_cont(gap, 0.9) * 100 + 0.5) / 100.0
                   AS p90_days
-         FROM g WHERE gap IS NOT NULL""",
-    "q_events_rolling_uniques" ->
+         FROM g WHERE gap IS NOT NULL"""),
+    Query("q_events_rolling_uniques", rollingUniques,
       """WITH du AS (
            SELECT DISTINCT epoch_us(ts) // 86400000000 AS day_num, user_id
            FROM events),
@@ -2245,8 +2196,8 @@ object EventOps {
                 count(DISTINCT user_id)
                   FILTER (day_num = day) AS uniques_1d
          FROM du JOIN spine ON day_num >= day - 6 AND day_num <= day
-         GROUP BY day ORDER BY day""",
-    "q_events_funnel_time" ->
+         GROUP BY day ORDER BY day"""),
+    Query("q_events_funnel_time", funnelTime,
       """WITH ev AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us
                      FROM events),
          signup AS (SELECT user_id, min(ts_us) AS s_us
@@ -2263,8 +2214,8 @@ object EventOps {
                   AS p50_s,
                 floor(quantile_cont(lat_s, 0.9) * 100 + 0.5) / 100.0
                   AS p90_s
-         FROM lat""",
-    "q_events_attribution" ->
+         FROM lat"""),
+    Query("q_events_attribution", attribution,
       """WITH ev AS (SELECT user_id, event_id, event_type, value,
                             epoch_us(ts) AS ts_us FROM events),
          p AS (SELECT user_id, event_id AS p_id, ts_us AS p_us, value
@@ -2280,8 +2231,8 @@ object EventOps {
          SELECT channel, count(*) AS n_credits,
                 floor(sum(v / n_touch) * 100 + 0.5) / 100.0 AS credited
          FROM pairs JOIN np USING (p_id)
-         GROUP BY channel ORDER BY channel""",
-    "q_events_session_stats" ->
+         GROUP BY channel ORDER BY channel""", cap = 6),
+    Query("q_events_session_stats", sessionStats,
       """WITH flagged AS (
            SELECT user_id, event_id, epoch_us(ts) AS ts_us,
                   CASE WHEN epoch_us(ts) - lag(epoch_us(ts), 1) OVER w
@@ -2306,8 +2257,8 @@ object EventOps {
                   / count(*)) * 1000000 + 0.5) / 1000000.0 AS bounce_rate,
                 floor((avg((end_us - start_us) / 1000000.0)) * 100 + 0.5)
                   / 100.0 AS avg_dur_s
-         FROM sess GROUP BY day_num ORDER BY day_num""",
-    "q_events_path_topk" ->
+         FROM sess GROUP BY day_num ORDER BY day_num"""),
+    Query("q_events_path_topk", pathTopk,
       """WITH seq AS (
            SELECT event_type AS t1,
                   lead(event_type, 1) OVER w AS t2,
@@ -2318,8 +2269,8 @@ object EventOps {
          SELECT t1, t2, t3, count(*) AS cnt
          FROM seq WHERE t2 IS NOT NULL AND t3 IS NOT NULL
          GROUP BY t1, t2, t3
-         ORDER BY cnt DESC, t1, t2, t3 LIMIT 10""",
-    "q_events_rolling_7d" ->
+         ORDER BY cnt DESC, t1, t2, t3 LIMIT 10"""),
+    Query("q_events_rolling_7d", rolling7d,
       """WITH daily AS (
            SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
                   count(*) AS n, sum(value) AS v
@@ -2335,8 +2286,8 @@ object EventOps {
                 floor((sum(v) OVER (ORDER BY dnum
                   RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)) * 100 + 0.5)
                   / 100.0 AS v_7d
-         FROM dd ORDER BY day""",
-    "q_events_dau_mau" ->
+         FROM dd ORDER BY day"""),
+    Query("q_events_dau_mau", dauMau,
       """WITH e AS (SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
                            date_trunc('month', ts) AS month, user_id
                     FROM events),
@@ -2346,8 +2297,8 @@ object EventOps {
                  FROM e GROUP BY month)
          SELECT day, dau.dau, mau.mau, dau.dau / mau.mau AS stickiness
          FROM dau JOIN mau USING (month)
-         ORDER BY day""",
-    "q_events_cdc_apply" ->
+         ORDER BY day"""),
+    Query("q_events_cdc_apply", cdcApply,
       """WITH ranked AS (
            SELECT user_id, event_id, event_type, value,
                   row_number() OVER (PARTITION BY user_id
@@ -2355,8 +2306,8 @@ object EventOps {
            FROM events)
          SELECT user_id, event_id, event_type, value
          FROM ranked WHERE rn = 1 AND event_type <> 'purchase'
-         ORDER BY user_id""",
-    "q_events_anomaly" ->
+         ORDER BY user_id"""),
+    Query("q_events_anomaly", anomaly,
       """WITH st AS (SELECT event_type, avg(value) AS mu,
                             stddev_samp(value) AS sigma
                      FROM events GROUP BY event_type)
@@ -2366,10 +2317,10 @@ object EventOps {
          FROM events JOIN st USING (event_type)
          WHERE abs(floor(((value - mu) / sigma) * 1000000 + 0.5)
                    / 1000000.0) > 2.5
-         ORDER BY event_id""",
+         ORDER BY event_id"""),
     // scd2's run-length chain over NON-purchase activity, then the
     // point-in-time LEFT join of purchases into [from, to)
-    "q_join_temporal" ->
+    Query("q_join_temporal", joinTemporal,
       """WITH act AS (
            SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us
            FROM events WHERE event_type <> 'purchase'),
@@ -2405,8 +2356,8 @@ object EventOps {
          SELECT status, CAST(count(*) AS BIGINT) AS n_purchases,
                 floor((avg(value)) * 1000000 + 0.5) / 1000000.0
                   AS avg_value
-         FROM j GROUP BY status ORDER BY status""",
-    "q_events_scd2" ->
+         FROM j GROUP BY status ORDER BY status"""),
+    Query("q_events_scd2", scd2,
       """WITH flagged AS (
            SELECT user_id, event_id, event_type, ts,
                   epoch_us(ts) AS ts_us,
@@ -2429,8 +2380,8 @@ object EventOps {
                 lead(valid_from, 1) OVER (PARTITION BY user_id ORDER BY run)
                   AS valid_to,
                 n_events
-         FROM collapsed ORDER BY user_id, run""",
-    "q_events_markov" ->
+         FROM collapsed ORDER BY user_id, run"""),
+    Query("q_events_markov", markov,
       """WITH seq AS (
            SELECT event_type AS cur,
                   lead(event_type, 1) OVER (PARTITION BY user_id
@@ -2441,8 +2392,8 @@ object EventOps {
          SELECT cur, nxt, n,
                 floor((n / CAST(sum(n) OVER (PARTITION BY cur) AS DOUBLE))
                       * 1000000 + 0.5) / 1000000.0 AS p
-         FROM g ORDER BY cur, nxt""",
-    "q_events_funnel" ->
+         FROM g ORDER BY cur, nxt"""),
+    Query("q_events_funnel", funnel,
       """WITH u AS (
            SELECT user_id,
                   min(CASE WHEN event_type = 'view'
@@ -2467,8 +2418,8 @@ object EventOps {
                 CASE WHEN nc > 0 THEN
                   floor((np / nc) * 1000000 + 0.5) / 1000000.0 END
                   AS conv_purchase
-         FROM n""",
-    "q_events_retention" ->
+         FROM n"""),
+    Query("q_events_retention", retention,
       """WITH days AS (
            SELECT DISTINCT user_id,
                   CAST(date_trunc('day', ts) AS TIMESTAMP) AS day
@@ -2482,28 +2433,28 @@ object EventOps {
          FROM days d JOIN cohort USING (user_id)
          WHERE date_diff('day', cohort_day, day) <= 7
          GROUP BY cohort_day, day_offset
-         ORDER BY cohort_day, day_offset""",
-    "q_agg_pivot" ->
+         ORDER BY cohort_day, day_offset"""),
+    Query("q_agg_pivot", pivot,
       """SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
                 count(*) FILTER (WHERE event_type = 'click') AS click,
                 count(*) FILTER (WHERE event_type = 'view') AS view,
                 count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
                 count(*) FILTER (WHERE event_type = 'signup') AS signup,
                 count(*) FILTER (WHERE event_type = 'error') AS error
-         FROM events GROUP BY day ORDER BY day""",
-    "q_stream_tumbling" ->
+         FROM events GROUP BY day ORDER BY day"""),
+    Query("q_stream_tumbling", tumbling,
       """SELECT date_trunc('hour', ts) AS h, event_type, count(*) AS cnt,
                 floor((sum(value)) * 100 + 0.5) / 100.0 AS total
-         FROM events GROUP BY h, event_type ORDER BY h, event_type""",
+         FROM events GROUP BY h, event_type ORDER BY h, event_type"""),
     // Each event belongs to the 4 epoch-aligned 15-min-slide windows whose
     // start is within the preceding hour: start = floor15(ts) - k*15min.
-    "q_stream_sliding" ->
+    Query("q_stream_sliding", sliding,
       """SELECT make_timestamp((epoch_us(ts) // 900000000 - k) * 900000000)
                   AS ws,
                 event_type, count(*) AS cnt
          FROM events, UNNEST([0, 1, 2, 3]) AS t(k)
-         GROUP BY ws, event_type ORDER BY ws, event_type""",
-    "q_stream_left_join" ->
+         GROUP BY ws, event_type ORDER BY ws, event_type"""),
+    Query("q_stream_left_join", intervalJoinLeft,
       """SELECT c.user_id AS user_id, c.event_id AS click_id,
                 coalesce(p.event_id, -1) AS purchase_id,
                 coalesce(epoch_us(p.ts) - epoch_us(c.ts), -1) AS lag_us
@@ -2512,8 +2463,8 @@ object EventOps {
            ON p.user_id = c.user_id
           AND epoch_us(p.ts) >= epoch_us(c.ts)
           AND epoch_us(p.ts) <= epoch_us(c.ts) + 1800000000
-         ORDER BY user_id, click_id, purchase_id""",
-    "q_stream_interval_join" ->
+         ORDER BY user_id, click_id, purchase_id"""),
+    Query("q_stream_interval_join", intervalJoin,
       """SELECT c.user_id AS user_id, c.event_id AS click_id,
                 p.event_id AS purchase_id,
                 epoch_us(p.ts) - epoch_us(c.ts) AS lag_us,
@@ -2522,8 +2473,8 @@ object EventOps {
          WHERE c.event_type = 'click' AND p.event_type = 'purchase'
            AND epoch_us(p.ts) >= epoch_us(c.ts)
            AND epoch_us(p.ts) <= epoch_us(c.ts) + 1800000000
-         ORDER BY user_id, click_id, purchase_id""",
-    "q_stream_session" ->
+         ORDER BY user_id, click_id, purchase_id"""),
+    Query("q_stream_session", session,
       """WITH flagged AS (
            SELECT user_id, event_id, ts, value, epoch_us(ts) AS ts_us,
                   CASE WHEN epoch_us(ts) - lag(epoch_us(ts), 1) OVER w
@@ -2541,5 +2492,7 @@ object EventOps {
          SELECT user_id, sess, min(ts) AS session_start,
                 max(ts) AS session_end, count(*) AS n_events,
                 floor((sum(value)) * 100 + 0.5) / 100.0 AS session_value
-         FROM sessed GROUP BY user_id, sess ORDER BY user_id, sess""")
+         FROM sessed GROUP BY user_id, sess ORDER BY user_id, sess"""))
+
+  val queries: Map[String, Q] = Query.builders(declared)
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
+import graft.Query.Q
 import graft.Par.r6
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
@@ -15,8 +16,6 @@ import org.apache.spark.sql.functions._
   * cosine queries in VectorOps use codegen'd higher-order functions instead.
   */
 object FunctionOps {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Typed Aggregator: numerically-stable (sum,count) mean. Matches plain
     * avg() on the oracle side — the point is the Aggregator machinery. */
   object MeanAgg extends Aggregator[Double, (Double, Long), Double] {
@@ -60,22 +59,20 @@ object FunctionOps {
       .orderBy("event_type")
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_udf_scalar" -> udfScalar,
-    "q_udaf_aggregator" -> udafAggregator)
-
-  val oracle: Map[String, String] = Map(
-    "q_udf_scalar" ->
+  val declared: Seq[Query] = Seq(
+    Query("q_udf_scalar", udfScalar,
       """SELECT a.vec_id,
                 floor((list_inner_product(CAST(a.embedding AS DOUBLE[]),
                                           CAST(b.embedding AS DOUBLE[])))
                       * 1000000 + 0.5) / 1000000.0 AS sim_next
          FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1
-         ORDER BY a.vec_id""",
-    "q_udaf_aggregator" ->
+         ORDER BY a.vec_id"""),
+    Query("q_udaf_aggregator", udafAggregator,
       """SELECT event_type,
                 floor((avg(value)) * 1000000 + 0.5) / 1000000.0
                   AS mean_value,
                 count(*) AS cnt
-         FROM events GROUP BY event_type ORDER BY event_type""")
+         FROM events GROUP BY event_type ORDER BY event_type"""))
+
+  val queries: Map[String, Q] = Query.builders(declared)
 }

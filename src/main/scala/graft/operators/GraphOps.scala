@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.{Artifact, Tables}
+import graft.{Artifact, Query, Tables}
+import graft.Query.Q
 import graft.Par.r6
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -20,8 +21,6 @@ import org.apache.spark.sql.functions._
   * invalidation).
   */
 object GraphOps {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Builds and MATERIALIZES a frame with AQE disabled, restoring the
     * session conf after. For the bounded layered-BFS keys (closeness,
     * reach) AQE is a measured net loss: every layer's exchange becomes
@@ -744,32 +743,14 @@ object GraphOps {
       .limit(20)
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_graph_ra_index" -> raIndex,
-    "q_graph_hits" -> hits,
-    "q_graph_clustering" -> clustering,
-    "q_graph_kcore" -> kcore,
-    "q_graph_assortativity" -> assortativity,
-    "q_graph_reach" -> reach,
-    "q_graph_closeness" -> closeness,
-    "q_graph_local_bridges" -> localBridges,
-    "q_graph_degree_dist" -> degreeDist,
-    "q_graph_components" -> components,
-    "q_graph_lpa" -> lpa,
-    "q_graph_modularity" -> modularity,
-    "q_graph_link_jaccard" -> linkJaccard,
-    "q_graph_pagerank" -> pagerank,
-    "q_graph_triangles" -> triangles,
-    "q_basket_rules" -> basketRules)
-
   private val prIterSql: String => String = prev =>
     s"""SELECT dst AS node,
                floor((0.15 + 0.85 * sum(pr / deg)) * 1000000 + 0.5)
                  / 1000000.0 AS pr
         FROM e JOIN $prev ON e.src = $prev.node GROUP BY dst"""
 
-  val oracle: Map[String, String] = Map(
-    "q_graph_ra_index" ->
+  val declared: Seq[Query] = Seq(
+    Query("q_graph_ra_index", raIndex,
       """WITH op AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
                      FROM lineitem),
          e AS (SELECT a.pk AS x, b.pk AS y
@@ -787,8 +768,8 @@ object GraphOps {
          SELECT a, c, cn, ra_micro FROM cn
          WHERE NOT EXISTS (SELECT 1 FROM e
                            WHERE e.x = cn.a AND e.y = cn.c)
-         ORDER BY ra_micro DESC, a, c LIMIT 20""",
-    "q_graph_hits" ->
+         ORDER BY ra_micro DESC, a, c LIMIT 20"""),
+    Query("q_graph_hits", hits,
       """WITH ed AS (
            SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS c,
                            'p' || CAST(l_partkey AS VARCHAR) AS p
@@ -821,8 +802,8 @@ object GraphOps {
            UNION ALL
            (SELECT 'hub' AS role, c AS node, h / 1000000.0 AS score
             FROM h2 ORDER BY h DESC, c LIMIT 20))
-         ORDER BY role, score DESC, node""",
-    "q_graph_clustering" ->
+         ORDER BY role, score DESC, node""", cap = 11),
+    Query("q_graph_clustering", clustering,
       """WITH op AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
                      FROM lineitem),
          e AS (SELECT a.pk AS x, b.pk AS y
@@ -847,8 +828,8 @@ object GraphOps {
                             ELSE 0.0 END) * 1000000 + 0.5)
                   / 1000000.0 AS lcc
          FROM deg LEFT JOIN tc ON deg.part = tc.part
-         ORDER BY deg.part""",
-    "q_graph_kcore" ->
+         ORDER BY deg.part"""),
+    Query("q_graph_kcore", kcore,
       """WITH op AS (
            SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
          e AS (SELECT a.pk AS x, b.pk AS y
@@ -865,8 +846,8 @@ object GraphOps {
          u3 AS (SELECT u.x, u.y FROM u2 u
                 JOIN k3 a ON u.x = a.v JOIN k3 b ON u.y = b.v)
          SELECT x AS part, CAST(count(*) AS BIGINT) AS deg
-         FROM u3 GROUP BY x ORDER BY part""",
-    "q_graph_assortativity" ->
+         FROM u3 GROUP BY x ORDER BY part"""),
+    Query("q_graph_assortativity", assortativity,
       """WITH op AS (
            SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
          e AS (SELECT a.pk AS x, b.pk AS y
@@ -891,10 +872,10 @@ object GraphOps {
                             * CAST(sum(dy * dy) AS DOUBLE)
                           - CAST(sum(dy) AS DOUBLE) * CAST(sum(dy) AS DOUBLE))))
                   * 1000000 + 0.5) / 1000000.0 AS assortativity
-         FROM sym""",
+         FROM sym"""),
     // zero-triangle edges via NOT EXISTS over the wedge join; rank by
     // exact degree sums
-    "q_graph_local_bridges" ->
+    Query("q_graph_local_bridges", localBridges,
       """WITH op AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
                      FROM lineitem),
          e AS (SELECT a.pk AS x, b.pk AS y
@@ -909,10 +890,10 @@ object GraphOps {
          WHERE NOT EXISTS (
            SELECT 1 FROM und u1 JOIN und u2 ON u1.y = u2.x
            WHERE u1.x = e.x AND u2.y = e.y)
-         ORDER BY dx.deg + dy.deg DESC, e.x, e.y LIMIT 20""",
+         ORDER BY dx.deg + dy.deg DESC, e.x, e.y LIMIT 20""", cap = 8),
     // reach's recursive BFS, one lane per landmark; centrality forms
     // are pure integer-census arithmetic in shared text
-    "q_graph_closeness" ->
+    Query("q_graph_closeness", closeness,
       """WITH RECURSIVE op AS (
            SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
          e AS (SELECT a.pk AS x, b.pk AS y
@@ -939,8 +920,8 @@ object GraphOps {
                       * 1000000 + 0.5) / 1000000.0 AS closeness,
                 floor((n1 / 1.0 + n2 / 2.0 + n3 / 3.0 + n4 / 4.0)
                       * 1000000 + 0.5) / 1000000.0 AS harmonic
-         FROM cnt ORDER BY lm""",
-    "q_graph_reach" ->
+         FROM cnt ORDER BY lm""", cap = 9),
+    Query("q_graph_reach", reach,
       """WITH RECURSIVE op AS (
            SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
          e AS (SELECT a.pk AS x, b.pk AS y
@@ -954,8 +935,8 @@ object GraphOps {
            SELECT u.y, r.d + 1 FROM reach r JOIN und u ON u.x = r.v
            WHERE r.d < 4)
          SELECT v AS part, min(d) AS hops
-         FROM reach GROUP BY v ORDER BY part""",
-    "q_graph_degree_dist" ->
+         FROM reach GROUP BY v ORDER BY part""", cap = 9),
+    Query("q_graph_degree_dist", degreeDist,
       """WITH op AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
                      FROM lineitem),
          e AS (SELECT a.pk AS x, b.pk AS y
@@ -964,8 +945,8 @@ object GraphOps {
          und AS (SELECT x AS v FROM e UNION ALL SELECT y AS v FROM e),
          deg AS (SELECT v, count(*) AS degree FROM und GROUP BY v)
          SELECT degree, count(*) AS n_nodes
-         FROM deg GROUP BY degree ORDER BY degree""",
-    "q_graph_modularity" ->
+         FROM deg GROUP BY degree ORDER BY degree"""),
+    Query("q_graph_modularity", modularity,
       """WITH RECURSIVE op AS (
            SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
          e AS (SELECT a.pk AS x, b.pk AS y
@@ -997,11 +978,11 @@ object GraphOps {
                        - (deg_sum / (2.0 * m)) * (deg_sum / (2.0 * m)))
                   * 1000000 + 0.5) / 1000000.0 AS contribution
          FROM ds JOIN intra USING (component), m
-         ORDER BY component""",
+         ORDER BY component""", cap = 13),
     // Three synchronous min-label supersteps as chained CTEs (the
     // markov piIter pattern) — argmax by (count DESC, label ASC)
     // row_number, exactly the Spark window.
-    "q_graph_lpa" -> {
+    Query("q_graph_lpa", lpa, {
       def round(prev: String, r: Int): String =
         s"""l$r AS (SELECT v, lbl FROM (
                SELECT u.v AS v, l.lbl AS lbl,
@@ -1021,8 +1002,8 @@ object GraphOps {
          ${(1 to 3).map(r => round(s"l${r - 1}", r)).mkString(",\n")}
          SELECT lbl AS community, CAST(count(*) AS BIGINT) AS n_members
          FROM l3 GROUP BY lbl ORDER BY community"""
-    },
-    "q_graph_components" ->
+    }, cap = 14),
+    Query("q_graph_components", components,
       """WITH RECURSIVE op AS (
            SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
          e AS (SELECT a.pk AS x, b.pk AS y
@@ -1035,8 +1016,8 @@ object GraphOps {
            UNION
            SELECT r.src, u.b FROM reach r JOIN und u ON u.a = r.dst)
          SELECT src AS part, least(src, min(dst)) AS component
-         FROM reach GROUP BY src ORDER BY part""",
-    "q_graph_link_jaccard" ->
+         FROM reach GROUP BY src ORDER BY part"""),
+    Query("q_graph_link_jaccard", linkJaccard,
       """WITH op AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
                      FROM lineitem),
          e AS (SELECT a.pk AS x, b.pk AS y
@@ -1056,8 +1037,8 @@ object GraphOps {
          FROM cand
          JOIN deg da ON da.x = cand.a
          JOIN deg dc ON dc.x = cand.c
-         ORDER BY jacc DESC, a, c LIMIT 20""",
-    "q_graph_pagerank" ->
+         ORDER BY jacc DESC, a, c LIMIT 20""", cap = 8),
+    Query("q_graph_pagerank", pagerank,
       s"""WITH ed AS (
            SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS src,
                            'p' || CAST(l_partkey AS VARCHAR) AS dst
@@ -1069,8 +1050,8 @@ object GraphOps {
          r0 AS (SELECT src AS node, CAST(1.0 AS DOUBLE) AS pr FROM deg),
          r1 AS (${prIterSql("r0")}),
          r2 AS (${prIterSql("r1")})
-         SELECT node, pr FROM r2 ORDER BY pr DESC, node LIMIT 50""",
-    "q_basket_rules" ->
+         SELECT node, pr FROM r2 ORDER BY pr DESC, node LIMIT 50""", cap = 7),
+    Query("q_basket_rules", basketRules,
       """WITH op AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
                      FROM lineitem),
          n AS (SELECT count(DISTINCT ok) AS n_orders FROM op),
@@ -1086,8 +1067,8 @@ object GraphOps {
          JOIN isup sx ON sx.pk = directed.x
          JOIN isup sy ON sy.pk = directed.y
          CROSS JOIN n
-         ORDER BY lift DESC, x, y LIMIT 20""",
-    "q_graph_triangles" ->
+         ORDER BY lift DESC, x, y LIMIT 20""", cap = 9),
+    Query("q_graph_triangles", triangles,
       """WITH op AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
                      FROM lineitem),
          e AS (SELECT a.pk AS x, b.pk AS y
@@ -1097,5 +1078,7 @@ object GraphOps {
          FROM e e1
          JOIN e e2 ON e1.y = e2.x
          JOIN e e3 ON e3.x = e1.x AND e3.y = e2.y
-         ORDER BY a, b, c""")
+         ORDER BY a, b, c"""))
+
+  val queries: Map[String, Q] = Query.builders(declared)
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.{Artifact, Tables}
+import graft.{Artifact, Query, Tables}
+import graft.Query.Q
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,8 +17,6 @@ import org.apache.spark.sql.functions._
   * real codecs drop in behind the same trait.
   */
 object MultimodalOps {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Session-lifetime cache of the 64-byte block inventory
     * (doc_id, bsig, blen) — the shared artifact behind
     * q_multimodal_chunk_dedup / q_multimodal_block_jaccard /
@@ -332,23 +331,12 @@ object MultimodalOps {
       .orderBy("da", "db")
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_multimodal_scene_cut" -> multimodalSceneCut,
-    "q_multimodal_phash_hamming" -> multimodalPhashHamming,
-    "q_multimodal_resize" -> multimodalResize,
-    "q_multimodal_phash" -> multimodalPhash,
-    "q_multimodal_frame_sample" -> multimodalFrameSample,
-    "q_multimodal_storage_audit" -> multimodalStorageAudit,
-    "q_multimodal_features" -> multimodalFeatures,
-    "q_multimodal_chunk_dedup" -> multimodalChunkDedup,
-    "q_multimodal_block_jaccard" -> multimodalBlockJaccard)
-
-  val oracle: Map[String, String] = Map(
+  val declared: Seq[Query] = Seq(
     // phash's bit build → packed 32-bit halves + 16-bit band ints →
     // band-bucket candidates (DISTINCT here ≡ the engine's
     // first-collision emission: same pair set) → bit_count(xor)
     // hamming ≤ 8
-    "q_multimodal_phash_hamming" ->
+    Query("q_multimodal_phash_hamming", multimodalPhashHamming,
       """WITH px AS (
            SELECT doc_id, i,
                   ascii(substring(text, CAST(i AS INTEGER), 1)) AS v
@@ -390,11 +378,11 @@ object MultimodalOps {
                              + bit_count(xor(ah2, bh2)) AS INTEGER)
                           AS hd
                  FROM cand)
-         SELECT da, db, hd FROM ham WHERE hd <= 8 ORDER BY da, db""",
+         SELECT da, db, hd FROM ham WHERE hd <= 8 ORDER BY da, db""", cap = 5),
     // same consecutive-frame comparisons, indexed by the earlier frame
     // (Spark's lag indexes by the later one — the diff SET per asset is
     // identical and only the census is emitted)
-    "q_multimodal_scene_cut" ->
+    Query("q_multimodal_scene_cut", multimodalSceneCut,
       """WITH d AS (
            SELECT doc_id, text, length(text) // 64 AS nf
            FROM documents WHERE length(text) >= 128),
@@ -417,8 +405,8 @@ object MultimodalOps {
                   AS n_cuts,
                 floor((avg(df / 64.0)) * 1000000 + 0.5) / 1000000.0
                   AS avg_diff_ratio
-         FROM diff GROUP BY doc_id ORDER BY doc_id""",
-    "q_multimodal_resize" ->
+         FROM diff GROUP BY doc_id ORDER BY doc_id"""),
+    Query("q_multimodal_resize", multimodalResize,
       """WITH px AS (
            SELECT doc_id, i,
                   (i // 8) // 2 * 4 + (i % 8) // 2 AS cell,
@@ -428,8 +416,8 @@ object MultimodalOps {
            WHERE doc_id < 30 AND length(text) >= 64)
          SELECT doc_id, cell, CAST(sum(v) // 4 AS BIGINT) AS pooled
          FROM px GROUP BY doc_id, cell
-         ORDER BY doc_id, cell""",
-    "q_multimodal_phash" ->
+         ORDER BY doc_id, cell"""),
+    Query("q_multimodal_phash", multimodalPhash,
       """WITH px AS (
            SELECT doc_id, i, ascii(substring(text, i, 1)) AS v
            FROM documents
@@ -446,8 +434,8 @@ object MultimodalOps {
          SELECT ahash, CAST(count(*) AS BIGINT) AS n_assets,
                 min(doc_id) AS rep_doc
          FROM bits GROUP BY ahash HAVING count(*) >= 2
-         ORDER BY ahash""",
-    "q_multimodal_frame_sample" ->
+         ORDER BY ahash"""),
+    Query("q_multimodal_frame_sample", multimodalFrameSample,
       """WITH a AS (SELECT doc_id, text,
                            CAST(length(text) // 64 AS INT) AS n_frames
                     FROM documents WHERE length(text) >= 64),
@@ -457,8 +445,8 @@ object MultimodalOps {
                FROM a)
          SELECT doc_id, n_frames, frame_idx,
                 md5(substring(text, frame_idx * 64 + 1, 64)) AS frame_sig
-         FROM f ORDER BY doc_id, frame_idx""",
-    "q_multimodal_storage_audit" ->
+         FROM f ORDER BY doc_id, frame_idx"""),
+    Query("q_multimodal_storage_audit", multimodalStorageAudit,
       """WITH blocks AS (
            SELECT md5(substring(text, blk * 64 + 1, 64)) AS bsig,
                   least(64, length(text) - blk * 64) AS blen
@@ -478,8 +466,8 @@ object MultimodalOps {
                 bytes_unique,
                 floor((CAST(bytes_total AS DOUBLE) / bytes_unique)
                   * 1000000 + 0.5) / 1000000.0 AS dedup_ratio
-         FROM tot CROSS JOIN bl CROSS JOIN un""",
-    "q_multimodal_block_jaccard" ->
+         FROM tot CROSS JOIN bl CROSS JOIN un""", cap = 6),
+    Query("q_multimodal_block_jaccard", multimodalBlockJaccard,
       """WITH b AS (
            SELECT DISTINCT doc_id,
                   md5(substring(text, blk * 64 + 1, 64)) AS bsig
@@ -496,8 +484,8 @@ object MultimodalOps {
          JOIN nb na ON na.doc_id = pr.a
          JOIN nb nbb ON nbb.doc_id = pr.b
          WHERE inter / (na.n + nbb.n - inter) >= 0.5
-         ORDER BY a, b""",
-    "q_multimodal_chunk_dedup" ->
+         ORDER BY a, b""", cap = 10),
+    Query("q_multimodal_chunk_dedup", multimodalChunkDedup,
       """SELECT bsig, count(*) AS occurrences,
                 count(DISTINCT doc_id) AS n_assets,
                 min(doc_id) AS first_doc
@@ -508,8 +496,8 @@ object MultimodalOps {
                               (length(text) - 1) // 64)) AS blk
                      FROM documents WHERE length(text) > 0) t) u
          GROUP BY bsig HAVING count(DISTINCT doc_id) > 1
-         ORDER BY bsig""",
-    "q_multimodal_features" ->
+         ORDER BY bsig"""),
+    Query("q_multimodal_features", multimodalFeatures,
       """SELECT doc_id,
                 CAST(octet_length(encode(text)) AS INTEGER) AS n_bytes,
                 CAST(octet_length(encode(text)) % 64 + 16 AS INTEGER)
@@ -518,5 +506,7 @@ object MultimodalOps {
                   AS height,
                 1 AS channels,
                 md5(text) AS sig
-         FROM documents ORDER BY doc_id""")
+         FROM documents ORDER BY doc_id"""))
+
+  val queries: Map[String, Q] = Query.builders(declared)
 }

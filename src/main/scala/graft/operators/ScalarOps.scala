@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
+import graft.Query.Q
 import graft.Par.{r2, r6}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,8 +15,6 @@ import org.apache.spark.sql.functions._
   * length/year/levenshtein/etc — the oracle SQL casts to Spark's widths.
   */
 object ScalarOps {
-  type Q = (SparkSession, String) => DataFrame
-
   /** lower/upper/trim/substring/concat/length/replace over part names. */
   private val strFuncs: Q = (s, d) =>
     Tables.part(s, d)
@@ -120,45 +119,34 @@ object ScalarOps {
         md5(concat_ws("|", col("lang"), col("source"))).as("meta_fp"))
       .orderBy("doc_id")
 
-  val queries: Map[String, Q] = Map(
-    "q_str_funcs" -> strFuncs,
-    "q_str_regex" -> strRegex,
-    "q_str_levenshtein" -> strLevenshtein,
-    "q_str_split_explode" -> strSplitExplode,
-    "q_date_funcs" -> dateFuncs,
-    "q_math_funcs" -> mathFuncs,
-    "q_array_funcs" -> arrayFuncs,
-    "q_json_extract" -> jsonExtract,
-    "q_hash_md5" -> hashMd5)
-
-  val oracle: Map[String, String] = Map(
-    "q_str_funcs" ->
+  val declared: Seq[Query] = Seq(
+    Query("q_str_funcs", strFuncs,
       """SELECT p_partkey, lower(p_name) AS lo, upper(p_brand) AS up,
                 trim('  ' || p_name || '  ') AS trimmed,
                 substring(p_name, 1, 5) AS sub5,
                 concat_ws('|', p_brand, p_type) AS joined,
                 CAST(length(p_name) AS INTEGER) AS len,
                 replace(p_name, ' ', '_') AS snake
-         FROM part ORDER BY p_partkey""",
-    "q_str_regex" ->
+         FROM part ORDER BY p_partkey"""),
+    Query("q_str_regex", strRegex,
       """SELECT p_partkey,
                 CAST(regexp_extract(p_brand, 'Brand#([0-9]+)', 1) AS INTEGER)
                   AS brand_no,
                 regexp_replace(p_type, '[AEIOU]', '', 'g') AS devoweled,
                 regexp_matches(p_type, '^(PROMO|ECONOMY)') AS is_cheap
-         FROM part WHERE p_name LIKE '% %' ORDER BY p_partkey""",
-    "q_str_levenshtein" ->
+         FROM part WHERE p_name LIKE '% %' ORDER BY p_partkey"""),
+    Query("q_str_levenshtein", strLevenshtein,
       """SELECT p_partkey,
                 CAST(levenshtein(p_name, p_type) AS INTEGER) AS dist,
                 CAST(levenshtein(p_brand, 'Brand#1') AS INTEGER) AS dist_ref
-         FROM part ORDER BY p_partkey""",
-    "q_str_split_explode" ->
+         FROM part ORDER BY p_partkey"""),
+    Query("q_str_split_explode", strSplitExplode,
       """SELECT doc_id,
                 CAST(unnest(generate_series(1, len(string_split(text, ' '))))
                      - 1 AS INTEGER) AS pos,
                 unnest(string_split(text, ' ')) AS token
-         FROM documents ORDER BY doc_id, pos""",
-    "q_date_funcs" ->
+         FROM documents ORDER BY doc_id, pos"""),
+    Query("q_date_funcs", dateFuncs,
       """SELECT o_orderkey,
                 CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS mon,
                 CAST(year(o_orderdate) AS INTEGER) AS yr,
@@ -167,8 +155,8 @@ object ScalarOps {
                 CAST(o_orderdate AS DATE) + 30 AS d30,
                 CAST(date_diff('day', DATE '1995-01-01', o_orderdate)
                      AS INTEGER) AS days_since
-         FROM orders ORDER BY o_orderkey""",
-    "q_math_funcs" ->
+         FROM orders ORDER BY o_orderkey"""),
+    Query("q_math_funcs", mathFuncs,
       """SELECT l_orderkey, l_linenumber,
                 floor((abs(-l_extendedprice)) * 100 + 0.5) / 100.0
                   AS abs_price,
@@ -181,8 +169,8 @@ object ScalarOps {
                 floor((pow(l_quantity, 2)) * 100 + 0.5) / 100.0 AS qty_sq,
                 l_orderkey % 7 AS key_mod
          FROM lineitem
-         ORDER BY l_orderkey, l_linenumber, abs_price, qty_ceil""",
-    "q_array_funcs" ->
+         ORDER BY l_orderkey, l_linenumber, abs_price, qty_ceil"""),
+    Query("q_array_funcs", arrayFuncs,
       """SELECT doc_id,
                 CAST(len(string_split(text, ' ')) AS INTEGER) AS n_toks,
                 array_to_string(list_sort(list_distinct(
@@ -190,16 +178,18 @@ object ScalarOps {
                 list_contains(string_split(text, ' '), 'the') AS has_the,
                 array_to_string(list_slice(string_split(text, ' '), 1, 3),
                                 ' ') AS first3
-         FROM documents ORDER BY doc_id""",
-    "q_json_extract" ->
+         FROM documents ORDER BY doc_id"""),
+    Query("q_json_extract", jsonExtract,
       """SELECT CAST(json_extract_string(props, '$.k') AS INTEGER) AS k,
                 count(*) AS cnt,
                 floor((avg(value)) * 1000000 + 0.5) / 1000000.0 AS avg_value
-         FROM events GROUP BY k ORDER BY k""",
-    "q_hash_md5" ->
+         FROM events GROUP BY k ORDER BY k"""),
+    Query("q_hash_md5", hashMd5,
       // concat_ws on both sides: null-skipping like Spark's, where '||'
       // would propagate NULL and diverge on nullable lang/source
       """SELECT doc_id, md5(text) AS fp,
                 md5(concat_ws('|', lang, source)) AS meta_fp
-         FROM documents ORDER BY doc_id""")
+         FROM documents ORDER BY doc_id"""))
+
+  val queries: Map[String, Q] = Query.builders(declared)
 }

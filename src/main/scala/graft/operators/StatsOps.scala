@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.{Artifact, Tables}
+import graft.{Artifact, Query, Tables}
+import graft.Query.Q
 import graft.Par.{r2, r6, sql => rsql}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -22,8 +23,6 @@ import org.apache.spark.sql.functions._
   * derived double is floor-parity-rounded at the declared boundary.
   */
 object StatsOps {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Pin a CALENDAR-BOUNDED frame to a LocalRelation (the MMR/
     * kmeansCentroids rule): |days|-sized censuses are bounded by the
     * calendar, not the corpus — ~30 rows here, a few thousand after
@@ -2652,72 +2651,6 @@ object StatsOps {
         (col("x2_r") > col("crit")).as("reject_global_null"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_privacy_dp_sum" -> dpSum,
-    "q_stats_fisher_combine" -> fisherCombine,
-    "q_stats_msprt" -> msprt,
-    "q_privacy_dp_quantile" -> dpQuantile,
-    "q_stats_did" -> did,
-    "q_stats_cooks_distance" -> cooksDistance,
-    "q_stats_pettitt" -> pettitt,
-    "q_privacy_k_anon" -> kAnon,
-    "q_privacy_dp_count" -> dpCount,
-    "q_privacy_l_diversity" -> lDiversity,
-    "q_ml_target_encode" -> targetEncode,
-    "q_ml_woe_iv" -> woeIv,
-    "q_stats_jarque_bera" -> jarqueBera,
-    "q_stats_dw" -> dw,
-    "q_stats_breusch_pagan" -> breuschPagan,
-    "q_stats_pacf" -> pacf,
-    "q_stats_cochran_armitage" -> cochranArmitage,
-    "q_stats_holm" -> holm,
-    "q_stats_kendall_tau" -> kendallTau,
-    "q_stats_rate_ratio" -> rateRatio,
-    "q_agg_argmax" -> aggArgmax,
-    "q_stats_wilcoxon" -> wilcoxonSigned,
-    "q_stats_capture_recapture" -> captureRecapture,
-    "q_stats_moments" -> moments,
-    "q_stats_cramers_v" -> cramersV,
-    "q_stats_tost" -> tost,
-    "q_stats_wilson_ci" -> wilsonCi,
-    "q_stats_hill_tail" -> hillTail,
-    "q_stats_seasonal_mk" -> seasonalMk,
-    "q_stats_granger" -> granger,
-    "q_stats_cuped" -> cuped,
-    "q_stats_power" -> power,
-    "q_stats_runs_test" -> runsTest,
-    "q_stats_anova" -> anova,
-    "q_eval_quantile_sample" -> evalQuantileSample,
-    "q_stats_dispersion" -> dispersion,
-    "q_stats_bootstrap" -> bootstrap,
-    "q_stats_decompose" -> decompose,
-    "q_stats_anomaly_stl" -> anomalyStl,
-    "q_stats_theil_sen" -> theilSen,
-    "q_stats_ewma" -> ewma,
-    "q_stats_jackknife" -> jackknife,
-    "q_stats_cusum" -> cusum,
-    "q_stats_changepoint" -> changepoint,
-    "q_sample_neyman" -> sampleNeyman,
-    "q_stats_winsorize" -> winsorize,
-    "q_stats_autocorr" -> autocorr,
-    "q_stats_gini" -> gini,
-    "q_stats_prop_test" -> propTest,
-    "q_stats_bh" -> bhFdr,
-    "q_stats_ks" -> ks,
-    "q_stats_benford" -> benford,
-    "q_stats_regression" -> regression,
-    "q_stats_mannwhitney" -> mannwhitney,
-    "q_stats_kruskal" -> kruskal,
-    "q_stats_spearman" -> spearman,
-    "q_stats_mann_kendall" -> mannKendall,
-    "q_stats_ttest" -> ttest,
-    "q_stats_chisq" -> chisq,
-    "q_stats_srm" -> srm,
-    "q_stats_levene" -> levene,
-    "q_stats_ljung_box" -> ljungBox,
-    "q_stats_entropy" -> entropy,
-    "q_stats_psi" -> psi,
-    "q_stats_mad" -> mad)
   // (psi is defined above the map — object vals initialize in
   // declaration order, so a forward reference here would be null)
 
@@ -2815,10 +2748,10 @@ object StatsOps {
   private val gSseF = s"($gCyy - $gB1 * $gC1y - $gB2 * $gC2y)"
   private val gSseR = s"($gCyy - $gC1y * $gC1y / $gC11)"
 
-  val oracle: Map[String, String] = Map(
+  val declared: Seq[Query] = Seq(
     // clip-then-noise: per-user cents capped at 10000, one seeded
     // Laplace draw (0x-cast here, conv in Spark), clip mass priced
-    "q_privacy_dp_sum" ->
+    Query("q_privacy_dp_sum", dpSum,
       s"""WITH per AS (
            SELECT user_id,
                   CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
@@ -2843,10 +2776,10 @@ object StatsOps {
                 CAST(1.0 AS DOUBLE) AS epsilon, sum_true_cents,
                 n_clipped, clipped_away_cents, noise_r,
                 ${rsql("sum_true_cents + noise_r", 1000000)} AS sum_dp_r
-         FROM nz""",
+         FROM nz"""),
     // same ksFamily text as bh/holm; pinned −2ln p terms, type-ordered
     // fold, χ² critical by CASE over the data-derived m
-    "q_stats_fisher_combine" ->
+    Query("q_stats_fisher_combine", fisherCombine,
       s"""WITH $ksFamilyCtes,
          tm AS (SELECT event_type,
                        ${rsql("-2.0 * ln(p_r)", 1000000)} AS t_r
@@ -2868,10 +2801,10 @@ object StatsOps {
          SELECT n_tests, 2 * n_tests AS df, x2_r,
                 crit AS chi2_crit_95,
                 x2_r > crit AS reject_global_null
-         FROM x2""",
+         FROM x2""", cap = 4),
     // arm×day census, exact prefix sums, pinned δ̂/σ², shared log-LR
     // text, micros-quantized running max for the monotone p
-    "q_stats_msprt" ->
+    Query("q_stats_msprt", msprt,
       s"""WITH per AS (
            SELECT epoch_us(ts) // 86400000000 AS day,
                   CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END)
@@ -2924,10 +2857,10 @@ object StatsOps {
                 FROM lm)
          SELECT day, n_eff, delta_r, llr_r, p_always_r,
                 p_always_r < 0.05 AS significant
-         FROM pp ORDER BY day""",
+         FROM pp ORDER BY day"""),
     // dollar-bucket census, exact twice-utility, seeded Gumbel-max
     // (0x-cast here, conv in Spark), pinned score, ties → lowest bucket
-    "q_privacy_dp_quantile" ->
+    Query("q_privacy_dp_quantile", dpQuantile,
       s"""WITH per AS (
            SELECT CAST(floor(value) AS BIGINT) AS b,
                   CAST(count(*) AS BIGINT) AS cnt
@@ -2961,10 +2894,10 @@ object StatsOps {
          SELECT n_events, n_buckets, CAST(1.0 AS DOUBLE) AS epsilon,
                 true_med_b, dp_med_b,
                 abs(dp_med_b - true_med_b) AS err_buckets
-         FROM dp CROSS JOIN tm""",
+         FROM dp CROSS JOIN tm""", cap = 10),
     // 4-cell exact census, pinned cell means/variances, DiD/SE/t
     // replayed from the pinned values
-    "q_stats_did" ->
+    Query("q_stats_did", did,
       s"""WITH d0 AS (
            SELECT min(epoch_us(ts) // 86400000000) AS d0 FROM events),
          base AS (
@@ -3012,9 +2945,9 @@ object StatsOps {
          SELECT n_events, mean_c_pre, mean_c_post, mean_t_pre,
                 mean_t_post, did_r, se_r, t_r,
                 abs(t_r) > 1.9599639845400545 AS significant
-         FROM tt""",
+         FROM tt"""),
     // shared olsCtes residual frame; h/s² pinned, D replayed from them
-    "q_stats_cooks_distance" ->
+    Query("q_stats_cooks_distance", cooksDistance,
       s"""WITH $olsCtes,
          sq AS (SELECT sum(CAST(e_m AS HUGEINT)
                   * CAST(e_m AS HUGEINT)) AS ssqd FROM res),
@@ -3030,10 +2963,10 @@ object StatsOps {
                 FROM hh)
          SELECT day, x, e_m, h_r, cook_r,
                 cook_r > 4.0 / n AS influential
-         FROM ck ORDER BY day""",
+         FROM ck ORDER BY day""", cap = 8),
     // twice-midrank census → day-ordered prefix sums → exact U_t; the
     // only float is the final pinned p
-    "q_stats_pettitt" ->
+    Query("q_stats_pettitt", pettitt,
       s"""WITH daily AS (
            SELECT epoch_us(ts) // 86400000000 AS day,
                   CAST(count(*) AS BIGINT) AS c
@@ -3068,10 +3001,10 @@ object StatsOps {
                  FROM res)
          SELECT n_days, k_stat, change_day, p_r,
                 p_r < 0.05 AS change_detected
-         FROM r2c""",
+         FROM r2c""", cap = 7),
     // QI = (dominant type via join-on-max + lexicographic-min tie
     // break, volume bucket, active-days bucket); k census; one summary
-    "q_privacy_k_anon" ->
+    Query("q_privacy_k_anon", kAnon,
       s"""WITH pu AS (
            SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS c
            FROM events GROUP BY 1, 2),
@@ -3104,10 +3037,10 @@ object StatsOps {
                   AS users_at_risk,
                 ${rsql("CAST(coalesce(sum(k) FILTER (k < 5), 0)" +
                   " AS DOUBLE) * 100 / sum(k)", 1000000)} AS pct_at_risk_r
-         FROM cl""",
+         FROM cl""", cap = 6),
     // same 48-bit md5 slice (0x-cast here, conv in Spark), same shared
     // lapNoise inverse-CDF text, noise pinned before the release adds it
-    "q_privacy_dp_count" ->
+    Query("q_privacy_dp_count", dpCount,
       s"""WITH per AS (
            SELECT event_type,
                   CAST(count(DISTINCT user_id) AS BIGINT) AS n_true
@@ -3124,10 +3057,10 @@ object StatsOps {
          SELECT event_type, n_true, CAST(1.0 AS DOUBLE) AS epsilon,
                 n_types AS sensitivity, noise_r,
                 ${rsql("n_true + noise_r", 1000000)} AS n_dp_r
-         FROM nz ORDER BY event_type""",
+         FROM nz ORDER BY event_type"""),
     // same QI partition as k_anon (shared semantics, replayed text);
     // sensitive band from EXACT Σcents < bound·n integer comparisons
-    "q_privacy_l_diversity" ->
+    Query("q_privacy_l_diversity", lDiversity,
       s"""WITH pu AS (
            SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS c
            FROM events GROUP BY 1, 2),
@@ -3173,9 +3106,9 @@ object StatsOps {
                 CAST(sum(k) AS BIGINT) AS n_users,
                 ${rsql("CAST(coalesce(sum(k) FILTER (l = 1), 0)" +
                   " AS DOUBLE) * 100 / sum(k)", 1000000)} AS pct_exposed_r
-         FROM cl""",
+         FROM cl""", cap = 7),
     // 5-cell census, pinned WoE/IV terms, segment-ordered IV fold
-    "q_ml_woe_iv" ->
+    Query("q_ml_woe_iv", woeIv,
       s"""WITH cells AS (
            SELECT c_mktsegment,
                   CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1
@@ -3207,10 +3140,10 @@ object StatsOps {
                      WHEN iv_total_r < 0.1 THEN 'weak'
                      WHEN iv_total_r < 0.3 THEN 'medium'
                      ELSE 'strong' END AS verdict
-         FROM t2 CROSS JOIN iv ORDER BY c_mktsegment""",
+         FROM t2 CROSS JOIN iv ORDER BY c_mktsegment""", cap = 7),
     // md5-digit folds, leave-fold-out closed form on exact cent sums,
     // m-estimate shrink toward the pinned global prior
-    "q_ml_target_encode" ->
+    Query("q_ml_target_encode", targetEncode,
       s"""WITH cells AS (
            SELECT c_mktsegment,
                   CAST((strpos('0123456789abcdef',
@@ -3235,10 +3168,10 @@ object StatsOps {
                   " + 20.0 * prior_r) / ((n - n_f) + 20.0)", 1000000)}
                   AS enc_smooth_r
          FROM cells JOIN seg ON c_mktsegment = sseg CROSS JOIN pr
-         ORDER BY c_mktsegment, fold""",
+         ORDER BY c_mktsegment, fold""", cap = 7),
     // two capture flags per user, exact censuses, Chapman closed form
     // shared text; est_over_true is the self-audit
-    "q_stats_capture_recapture" ->
+    Query("q_stats_capture_recapture", captureRecapture,
       s"""WITH per AS (
            SELECT user_id,
                   max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
@@ -3256,10 +3189,10 @@ object StatsOps {
                   " - 1.0", 100)} AS n_hat,
                 ${rsql("((CAST(n1 + 1 AS DOUBLE) * (n2 + 1)) / (m + 1)" +
                   " - 1.0) / n_true", 1000000)} AS est_over_true
-         FROM m""",
+         FROM m"""),
     // spearman's integer twice-midrank over the |d| census; W+ and z
     // from exact integers in shared text
-    "q_stats_wilcoxon" ->
+    Query("q_stats_wilcoxon", wilcoxonSigned,
       s"""WITH daily AS (
            SELECT epoch_us(ts) // 86400000000 AS day,
                   CAST(count(*) FILTER (event_type = 'click') AS BIGINT)
@@ -3286,10 +3219,10 @@ object StatsOps {
                 ${rsql("(w2 / 2.0 - CAST(n AS DOUBLE) * (n + 1) / 4.0)" +
                   " / sqrt(CAST(n AS DOUBLE) * (n + 1) * (2 * n + 1)" +
                   " / 24.0)", 1000000)} AS z_wilcoxon
-         FROM m""",
+         FROM m""", cap = 7),
     // integer day-of-week, exact event/exposure censuses, shared
     // closed form; significance on the pinned log-scale bounds
-    "q_stats_rate_ratio" ->
+    Query("q_stats_rate_ratio", rateRatio,
       s"""WITH ev AS (
            SELECT event_type,
                   CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day
@@ -3326,10 +3259,10 @@ object StatsOps {
            FROM j)
          SELECT event_type, ka, kb, ta, tb, rr, ln_rr_low, ln_rr_high,
                 ln_rr_low > 0.0 OR ln_rr_high < 0.0 AS significant
-         FROM f ORDER BY event_type""",
+         FROM f ORDER BY event_type"""),
     // injective ordering value makes the arg-max unique in both
     // engines; totals exact integer cents
-    "q_agg_argmax" ->
+    Query("q_agg_argmax", aggArgmax,
       """WITH per AS (
            SELECT event_type, user_id,
                   CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
@@ -3342,10 +3275,10 @@ object StatsOps {
                 (min({'c': tot_cents, 'u': user_id})).u AS bottom_user,
                 floor((min(tot_cents) / 100.0) * 100 + 0.5) / 100.0
                   AS bottom_total
-         FROM per GROUP BY event_type ORDER BY event_type""",
+         FROM per GROUP BY event_type ORDER BY event_type"""),
     // |days|-bounded pair census; every pair class exact, τ-b one
     // shared closed form
-    "q_stats_kendall_tau" ->
+    Query("q_stats_kendall_tau", kendallTau,
       s"""WITH daily AS (
            SELECT epoch_us(ts) // 86400000000 AS day,
                   CAST(count(*) FILTER (event_type = 'click') AS BIGINT)
@@ -3367,10 +3300,10 @@ object StatsOps {
          SELECT n0, nc, nd, n_tie_x, n_tie_y,
                 ${rsql("(nc - nd) / sqrt(CAST(n0 - n_tie_x AS DOUBLE)" +
                   " * (n0 - n_tie_y))", 1000000)} AS tau_b
-         FROM ag""",
+         FROM ag""", cap = 5),
     // exact HUGEINT power sums (the Spark side's DECIMAL(38,0) twin),
     // then the shared mM1..mM4 closed forms — one formula text
-    "q_stats_moments" ->
+    Query("q_stats_moments", moments,
       s"""WITH c0 AS (
            SELECT event_type,
                   CAST(floor(value * 100 + 0.5) AS HUGEINT) AS c
@@ -3388,10 +3321,10 @@ object StatsOps {
                   AS skewness,
                 ${rsql(s"$mM4 / ($mM2 * $mM2) - 3.0", 1000000)}
                   AS ex_kurtosis
-         FROM sums ORDER BY event_type""",
+         FROM sums ORDER BY event_type"""),
     // chisq's marginal-cross-join census, grouped by the constant n so
     // V can derive from the PINNED chi2 (round-then-replay)
-    "q_stats_cramers_v" ->
+    Query("q_stats_cramers_v", cramersV,
       s"""WITH j AS (
            SELECT c_mktsegment AS seg, o_orderpriority AS pri
            FROM orders JOIN customer ON o_custkey = c_custkey),
@@ -3416,10 +3349,10 @@ object StatsOps {
          SELECT n AS n_obs, chi2, min_dim,
                 ${rsql("sqrt(chi2 / (n * min_dim))", 1000000)}
                   AS cramers_v
-         FROM ag""",
+         FROM ag""", cap = 7),
     // ttest's join+FILTER aggregate chain; margin and both t stats are
     // pinned BEFORE the comparison (srm round-then-compare)
-    "q_stats_tost" ->
+    Query("q_stats_tost", tost,
       s"""WITH j AS (
            SELECT c_mktsegment, o_orderstatus AS st, o_totalprice AS p
            FROM orders JOIN customer ON o_custkey = c_custkey
@@ -3448,9 +3381,9 @@ object StatsOps {
                 t_low > CAST(1.6448536269514722 AS DOUBLE)
                   AND t_high < -CAST(1.6448536269514722 AS DOUBLE)
                   AS equivalent
-         FROM t2 ORDER BY c_mktsegment""",
+         FROM t2 ORDER BY c_mktsegment"""),
     // power's parity-arm conversion census + the shared Wilson strings
-    "q_stats_wilson_ci" ->
+    Query("q_stats_wilson_ci", wilsonCi,
       s"""WITH conv AS (
            SELECT user_id % 2 AS arm, user_id,
                   max(CASE WHEN event_type = 'purchase'
@@ -3465,10 +3398,10 @@ object StatsOps {
                 ${rsql(wP, 1000000)} AS p_hat,
                 ${rsql(s"$wCenter - $wHalf", 1000000)} AS ci_low,
                 ${rsql(s"$wCenter + $wHalf", 1000000)} AS ci_high
-         FROM g ORDER BY arm""",
+         FROM g ORDER BY arm"""),
     // top-501 frontier in (cents DESC, key) order, rank-ordered
     // list_reduce ≡ Spark's array_sort fold (0.0 + x == x exactly)
-    "q_stats_hill_tail" ->
+    Query("q_stats_hill_tail", hillTail,
       s"""WITH top AS (
            SELECT CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)
                     AS cents, o_orderkey
@@ -3494,8 +3427,8 @@ object StatsOps {
                 ${rsql("thr_cents / 100.0", 100)} AS x_threshold,
                 h_hill,
                 ${rsql("1.0 / h_hill", 1000000)} AS alpha_hill
-         FROM h""",
-    "q_stats_granger" ->
+         FROM h"""),
+    Query("q_stats_granger", granger,
       s"""WITH daily AS (
            SELECT epoch_us(ts) // 86400000000 AS day,
                   CAST(count(*) FILTER (event_type = 'click') AS BIGINT)
@@ -3523,8 +3456,8 @@ object StatsOps {
                   * 1000000 + 0.5) / 1000000.0 AS f_granger,
                 floor((($gSseR - $gSseF) / $gSseR) * 1000000 + 0.5)
                   / 1000000.0 AS delta_r2
-         FROM m""",
-    "q_stats_cuped" ->
+         FROM m""", cap = 5),
+    Query("q_stats_cuped", cuped,
       """WITH d0 AS (SELECT min(epoch_us(ts) // 86400000000) AS d0
                      FROM events),
          pu AS (
@@ -3575,8 +3508,8 @@ object StatsOps {
                 floor(theta * 1000000 + 0.5) / 1000000.0 AS theta,
                 floor(var_reduction * 1000000 + 0.5) / 1000000.0
                   AS var_reduction
-         FROM a CROSS JOIN gm ORDER BY arm""",
-    "q_stats_power" ->
+         FROM a CROSS JOIN gm ORDER BY arm"""),
+    Query("q_stats_power", power,
       """WITH u AS (
            SELECT user_id % 2 AS arm, user_id,
                   CAST(max(CASE WHEN event_type = 'purchase' THEN 1
@@ -3608,8 +3541,8 @@ object StatsOps {
                      ELSE CAST(ceil(zsum * zsum
                        / ((p1 - p0) * (p1 - p0))) AS BIGINT) END
                   AS n_per_arm
-         FROM z""",
-    "q_stats_runs_test" ->
+         FROM z"""),
+    Query("q_stats_runs_test", runsTest,
       """WITH daily AS (
            SELECT epoch_us(ts) // 86400000000 AS day,
                   CAST(count(*) AS BIGINT) AS c
@@ -3644,8 +3577,8 @@ object StatsOps {
                                  * (n_up + n_down)
                                  * (n_up + n_down - 1))))
                   * 1000000 + 0.5) / 1000000.0 AS z
-         FROM a""",
-    "q_stats_anova" ->
+         FROM a""", cap = 4),
+    Query("q_stats_anova", anova,
       """WITH g0 AS (
            SELECT event_type AS g, CAST(count(*) AS BIGINT) AS n_g,
                   floor(avg(value) * 1000000 + 0.5) / 1000000.0 AS m_g,
@@ -3675,8 +3608,8 @@ object StatsOps {
                   * 1000000 + 0.5) / 1000000.0 AS f_stat,
                 floor((ssb / (ssb + ssw)) * 1000000 + 0.5) / 1000000.0
                   AS eta_sq
-         FROM s2""",
-    "q_stats_mannwhitney" ->
+         FROM s2"""),
+    Query("q_stats_mannwhitney", mannwhitney,
       """WITH ev AS (
            SELECT value AS p,
                   CAST(event_type = 'purchase' AS BIGINT) AS isp
@@ -3701,8 +3634,8 @@ object StatsOps {
                                  - CAST(tie AS DOUBLE)
                                    / CAST(n * (n - 1) AS DOUBLE))))
                       * 1000000 + 0.5) / 1000000.0 AS z_stat
-         FROM a""",
-    "q_stats_spearman" ->
+         FROM a""", cap = 6),
+    Query("q_stats_spearman", spearman,
       """WITH ev AS (
            SELECT value AS x,
                   CAST(json_extract_string(props, '$.k') AS INTEGER) AS y
@@ -3736,8 +3669,8 @@ object StatsOps {
                           * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
                                  - CAST(sy AS DOUBLE) * sy)))
                   * 1000000 + 0.5) / 1000000.0 AS rho_spearman
-         FROM m""",
-    "q_stats_kruskal" ->
+         FROM m""", cap = 10),
+    Query("q_stats_kruskal", kruskal,
       """WITH ev AS (SELECT value AS p, event_type AS g FROM events),
          per AS (SELECT p, g, CAST(count(*) AS BIGINT) AS cg
                  FROM ev GROUP BY p, g),
@@ -3768,8 +3701,8 @@ object StatsOps {
                        / (1.0 - CAST(tie AS DOUBLE)
                                 / CAST(n * n * n - n AS DOUBLE)))
                   * 1000000 + 0.5) / 1000000.0 AS h_stat
-         FROM fold CROSS JOIN tot""",
-    "q_stats_seasonal_mk" ->
+         FROM fold CROSS JOIN tot""", cap = 8),
+    Query("q_stats_seasonal_mk", seasonalMk,
       """WITH daily AS (
            SELECT epoch_us(ts) // 86400000000 AS day,
                   CAST(count(*) AS BIGINT) AS c,
@@ -3807,8 +3740,8 @@ object StatsOps {
                      WHEN floor(zraw * 1000000 + 0.5) / 1000000.0 < -1.96
                        THEN 'decreasing'
                      ELSE 'no_trend' END AS trend
-         FROM z""",
-    "q_stats_mann_kendall" ->
+         FROM z""", cap = 9),
+    Query("q_stats_mann_kendall", mannKendall,
       """WITH daily AS (
            SELECT epoch_us(ts) // 86400000000 AS day,
                   CAST(count(*) AS BIGINT) AS c
@@ -3840,8 +3773,8 @@ object StatsOps {
                      WHEN floor(zraw * 1000000 + 0.5) / 1000000.0 < -1.96
                        THEN 'decreasing'
                      ELSE 'no_trend' END AS trend
-         FROM z""",
-    "q_eval_quantile_sample" ->
+         FROM z""", cap = 7),
+    Query("q_eval_quantile_sample", evalQuantileSample,
       s"""WITH h AS (
             SELECT l_extendedprice,
                    md5(CAST(l_orderkey AS VARCHAR) || ':' ||
@@ -3865,8 +3798,8 @@ object StatsOps {
                  ${rsql("abs(est_p50 - true_p50)", 1000000)} AS err_p50,
                  est_p95, true_p95,
                  ${rsql("abs(est_p95 - true_p95)", 1000000)} AS err_p95
-          FROM est, tr""",
-    "q_stats_dispersion" ->
+          FROM est, tr"""),
+    Query("q_stats_dispersion", dispersion,
       """WITH hourly AS (
            SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
                   CAST(count(*) AS BIGINT) AS c
@@ -3876,8 +3809,8 @@ object StatsOps {
                 floor(var_samp(c) * 1000000 + 0.5) / 1000000.0 AS var_c,
                 floor((var_samp(c) / avg(c)) * 1000000 + 0.5)
                   / 1000000.0 AS dispersion
-         FROM hourly GROUP BY event_type ORDER BY event_type""",
-    "q_stats_bootstrap" ->
+         FROM hourly GROUP BY event_type ORDER BY event_type"""),
+    Query("q_stats_bootstrap", bootstrap,
       """WITH r AS (SELECT CAST(unnest(generate_series(0, 4)) AS INTEGER)
                       AS rep),
          w AS (SELECT rep, o_totalprice,
@@ -3896,14 +3829,14 @@ object StatsOps {
          SELECT rep, CAST(sum(k) AS BIGINT) AS n_eff,
                 floor((sum(k * o_totalprice) / sum(k)) * 1000000 + 0.5)
                   / 1000000.0 AS mean_rep
-         FROM wt GROUP BY rep ORDER BY rep""",
-    "q_stats_decompose" ->
+         FROM wt GROUP BY rep ORDER BY rep"""),
+    Query("q_stats_decompose", decompose,
       s"""WITH $stlCtes
          SELECT day, c, trend, seasonal,
                 floor((c - trend - seasonal) * 1000000 + 0.5) / 1000000.0
                   AS resid
-         FROM se ORDER BY day""",
-    "q_stats_anomaly_stl" ->
+         FROM se ORDER BY day""", cap = 4),
+    Query("q_stats_anomaly_stl", anomalyStl,
       s"""WITH $stlCtes,
          re AS (SELECT day, c,
                  floor((c - trend - seasonal) * 1000000 + 0.5)
@@ -3915,8 +3848,8 @@ object StatsOps {
          SELECT day, c, resid,
                 floor((resid / sd) * 1000000 + 0.5) / 1000000.0 AS resid_z
          FROM re CROSS JOIN st
-         ORDER BY abs(resid_z) DESC, day LIMIT 5""",
-    "q_stats_theil_sen" ->
+         ORDER BY abs(resid_z) DESC, day LIMIT 5""", cap = 5),
+    Query("q_stats_theil_sen", theilSen,
       """WITH daily AS (
            SELECT epoch_us(ts) // 86400000000 AS day,
                   CAST(count(*) AS BIGINT) AS c
@@ -3932,8 +3865,8 @@ object StatsOps {
          SELECT max(n_pairs) AS n_pairs, max(slope) AS slope,
                 floor(quantile_cont(c - slope * x, 0.5) * 1000000 + 0.5)
                   / 1000000.0 AS intercept
-         FROM d0 CROSS JOIN ms""",
-    "q_stats_ewma" -> {
+         FROM d0 CROSS JOIN ms""", cap = 4),
+    Query("q_stats_ewma", ewma, {
       // identical 17-digit weight literals on both sides (see ewmaW).
       // The CAST AS DOUBLE is load-bearing: DuckDB types a bare
       // 0.48999999999999994 literal as DECIMAL(18,17) and would
@@ -3957,8 +3890,8 @@ object StatsOps {
          FROM daily
          WINDOW w AS (ORDER BY day)
          ORDER BY day"""
-    },
-    "q_stats_jackknife" ->
+    }, cap = 4),
+    Query("q_stats_jackknife", jackknife,
       """WITH f AS (
            SELECT (strpos('0123456789abcdef',
                     substring(md5(o_orderkey::VARCHAR), 1, 1)) - 1) % 10
@@ -3992,8 +3925,8 @@ object StatsOps {
                   AS ci_lo,
                 floor((s / n + 1.96 * se) * 1000000 + 0.5) / 1000000.0
                   AS ci_hi
-         FROM a2""",
-    "q_sample_neyman" ->
+         FROM a2""", cap = 6),
+    Query("q_sample_neyman", sampleNeyman,
       """WITH strata AS (
            SELECT event_type, CAST(count(*) AS BIGINT) AS n_h,
                   floor(stddev_samp(value) * 1000000 + 0.5) / 1000000.0
@@ -4009,8 +3942,8 @@ object StatsOps {
                   / 1000000.0 AS w_share,
                 CAST(floor(1000.0 * wh / z) AS BIGINT) AS alloc_neyman,
                 CAST(floor(1000.0 * n_h / n_tot) AS BIGINT) AS alloc_prop
-         FROM w, t ORDER BY event_type""",
-    "q_stats_changepoint" ->
+         FROM w, t ORDER BY event_type""", cap = 5),
+    Query("q_stats_changepoint", changepoint,
       """WITH daily AS (
            SELECT epoch_us(ts)::BIGINT // 86400000000 AS day,
                   CAST(count(*) AS BIGINT) AS c
@@ -4034,8 +3967,8 @@ object StatsOps {
                 floor(m2 * 1000000 + 0.5) / 1000000.0 AS mean_after,
                 floor((n1 * n2 / CAST(n1 + n2 AS DOUBLE) * (m1 - m2)
                   * (m1 - m2)) * 1000000 + 0.5) / 1000000.0 AS score
-         FROM z ORDER BY score DESC, split_day""",
-    "q_stats_cusum" ->
+         FROM z ORDER BY score DESC, split_day""", cap = 4),
+    Query("q_stats_cusum", cusum,
       """WITH daily AS (
            SELECT epoch_us(ts) // 86400000000 AS day,
                   CAST(count(*) AS BIGINT) AS c
@@ -4051,8 +3984,8 @@ object StatsOps {
                     * 1000000 + 0.5) / 1000000.0 AS cusum
            FROM daily CROSS JOIN st)
          SELECT day, c, cusum FROM cs
-         ORDER BY abs(cusum) DESC, day LIMIT 5""",
-    "q_stats_winsorize" ->
+         ORDER BY abs(cusum) DESC, day LIMIT 5""", cap = 6),
+    Query("q_stats_winsorize", winsorize,
       """WITH pct AS (
            SELECT floor(quantile_cont(value, 0.05) * 1000000 + 0.5)
                     / 1000000.0 AS p05,
@@ -4064,8 +3997,8 @@ object StatsOps {
                 floor(avg(value) * 1000000 + 0.5) / 1000000.0 AS mean_raw,
                 floor(avg(greatest(least(value, p95), p05))
                   * 1000000 + 0.5) / 1000000.0 AS mean_winsor
-         FROM events CROSS JOIN pct""",
-    "q_stats_autocorr" ->
+         FROM events CROSS JOIN pct"""),
+    Query("q_stats_autocorr", autocorr,
       """WITH daily AS (
            SELECT epoch_us(ts) // 86400000000 AS day,
                   CAST(count(*) AS BIGINT) AS c
@@ -4083,8 +4016,8 @@ object StatsOps {
                           - CAST(sum(y) AS DOUBLE) * CAST(sum(y) AS DOUBLE))))
                   * 1000000 + 0.5) / 1000000.0
                   AS acf1
-         FROM p""",
-    "q_stats_psi" ->
+         FROM p""", cap = 5),
+    Query("q_stats_psi", psi,
       s"""WITH ev AS (SELECT CAST(event_id % 2 AS INTEGER) AS half,
                              least(CAST(floor(value / 50) AS INTEGER), 9)
                                AS bucket
@@ -4106,8 +4039,8 @@ object StatsOps {
         " * ln(((a + 1) / CAST(ta + 10 AS DOUBLE))" +
         " / ((b + 1) / CAST(tb + 10 AS DOUBLE))))",
         1000000)} AS psi
-         FROM c CROSS JOIN t""",
-    "q_stats_gini" ->
+         FROM c CROSS JOIN t""", cap = 4),
+    Query("q_stats_gini", gini,
       s"""WITH rev AS (
            SELECT o_custkey,
                   floor(sum(o_totalprice) * 100 + 0.5) / 100.0 AS rev
@@ -4120,10 +4053,10 @@ object StatsOps {
                 ${rsql("sum(rev)", 100)} AS total_rev,
                 ${rsql("2.0 * sum(i * rev) / (count(*) * sum(rev)) " +
                   "- (count(*) + 1.0) / count(*)", 1000000)} AS gini
-         FROM rk""",
+         FROM rk"""),
     // BH step-up replayed: per-type KS on the A/B per-day means, rank
     // by p, reverse-rank running min of the r6 m·p/i terms, clamp 1.
-    "q_stats_bh" ->
+    Query("q_stats_bh", bhFdr,
       s"""WITH $ksFamilyCtes,
          mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM tests),
          rk AS (SELECT event_type, d_r, p_r, m,
@@ -4140,10 +4073,10 @@ object StatsOps {
                  FROM tm)
          SELECT event_type, d_r, p_r, rank, p_adj,
                 p_adj <= 0.05 AS reject
-         FROM adj ORDER BY rank""",
+         FROM adj ORDER BY rank""", cap = 4),
     // Same family text as q_stats_bh; the correction is a step-down
     // cummax from the best rank (BH is a step-up cummin from the worst).
-    "q_stats_holm" ->
+    Query("q_stats_holm", holm,
       s"""WITH $ksFamilyCtes,
          mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM tests),
          rk AS (SELECT event_type, p_r, m,
@@ -4160,10 +4093,10 @@ object StatsOps {
                  FROM tm)
          SELECT event_type, p_r, rank, p_adj,
                 p_adj <= 0.05 AS reject
-         FROM adj ORDER BY rank""",
+         FROM adj ORDER BY rank""", cap = 4),
     // Shares the moments CTE text; S/K are pinned before squaring and
     // JB compares pinned-vs-literal (srm discipline).
-    "q_stats_jarque_bera" ->
+    Query("q_stats_jarque_bera", jarqueBera,
       s"""WITH c0 AS (
            SELECT event_type,
                   CAST(floor(value * 100 + 0.5) AS HUGEINT) AS c
@@ -4187,10 +4120,10 @@ object StatsOps {
                 FROM sk)
          SELECT event_type, n, skew_r, kurt_r, jb_r,
                 jb_r > 5.991464547107979 AS reject_normal
-         FROM jb ORDER BY event_type""",
+         FROM jb ORDER BY event_type"""),
     // HUGEINT squares of the exact milli-residuals; one division of
     // two exact integers reaches r6.
-    "q_stats_dw" ->
+    Query("q_stats_dw", dw,
       s"""WITH $olsCtes,
          num AS (SELECT CAST(count(*) AS BIGINT) AS n_pairs,
                         sum(CAST(b.e_m - a.e_m AS HUGEINT)
@@ -4207,10 +4140,10 @@ object StatsOps {
                 FROM num CROSS JOIN den)
          SELECT n_days, n_pairs, b_r, dw_r,
                 ${rsql("1.0 - dw_r / 2.0", 1000000)} AS rho1_r
-         FROM dd""",
+         FROM dd""", cap = 4),
     // u-moments fold in day order (ljung_box discipline); x-moments
     // stay exact longs; LM assembles in the shared bpR2 text.
-    "q_stats_breusch_pagan" ->
+    Query("q_stats_breusch_pagan", breuschPagan,
       s"""WITH $olsCtes,
          ru AS (SELECT day, x, n, b_r,
                        (CAST(e_m AS DOUBLE) * e_m) / 1000000.0 AS u,
@@ -4235,11 +4168,11 @@ object StatsOps {
                 FROM ag)
          SELECT n_days, b_r, lm_r,
                 lm_r > 3.841458820694124 AS heteroscedastic
-         FROM lf""",
+         FROM lf""", cap = 4),
     // The ljung_box ACF machinery truncated to 3 lags, then the
     // Durbin–Levinson closed forms with every φ and a21 pinned in
     // declaration order.
-    "q_stats_pacf" ->
+    Query("q_stats_pacf", pacf,
       s"""WITH daily AS (
            SELECT epoch_us(ts) // 86400000000 AS day,
                   CAST(count(*) AS BIGINT) AS c
@@ -4287,10 +4220,10 @@ object StatsOps {
          FROM p3
          UNION ALL SELECT CAST(2 AS BIGINT), r2v, p2_r FROM p3
          UNION ALL SELECT CAST(3 AS BIGINT), r3, p3_r FROM p3
-         ORDER BY lag""",
+         ORDER BY lag""", cap = 6),
     // 5-cell integer census; z from exact long sums in the shared caZ
     // text against the 17-digit z literal.
-    "q_stats_cochran_armitage" ->
+    Query("q_stats_cochran_armitage", cochranArmitage,
       s"""WITH o AS (
            SELECT CAST(substring(o_orderpriority, 1, 1) AS BIGINT)
                     AS sc,
@@ -4314,8 +4247,8 @@ object StatsOps {
                 CASE WHEN z_ca_r > 1.9599639845400545 THEN 'increasing'
                      WHEN z_ca_r < -1.9599639845400545 THEN 'decreasing'
                      ELSE 'no_trend' END AS trend
-         FROM zz""",
-    "q_stats_prop_test" ->
+         FROM zz"""),
+    Query("q_stats_prop_test", propTest,
       s"""WITH pu AS (
            SELECT user_id,
                   max(CASE WHEN event_type = 'purchase' AND value > 120
@@ -4342,8 +4275,8 @@ object StatsOps {
                   "/ sqrt((CAST(ca + cb AS DOUBLE)/(na + nb)) * " +
                   "(1.0 - CAST(ca + cb AS DOUBLE)/(na + nb)) * " +
                   "(1.0/na + 1.0/nb))", 1000000)} END AS z
-         FROM g""",
-    "q_stats_ks" ->
+         FROM g"""),
+    Query("q_stats_ks", ks,
       s"""WITH j AS (
            SELECT o_orderstatus AS st, o_totalprice AS p
            FROM orders WHERE o_orderstatus IN ('F', 'O')),
@@ -4371,8 +4304,8 @@ object StatsOps {
                 ${rsql("2.0 * exp(-2.0 * d * d * " +
                   "CAST(nf * no AS DOUBLE) / (nf + no))", 1000000)}
                   AS p_approx
-         FROM dmax""",
-    "q_stats_benford" ->
+         FROM dmax""", cap = 7),
+    Query("q_stats_benford", benford,
       s"""WITH b AS (
            SELECT CAST(substring(CAST(CAST(floor(o_totalprice) AS BIGINT)
                     AS VARCHAR), 1, 1) AS INTEGER) AS digit
@@ -4383,8 +4316,8 @@ object StatsOps {
                 ${rsql("ln(1.0 + 1.0 / digit) / ln(10.0)", 1000000)}
                   AS benford
          FROM b CROSS JOIN tot
-         GROUP BY digit, tot ORDER BY digit""",
-    "q_stats_regression" ->
+         GROUP BY digit, tot ORDER BY digit""", cap = 5),
+    Query("q_stats_regression", regression,
       s"""SELECT l_returnflag, count(*) AS n,
                 ${rsql("regr_slope(l_extendedprice, l_quantity)", 1000000)}
                   AS slope,
@@ -4392,8 +4325,8 @@ object StatsOps {
                   AS intercept,
                 ${rsql("regr_r2(l_extendedprice, l_quantity)", 1000000)}
                   AS r2
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_stats_ttest" ->
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
+    Query("q_stats_ttest", ttest,
       s"""WITH j AS (
            SELECT c_mktsegment, o_orderstatus AS st, o_totalprice AS p
            FROM orders JOIN customer ON o_custkey = c_custkey
@@ -4413,8 +4346,8 @@ object StatsOps {
                 ${rsql("pow(v_f/n_f + v_o/n_o, 2) / " +
                   "(pow(v_f/n_f, 2)/(n_f - 1) + pow(v_o/n_o, 2)/(n_o - 1))",
                   100)} AS df_welch
-         FROM g ORDER BY c_mktsegment""",
-    "q_stats_chisq" ->
+         FROM g ORDER BY c_mktsegment"""),
+    Query("q_stats_chisq", chisq,
       s"""WITH j AS (
            SELECT c_mktsegment AS seg, o_orderpriority AS pri
            FROM orders JOIN customer ON o_custkey = c_custkey),
@@ -4433,11 +4366,11 @@ object StatsOps {
                   " ORDER BY seg, pri), (acc, v) -> acc + v)", 1000000)}
                   AS chi2,
                 (count(DISTINCT seg) - 1) * (count(DISTINCT pri) - 1) AS dof
-         FROM cells""",
+         FROM cells""", cap = 7),
     // md5-digit arm assignment (the q_sample_split convention); the
     // __ALL__ row counts each user once across types, not the per-type
     // sum. chi2 compare happens on the r6-rounded value on both sides.
-    "q_stats_srm" ->
+    Query("q_stats_srm", srm,
       s"""WITH eu AS (SELECT DISTINCT event_type, user_id FROM events),
          au AS (SELECT DISTINCT '__ALL__' AS event_type, user_id
                 FROM events),
@@ -4458,11 +4391,11 @@ object StatsOps {
                   "(n_a + n_b)", 1000000)} AS chi2_r,
                 ${rsql("CAST((n_a - n_b) * (n_a - n_b) AS DOUBLE) / " +
                   "(n_a + n_b)", 1000000)} > 3.8414588206941245 AS srm
-         FROM per ORDER BY event_type""",
+         FROM per ORDER BY event_type"""),
     // ANOVA's oracle chain applied to z = |x − per-type median|; the
     // sorted list_reduce keeps the cross-group accumulation order
     // identical to Spark's array_sort fold.
-    "q_stats_levene" ->
+    Query("q_stats_levene", levene,
       s"""WITH med AS (
            SELECT event_type,
                   ${rsql("quantile_cont(value, 0.5)", 1000000)} AS med
@@ -4496,11 +4429,11 @@ object StatsOps {
          SELECT k, n_total, k - 1 AS df1, n_total - k AS df2,
                 floor(((ssb / (k - 1)) / (ssw / (n_total - k)))
                   * 1000000 + 0.5) / 1000000.0 AS w_stat
-         FROM s2""",
+         FROM s2""", cap = 8),
     // Exact-integer lag sums assembled with the series mean in the
     // same operation order as Spark; the 7-term fold runs in lag
     // order via the sorted list_reduce.
-    "q_stats_ljung_box" ->
+    Query("q_stats_ljung_box", ljungBox,
       """WITH daily AS (
            SELECT epoch_us(ts) // 86400000000 AS day,
                   CAST(count(*) AS BIGINT) AS c
@@ -4538,8 +4471,8 @@ object StatsOps {
                 FROM qv)
          SELECT k, n_pairs, rho_r, q_lb_r,
                 q_lb_r > 14.067140449340169 AS reject
-         FROM rho CROSS JOIN qr ORDER BY k""",
-    "q_stats_entropy" ->
+         FROM rho CROSS JOIN qr ORDER BY k""", cap = 4),
+    Query("q_stats_entropy", entropy,
       s"""WITH c AS (
            SELECT user_id, event_type, count(*) AS c
            FROM events GROUP BY user_id, event_type),
@@ -4550,8 +4483,8 @@ object StatsOps {
                   "ln(CAST(c AS DOUBLE) / t))", 1000000)} AS entropy
          FROM c JOIN t ON c.user_id = t.user_id
          GROUP BY c.user_id, n_types
-         ORDER BY c.user_id""",
-    "q_stats_mad" ->
+         ORDER BY c.user_id"""),
+    Query("q_stats_mad", mad,
       s"""WITH med AS (
            SELECT event_type,
                   ${rsql("quantile_cont(value, 0.5)", 1000000)} AS med,
@@ -4569,5 +4502,7 @@ object StatsOps {
                 count(*) FILTER (adev > 3.0 * 1.4826 * mad) AS n_outliers
          FROM dev JOIN madf ON dev.event_type = madf.event_type
          GROUP BY dev.event_type
-         ORDER BY dev.event_type""")
+         ORDER BY dev.event_type"""))
+
+  val queries: Map[String, Q] = Query.builders(declared)
 }

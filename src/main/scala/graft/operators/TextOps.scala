@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.{Artifact, Tables}
+import graft.{Artifact, Query, Tables}
+import graft.Query.Q
 import graft.Par.{r2, r4, r6, sql => rsql}
 import TokenBitmap.unigrams
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -18,8 +19,6 @@ import org.apache.spark.sql.functions._
   * contract, banded candidate generation instead of all-pairs).
   */
 object TextOps {
-  type Q = (SparkSession, String) => DataFrame
-
   private def toks(c: String = "text") = split(col(c), " ")
 
   /** Token frequency — the ETL hello-world; map-side partial agg makes the
@@ -2690,84 +2689,6 @@ object TextOps {
       .orderBy("n_stream")
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_text_readability" -> readability,
-    "q_eval_cms_error" -> evalCmsError,
-    "q_text_llr" -> llrCollocations,
-    "q_text_ttr" -> ttr,
-    "q_text_stopword_discover" -> stopwordDiscover,
-    "q_text_tok_zipf" -> tokZipf,
-    "q_sample_balanced" -> sampleBalanced,
-    "q_text_char_entropy" -> charEntropy,
-    "q_text_rag_chunks" -> ragChunks,
-    "q_shard_rendezvous" -> shardRendezvous,
-    "q_text_bpe_pairs" -> bpePairs,
-    "q_sample_temperature" -> sampleTemperature,
-    "q_sample_dsir" -> sampleDsir,
-    "q_text_count_min" -> countMin,
-    "q_text_feature_hash" -> featureHash,
-    "q_text_quality_classifier" -> qualityClassifier,
-    "q_eval_mcnemar" -> evalMcnemar,
-    "q_eval_ece" -> evalEce,
-    "q_eval_auroc" -> evalAuroc,
-    "q_eval_pr_auc" -> evalPrAuc,
-    "q_eval_lift_gains" -> evalLift,
-    "q_eval_ks_score" -> evalKs,
-    "q_eval_calibration_slope" -> evalCalibSlope,
-    "q_eval_slice_audit" -> evalSliceAudit,
-    "q_sample_ess" -> sampleEss,
-    "q_eval_langid" -> langidEval,
-    "q_text_repetition" -> repetition,
-    "q_text_keywords" -> keywords,
-    "q_dedup_containment" -> dedupContainment,
-    "q_sample_split" -> sampleSplit,
-    "q_text_perplexity" -> perplexity,
-    "q_text_perplexity_bigram" -> perplexityBigram,
-    "q_text_pmi" -> pmiCollocations,
-    "q_text_pack" -> textPack,
-    "q_text_decontaminate" -> decontaminate,
-    "q_text_pii_mask" -> piiMask,
-    "q_text_search_tfidf" -> searchTfidf,
-    "q_text_search_bm25" -> searchBm25,
-    "q_search_rrf" -> searchRrf,
-    "q_sample_hash" -> sampleHash,
-    "q_sample_global_shuffle" -> sampleGlobalShuffle,
-    "q_text_token_budget" -> tokenBudget,
-    "q_pipeline_mix" -> pipelineMix,
-    "q_text_dataset_diff" -> datasetDiff,
-    "q_quality_schema_drift" -> schemaDrift,
-    "q_text_vocab_drift" -> vocabDrift,
-    "q_sample_stratified" -> sampleStratified,
-    "q_sample_reservoir" -> sampleReservoir,
-    "q_sample_weighted" -> sampleWeighted,
-    "q_sample_domain_cap" -> sampleDomainCap,
-    "q_text_normalize" -> textNormalize,
-    "q_sim_sparse_topk" -> simSparseTopk,
-    "q_text_wordcount" -> wordcount,
-    "q_text_tf_top" -> tfTop,
-    "q_text_ngram" -> ngram,
-    "q_text_prefix_suggest" -> prefixSuggest,
-    "q_text_fuzzy_suggest" -> fuzzySuggest,
-    "q_text_symspell" -> symspell,
-    "q_text_bpe_train" -> bpeTrain,
-    "q_text_bpe_encode" -> bpeEncode,
-    "q_dedup_exact" -> dedupExact,
-    "q_dedup_near" -> dedupNear,
-    "q_dedup_prefix_filter" -> dedupPrefixFilter,
-    "q_text_search_phrase" -> phraseSearch,
-    "q_text_search_boolean" -> booleanSearch,
-    "q_text_sentiment" -> sentiment,
-    "q_text_langid" -> langid,
-    "q_text_quality" -> quality,
-    "q_text_tokencount" -> tokencount,
-    "q_text_fertility" -> fertility,
-    "q_text_suggest_eval" -> suggestEval,
-    "q_text_fingerprint" -> fingerprint,
-    "q_text_span_dedup" -> spanDedup,
-    "q_text_nfc" -> textNfc,
-    "q_text_quality_gate" -> qualityGate,
-    "q_text_chunk_dedup" -> chunkDedup)
-
   private def lexValues(lex: Seq[(String, Any)]): String =
     lex.map { case (t, v) => s"('$t', $v)" }.mkString(", ")
 
@@ -2825,10 +2746,32 @@ object TextOps {
        ${(1 to 5).map(r => round(s"r${r - 1}", r)).mkString(",\n")}"""
   }
 
-  val oracle: Map[String, String] = Map(
+  /** Exact near-duplicate pairs (Jaccard >= 0.8): the q_dedup_near oracle
+    * and the ground truth of DedupOps' q_eval_minhash_recall oracle. */
+  private[operators] val dedupNearSql =
+    """WITH tok AS (
+           SELECT doc_id,
+                  unnest(list_distinct(string_split(text, ' '))) AS tok
+           FROM documents),
+         sz AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
+         inter AS (
+           SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS i
+           FROM tok x JOIN tok y ON x.tok = y.tok AND x.doc_id < y.doc_id
+           GROUP BY x.doc_id, y.doc_id)
+         SELECT a, b,
+                floor((i / (sa.n + sb.n - i)) * 1000000 + 0.5) / 1000000.0
+                  AS jacc_r
+         FROM inter
+         JOIN sz sa ON sa.doc_id = a
+         JOIN sz sb ON sb.doc_id = b
+         WHERE i / (sa.n + sb.n - i) >= 0.8
+           AND sa.n * 4 <= sb.n * 5 AND sb.n * 4 <= sa.n * 5
+         ORDER BY a, b"""
+
+  val declared: Seq[Query] = Seq(
     // count_min's 4×32 sketch rebuilt verbatim, audited over the full
     // |vocab| census; integer error arithmetic end to end
-    "q_eval_cms_error" ->
+    Query("q_eval_cms_error", evalCmsError,
       s"""WITH tok AS (SELECT unnest(string_split(text, ' ')) AS tok
                        FROM documents),
          rb AS (SELECT tok, r,
@@ -2857,9 +2800,10 @@ object TextOps {
                 CAST(count(*) FILTER (est - exact <=
                   (2 * n_stream) // 32) AS BIGINT) AS n_within_bound
          FROM est CROSS JOIN ns GROUP BY n_stream ORDER BY n_stream""",
+      cap = 9),
     // PMI's bigram census; margins from the bigram table; the shared
     // llrFrag closed form; rank on the pinned llr
-    "q_text_llr" ->
+    Query("q_text_llr", llrCollocations,
       s"""WITH tokp AS (
            SELECT doc_id,
                   CAST(unnest(generate_series(1,
@@ -2888,10 +2832,10 @@ object TextOps {
          SELECT a, b, k11,
                 floor(($llrFrag) * 1000000 + 0.5) / 1000000.0 AS llr
          FROM cells
-         ORDER BY llr DESC, a, b LIMIT 20""",
+         ORDER BY llr DESC, a, b LIMIT 20""", cap = 9),
     // size() is INT in Spark, len() BIGINT in DuckDB → CAST AS INTEGER
     // (the tokencount convention); formula text shared thereafter
-    "q_text_readability" ->
+    Query("q_text_readability", readability,
       """WITH c AS (
            SELECT doc_id,
                   CAST(len(string_split(text, ' ')) AS INTEGER)
@@ -2907,8 +2851,8 @@ object TextOps {
                       * 1000000 + 0.5) / 1000000.0 AS syll_per_word,
                 floor((20.0 - 15.0 * (CAST(n_mono AS DOUBLE) / n_words))
                       * 1000000 + 0.5) / 1000000.0 AS forcast_grade
-         FROM c ORDER BY doc_id""",
-    "q_text_stopword_discover" ->
+         FROM c ORDER BY doc_id"""),
+    Query("q_text_stopword_discover", stopwordDiscover,
       """WITH docs AS (SELECT CAST(count(*) AS BIGINT) AS n_docs
                        FROM documents),
          df AS (SELECT token, CAST(count(*) AS BIGINT) AS df FROM (
@@ -2921,8 +2865,8 @@ object TextOps {
                   / 1000000.0 AS df_share
          FROM df CROSS JOIN docs
          WHERE CAST(df AS DOUBLE) / n_docs > 0.6
-         ORDER BY df_share DESC, token""",
-    "q_text_tok_zipf" ->
+         ORDER BY df_share DESC, token"""),
+    Query("q_text_tok_zipf", tokZipf,
       """WITH f AS (
            SELECT tok, CAST(count(*) AS BIGINT) AS f
            FROM (SELECT unnest(string_split(text, ' ')) AS tok
@@ -2941,8 +2885,8 @@ object TextOps {
                 floor(((sum(y) * sum(x * x) - sum(x) * sum(x * y)) /
                        (count(*) * sum(x * x) - sum(x) * sum(x)))
                   * 1000000 + 0.5) / 1000000.0 AS intercept
-         FROM rk""",
-    "q_sample_balanced" ->
+         FROM rk"""),
+    Query("q_sample_balanced", sampleBalanced,
       """WITH cap AS (
            SELECT CAST(min(n) AS BIGINT) AS cap
            FROM (SELECT lang, count(*) AS n FROM documents
@@ -2955,8 +2899,8 @@ object TextOps {
            FROM documents)
          SELECT doc_id, lang, rn
          FROM rk CROSS JOIN cap WHERE rn <= cap
-         ORDER BY doc_id""",
-    "q_text_char_entropy" ->
+         ORDER BY doc_id"""),
+    Query("q_text_char_entropy", charEntropy,
       """WITH ch AS (SELECT doc_id,
                             unnest(regexp_extract_all(text, '.')) AS ch
                      FROM documents),
@@ -2971,8 +2915,8 @@ object TextOps {
                 floor((-sum((CAST(c AS DOUBLE) / n)
                   * ln(CAST(c AS DOUBLE) / n))) * 1000000 + 0.5)
                   / 1000000.0 AS entropy
-         FROM cn GROUP BY doc_id ORDER BY doc_id""",
-    "q_text_rag_chunks" ->
+         FROM cn GROUP BY doc_id ORDER BY doc_id"""),
+    Query("q_text_rag_chunks", ragChunks,
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w,
                            CAST(len(string_split(text, ' ')) AS BIGINT)
                              AS n_tok
@@ -2985,8 +2929,8 @@ object TextOps {
                 w[CAST(start + 1 AS INTEGER)] AS first_tok,
                 w[CAST(start + least(32, n_tok - start) AS INTEGER)]
                   AS last_tok
-         FROM s ORDER BY doc_id, chunk_idx""",
-    "q_shard_rendezvous" ->
+         FROM s ORDER BY doc_id, chunk_idx"""),
+    Query("q_shard_rendezvous", shardRendezvous,
       """WITH a8 AS (
            SELECT doc_id, CAST(arg_max(sh, w) AS BIGINT) AS shard8
            FROM (SELECT doc_id, sh,
@@ -3007,8 +2951,8 @@ object TextOps {
                 CAST(sum(CASE WHEN shard7 <> shard8 THEN 1 ELSE 0 END)
                   AS BIGINT) AS n_moved_on_reshard
          FROM a8 JOIN a7 USING (doc_id)
-         GROUP BY shard8 ORDER BY shard8""",
-    "q_text_bpe_pairs" ->
+         GROUP BY shard8 ORDER BY shard8"""),
+    Query("q_text_bpe_pairs", bpePairs,
       """WITH w0 AS (SELECT unnest(string_split(text, ' ')) AS w
                      FROM documents),
          wf AS (SELECT w, CAST(count(*) AS BIGINT) AS f
@@ -3018,8 +2962,8 @@ object TextOps {
                FROM wf)
          SELECT substr(w, CAST(pos AS INTEGER), 2) AS pair,
                 CAST(sum(f) AS BIGINT) AS cnt
-         FROM i GROUP BY pair ORDER BY cnt DESC, pair LIMIT 20""",
-    "q_sample_temperature" ->
+         FROM i GROUP BY pair ORDER BY cnt DESC, pair LIMIT 20"""),
+    Query("q_sample_temperature", sampleTemperature,
       """WITH c AS (SELECT lang, CAST(count(*) AS BIGINT) AS n
                     FROM documents GROUP BY lang),
          t AS (SELECT CAST(sum(n) AS BIGINT) AS tot FROM c),
@@ -3034,14 +2978,14 @@ object TextOps {
                   AS p_temp,
                 floor(1000.0 * wt / z * 100 + 0.5) / 100.0
                   AS expected_docs
-         FROM x CROSS JOIN z ORDER BY lang""",
-    "q_sample_dsir" ->
+         FROM x CROSS JOIN z ORDER BY lang"""),
+    Query("q_sample_dsir", sampleDsir,
       s"""WITH $dsirCtesSql
          SELECT doc_id, source, n_tok, score_r FROM scores
-         ORDER BY score_r DESC, doc_id LIMIT 50""",
+         ORDER BY score_r DESC, doc_id LIMIT 50""", cap = 3),
     // clipped pinned micro-weights, HUGEINT moment sums, ESS = one
     // double division of two exact integers
-    "q_sample_ess" ->
+    Query("q_sample_ess", sampleEss,
       s"""WITH $dsirCtesSql,
          wm AS (SELECT CAST(floor(exp(least(greatest(score_r, -20.0),
                     20.0)) * 1000000 + 0.5) AS BIGINT) AS w_m,
@@ -3060,8 +3004,8 @@ object TextOps {
          SELECT n_docs, n_clipped, ess_r,
                 ${rsql("ess_r / n_docs", 1000000)} AS ess_frac_r,
                 ess_r / n_docs < 0.1 AS degenerate
-         FROM e1""",
-    "q_text_count_min" ->
+         FROM e1""", cap = 4),
+    Query("q_text_count_min", countMin,
       s"""WITH tok AS (SELECT unnest(string_split(text, ' ')) AS tok
                        FROM documents),
          rb AS (SELECT tok, r,
@@ -3081,21 +3025,21 @@ object TextOps {
                       (SELECT unnest(generate_series(0, 3)) AS r) rs)
          SELECT p.tok, p.exact, CAST(min(c.c) AS BIGINT) AS est
          FROM probes p JOIN cells c ON p.r = c.r AND p.b = c.b
-         GROUP BY p.tok, p.exact ORDER BY p.exact DESC, p.tok""",
-    "q_text_feature_hash" ->
+         GROUP BY p.tok, p.exact ORDER BY p.exact DESC, p.tok"""),
+    Query("q_text_feature_hash", featureHash,
       s"""SELECT doc_id,
                 ${hex2Sql("md5(tok)")} % 64 AS bucket,
                 CAST(count(*) AS BIGINT) AS n
          FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
                FROM documents WHERE doc_id < 50) t
-         GROUP BY doc_id, bucket ORDER BY doc_id, bucket""",
+         GROUP BY doc_id, bucket ORDER BY doc_id, bucket"""),
     // Two full-batch GD steps replayed as chained CTEs: exact long
     // logits (micros weights × integer counts), σ r6-pinned before the
     // residual, per-term gradient micros summed as BIGINTs, and the
     // bucket spine LEFT-joins each gradient so absent buckets update by
     // exactly 0 on both engines. The training chain (qclfCtesSql) is
     // SHARED with q_eval_ece's oracle.
-    "q_text_quality_classifier" ->
+    Query("q_text_quality_classifier", qualityClassifier,
       s"""WITH $qclfCtesSql,
          ev AS (SELECT CAST(sum(CASE WHEN (CASE WHEN z_micros >= 0
                             THEN 1 ELSE 0 END) = y
@@ -3106,10 +3050,10 @@ object TextOps {
                 n_correct, n_docs,
                 floor((CAST(n_correct AS DOUBLE) / n_docs)
                   * 1000000 + 0.5) / 1000000.0 AS acc_r
-         FROM w2 CROSS JOIN ev ORDER BY bucket""",
+         FROM w2 CROSS JOIN ev ORDER BY bucket""", cap = 6),
     // the shared z3 residual frame → 2×2 agreement census → pinned
     // (b−c)²/(b+c) vs the pinned χ² critical value (srm discipline)
-    "q_eval_mcnemar" ->
+    Query("q_eval_mcnemar", evalMcnemar,
       s"""WITH $qclfCtesSql,
          m AS (SELECT
                  CAST(count(*) FILTER (y = 1 AND z_micros >= 0)
@@ -3131,10 +3075,10 @@ object TextOps {
                          / (n_b + n_c)) * 1000000 + 0.5) / 1000000.0
                   > 3.8414588206941245
                 END AS asymmetric
-         FROM m""",
+         FROM m""", cap = 4),
     // AUC via the exact rank-sum identity on the trained logits; the
     // doubled-rank census keeps every intermediate a BIGINT.
-    "q_eval_auroc" ->
+    Query("q_eval_auroc", evalAuroc,
       s"""WITH $qclfCtesSql,
          scv AS (SELECT z_micros AS v, y FROM z3),
          per AS (SELECT v, CAST(sum(y) AS BIGINT) AS n1,
@@ -3158,11 +3102,11 @@ object TextOps {
          SELECT n1t, n0t, auc,
                 floor((2.0 * auc - 1) * 1000000 + 0.5) / 1000000.0
                   AS gini_r
-         FROM a""",
+         FROM a""", cap = 6),
     // Tie-aware block AP: same z3 score chain, descending prefix
     // counts, per-block integer-micros term ((n1·cumPos·1e6 +
     // cumTot//2) // cumTot) — mirrors the Spark long `div` exactly.
-    "q_eval_pr_auc" ->
+    Query("q_eval_pr_auc", evalPrAuc,
       s"""WITH $qclfCtesSql,
          scv AS (SELECT z_micros AS v, y FROM z3),
          per AS (SELECT v, CAST(sum(y) AS BIGINT) AS n1,
@@ -3185,10 +3129,10 @@ object TextOps {
                   + 0.5) / 1000000.0 AS prevalence_r,
                 floor((ap_micros / (n_pos * 1000000.0)) * 1000000 + 0.5)
                   / 1000000.0 AS ap_r
-         FROM apm CROSS JOIN tot""",
+         FROM apm CROSS JOIN tot""", cap = 6),
     // Integer-logit prediction, slice census joined to doc dims, z
     // replayed from the pinned accuracies.
-    "q_eval_slice_audit" ->
+    Query("q_eval_slice_audit", evalSliceAudit,
       s"""WITH $qclfCtesSql,
          sc AS (SELECT doc_id, y,
                        CASE WHEN z_micros >= 0 THEN 1 ELSE 0 END AS yhat
@@ -3214,11 +3158,11 @@ object TextOps {
                 FROM a1)
          SELECT lang, source, n, n_correct, acc_r, acc_all_r, z_r,
                 z_r < -1.9599639845400545 AS underperforms
-         FROM a2 ORDER BY lang, source""",
+         FROM a2 ORDER BY lang, source""", cap = 6),
     // Exact p-micros OLS moments (HUGEINT here, DECIMAL in Spark —
     // same exact integers, same one double division), slope pinned
     // before the intercept uses it.
-    "q_eval_calibration_slope" ->
+    Query("q_eval_calibration_slope", evalCalibSlope,
       s"""WITH $qclfCtesSql,
          sc AS (SELECT CAST(floor((1.0 / (1.0 + exp(-(z_micros
                     / 1000000.0)))) * 1000000 + 0.5) AS BIGINT) AS pm,
@@ -3243,10 +3187,10 @@ object TextOps {
          SELECT n, sy AS n_pos, slope_r, intercept_r,
                 abs(slope_r - 1.0) < 0.25 AND abs(intercept_r) < 0.1
                   AS well_calibrated
-         FROM s2""",
+         FROM s2""", cap = 4),
     // Ascending CDF prefix counts, pinned gap per distinct score, max
     // then lowest-score argmax on pinned values; q_stats_ks p text.
-    "q_eval_ks_score" ->
+    Query("q_eval_ks_score", evalKs,
       s"""WITH $qclfCtesSql,
          scv AS (SELECT z_micros AS v, y FROM z3),
          per AS (SELECT v, CAST(sum(y) AS BIGINT) AS n1,
@@ -3279,11 +3223,11 @@ object TextOps {
                 FROM res)
          SELECT n_pos, n_neg, ks_r, at_z_micros, p_r,
                 p_r < 0.05 AS separable
-         FROM pp""",
+         FROM pp""", cap = 6),
     // Ceiling decile cuts of the descending cumulative count (tied
     // blocks stay together, exact integer arithmetic), then one pinned
     // division per gain/lift on the 10-row census.
-    "q_eval_lift_gains" ->
+    Query("q_eval_lift_gains", evalLift,
       s"""WITH $qclfCtesSql,
          scv AS (SELECT z_micros AS v, y FROM z3),
          per AS (SELECT v, CAST(count(*) AS BIGINT) AS nb,
@@ -3315,11 +3259,11 @@ object TextOps {
                   AS gain_r,
                 ${rsql("(CAST(cum_pos AS DOUBLE) / cum_n)" +
                   " / (CAST(npos AS DOUBLE) / nt)", 1000000)} AS lift_r
-         FROM g ORDER BY decile""",
+         FROM g ORDER BY decile""", cap = 8),
     // Calibration: same trained chain, probabilities binned ×10, per-
     // bin confidence as exact micros; the ECE fold is sequential in
     // bin order (list_reduce over the ordered list).
-    "q_eval_ece" ->
+    Query("q_eval_ece", evalEce,
       s"""WITH $qclfCtesSql,
          p AS (SELECT doc_id, y,
                       floor((1.0 / (1.0 + exp(-(z_micros / 1000000.0))))
@@ -3347,8 +3291,8 @@ object TextOps {
                       / sum(n)) * 1000000 + 0.5) / 1000000.0 AS ece_r
                FROM g)
          SELECT bin, n, n_pos, conf_r, acc_r, ece_r
-         FROM g CROSS JOIN e ORDER BY bin""",
-    "q_text_repetition" ->
+         FROM g CROSS JOIN e ORDER BY bin""", cap = 5),
+    Query("q_text_repetition", repetition,
       """WITH tk AS (
            SELECT doc_id,
                   CAST(unnest(generate_series(1,
@@ -3380,8 +3324,8 @@ object TextOps {
                            AND (coalesce(maxbc, 0) * 2.0 / n_tok) <= 0.10
                      THEN 1 ELSE 0 END AS INTEGER) AS keep
          FROM st LEFT JOIN bc ON st.doc_id = bc.doc_id
-         ORDER BY st.doc_id""",
-    "q_text_keywords" ->
+         ORDER BY st.doc_id"""),
+    Query("q_text_keywords", keywords,
       """WITH tf AS (
            SELECT doc_id, tok, count(*) AS tf
            FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
@@ -3402,8 +3346,8 @@ object TextOps {
            FROM wt)
          SELECT doc_id, rk, tok,
                 floor(w * 1000000 + 0.5) / 1000000.0 AS score
-         FROM rk WHERE rk <= 3 ORDER BY doc_id, rk""",
-    "q_dedup_containment" ->
+         FROM rk WHERE rk <= 3 ORDER BY doc_id, rk""", cap = 4),
+    Query("q_dedup_containment", dedupContainment,
       """WITH tok AS (
            SELECT doc_id,
                   unnest(list_distinct(string_split(text, ' '))) AS tok
@@ -3426,10 +3370,10 @@ object TextOps {
                 CAST(CASE WHEN coalesce(n_super, 0) > 0 THEN 1 ELSE 0 END
                   AS INTEGER) AS subsumed
          FROM sz LEFT JOIN sup ON sup.a = sz.doc_id
-         ORDER BY sz.doc_id""",
+         ORDER BY sz.doc_id"""),
     // One profile pass per md5-digit slice (q_data_profile shape), the
     // rounded shift ratio feeds the drift flag on both sides.
-    "q_quality_schema_drift" -> {
+    Query("q_quality_schema_drift", schemaDrift, {
       val colsD = Seq("doc_id", "text", "lang", "source", "n_chars")
       def prof(tag: String) = colsD.map { c =>
         s"""SELECT '$c' AS "column",
@@ -3463,8 +3407,8 @@ object TextOps {
                  (CAST(nulls_b AS DOUBLE) / n_b
                   - CAST(nulls_a AS DOUBLE) / n_a) > 0.01) AS drift
          FROM j ORDER BY "column""""
-    },
-    "q_text_perplexity" ->
+    }),
+    Query("q_text_perplexity", perplexity,
       """WITH tok AS (SELECT doc_id,
                              unnest(string_split(text, ' ')) AS tok
                       FROM documents),
@@ -3474,11 +3418,11 @@ object TextOps {
                    FROM tok t JOIN vc USING (tok) CROSS JOIN tot)
          SELECT doc_id, count(*) AS n_tok,
                 floor(avg(nll) * 1000000 + 0.5) / 1000000.0 AS ppl_proxy
-         FROM sc GROUP BY doc_id ORDER BY doc_id""",
+         FROM sc GROUP BY doc_id ORDER BY doc_id""", cap = 7),
     // λ-interpolated bigram LM: in-row bigram enumeration (1-based list
     // indexing here vs 0-based arrays in the engine — same pairs),
     // −ln p floored to micros, BIGINT mean to one division.
-    "q_text_perplexity_bigram" ->
+    Query("q_text_perplexity_bigram", perplexityBigram,
       """WITH tk AS (SELECT doc_id, string_split(text, ' ') AS t
                      FROM documents),
          bgx AS (SELECT doc_id,
@@ -3506,8 +3450,8 @@ object TextOps {
          SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
                 floor((CAST(sum(nm) AS DOUBLE) / (count(*) * 1000000.0))
                   * 1000000 + 0.5) / 1000000.0 AS ppl_bi
-         FROM sc GROUP BY doc_id ORDER BY doc_id""",
-    "q_text_pmi" ->
+         FROM sc GROUP BY doc_id ORDER BY doc_id""", cap = 9),
+    Query("q_text_pmi", pmiCollocations,
       """WITH tokp AS (
            SELECT doc_id,
                   CAST(unnest(generate_series(1,
@@ -3530,8 +3474,8 @@ object TextOps {
                   JOIN uni ub ON big.b = ub.token
                   CROSS JOIN t1 CROSS JOIN t2
          WHERE cab >= 5
-         ORDER BY pmi DESC, a, b LIMIT 15""",
-    "q_text_pack" ->
+         ORDER BY pmi DESC, a, b LIMIT 15""", cap = 12),
+    Query("q_text_pack", textPack,
       """WITH d AS (SELECT doc_id,
                            CAST(len(string_split(text, ' ')) AS BIGINT)
                              AS n_tok
@@ -3544,8 +3488,8 @@ object TextOps {
                   FROM d)
          SELECT start // 2048 AS bin, count(*) AS n_docs,
                 CAST(sum(n_tok) AS BIGINT) AS tok_sum
-         FROM c GROUP BY bin ORDER BY bin""",
-    "q_sample_split" ->
+         FROM c GROUP BY bin ORDER BY bin""", cap = 8),
+    Query("q_sample_split", sampleSplit,
       """WITH t AS (SELECT CAST(count(*) AS DOUBLE) AS total
                     FROM documents),
             g AS (SELECT CASE
@@ -3558,8 +3502,8 @@ object TextOps {
                   FROM documents GROUP BY split, lang)
          SELECT split, lang, n,
                 floor((n / total) * 1000000 + 0.5) / 1000000.0 AS frac
-         FROM g, t ORDER BY split, lang""",
-    "q_text_decontaminate" ->
+         FROM g, t ORDER BY split, lang"""),
+    Query("q_text_decontaminate", decontaminate,
       s"""WITH tok AS (
             SELECT doc_id,
                    CAST(unnest(generate_series(1,
@@ -3584,8 +3528,8 @@ object TextOps {
                  CAST(coalesce(h.n_hits, 0) > 0 AS INTEGER) AS contaminated
           FROM documents d LEFT JOIN hits h USING (doc_id)
           WHERE NOT (${hashSampleSql("d.doc_id", benchDigits)})
-          ORDER BY doc_id""",
-    "q_text_pii_mask" ->
+          ORDER BY doc_id"""),
+    Query("q_text_pii_mask", piiMask,
       """SELECT doc_id, raw,
                 regexp_replace(regexp_replace(regexp_replace(raw,
                   '[a-z0-9._]+@[a-z0-9.-]+', '<EMAIL>', 'g'),
@@ -3599,12 +3543,12 @@ object TextOps {
                           || CAST(doc_id % 7 AS VARCHAR)
                           || '.example/p ' || substring(text, 1, 40) AS raw
                FROM documents) t
-         ORDER BY doc_id""",
-    "q_sample_hash" ->
+         ORDER BY doc_id"""),
+    Query("q_sample_hash", sampleHash,
       s"""SELECT doc_id, lang, source, n_chars FROM documents
          WHERE ${hashSampleSql("doc_id", quarterDigits)}
-         ORDER BY doc_id""",
-    "q_text_token_budget" ->
+         ORDER BY doc_id"""),
+    Query("q_text_token_budget", tokenBudget,
       s"""WITH s AS (SELECT source, $qualityStatsColsSql FROM documents),
           q AS (SELECT source, n_tok, ($qualityScoreSql) AS q FROM s),
           b AS (SELECT source,
@@ -3620,8 +3564,8 @@ object TextOps {
           SELECT source, band, n_docs, n_tokens,
                  ${graft.Par.sql("n_tokens / CAST(tot AS DOUBLE)", 1000000)}
                    AS share
-          FROM cells, t ORDER BY source, band""",
-    "q_pipeline_mix" ->
+          FROM cells, t ORDER BY source, band"""),
+    Query("q_pipeline_mix", pipelineMix,
       s"""WITH s AS (SELECT source, $qualityStatsColsSql FROM documents),
           q AS (SELECT source, n_tok, ($qualityScoreSql) AS q FROM s),
           g AS (SELECT source, CAST(sum(n_tok) AS BIGINT) AS avail
@@ -3654,8 +3598,8 @@ object TextOps {
                  target AS target_tokens, planned AS planned_tokens,
                  ${graft.Par.sql("planned / CAST(avail AS DOUBLE)", 10000)}
                    AS epochs
-          FROM t3, z ORDER BY source""",
-    "q_text_dataset_diff" ->
+          FROM t3, z ORDER BY source""", cap = 5),
+    Query("q_text_dataset_diff", datasetDiff,
       """WITH oldsnap AS (
            SELECT doc_id AS old_id,
                   CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 2, 1)
@@ -3681,8 +3625,8 @@ object TextOps {
                            ELSE 'unchanged' END AS status,
                       new_chars, old_chars
                FROM oldsnap FULL OUTER JOIN newsnap ON old_id = new_id) t
-         GROUP BY status ORDER BY status""",
-    "q_text_vocab_drift" ->
+         GROUP BY status ORDER BY status"""),
+    Query("q_text_vocab_drift", vocabDrift,
       s"""WITH oldt AS (
             SELECT tok, count(*) AS n_old
             FROM (SELECT unnest(string_split(text, ' ')) AS tok
@@ -3714,8 +3658,8 @@ object TextOps {
                    """sum(abs(n_new / CAST(tot_new AS DOUBLE)
                          - n_old / CAST(tot_old AS DOUBLE))) / 2""",
                    1000000)} AS tv_drift_r
-          FROM j, t GROUP BY tot_old, tot_new""",
-    "q_sample_global_shuffle" ->
+          FROM j, t GROUP BY tot_old, tot_new"""),
+    Query("q_sample_global_shuffle", sampleGlobalShuffle,
       """SELECT doc_id, pos,
                 CAST((pos - 1) % 8 AS INT) AS shard,
                 (pos - 1) // 8 AS shard_pos
@@ -3724,20 +3668,20 @@ object TextOps {
                         ORDER BY md5('epoch0:' || CAST(doc_id AS VARCHAR)),
                                  doc_id) AS pos
                FROM documents) t
-         ORDER BY pos""",
-    "q_sample_domain_cap" ->
+         ORDER BY pos"""),
+    Query("q_sample_domain_cap", sampleDomainCap,
       """SELECT doc_id, source, rn FROM (
            SELECT doc_id, source,
                   row_number() OVER (PARTITION BY source
                     ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
            FROM documents) t
-         WHERE rn <= 15 ORDER BY doc_id""",
-    "q_sample_stratified" ->
+         WHERE rn <= 15 ORDER BY doc_id"""),
+    Query("q_sample_stratified", sampleStratified,
       s"""SELECT doc_id, lang FROM documents
          WHERE (lang = 'en' AND ${hashSampleSql("doc_id", quarterDigits)})
             OR lang != 'en'
-         ORDER BY doc_id""",
-    "q_sim_sparse_topk" ->
+         ORDER BY doc_id"""),
+    Query("q_sim_sparse_topk", simSparseTopk,
       """WITH tf AS (
            SELECT doc_id, tok, count(*) AS tf
            FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
@@ -3766,8 +3710,8 @@ object TextOps {
            SELECT *, row_number() OVER (PARTITION BY q_doc
              ORDER BY score DESC, doc_id) AS rk
            FROM scored) t
-         WHERE rk <= 3 ORDER BY q_doc, score DESC, doc_id""",
-    "q_sample_weighted" ->
+         WHERE rk <= 3 ORDER BY q_doc, score DESC, doc_id""", cap = 5),
+    Query("q_sample_weighted", sampleWeighted,
       s"""WITH hx AS (SELECT doc_id, n_chars,
                  md5(CAST(doc_id AS VARCHAR)) AS h
            FROM documents),
@@ -3778,16 +3722,16 @@ object TextOps {
                    / 100000000.0 AS ekey
                FROM hx)
          SELECT doc_id, n_chars, ekey FROM k
-         ORDER BY ekey, doc_id LIMIT 10""",
-    "q_sample_reservoir" ->
+         ORDER BY ekey, doc_id LIMIT 10"""),
+    Query("q_sample_reservoir", sampleReservoir,
       """SELECT doc_id, lang, rk FROM (
            SELECT doc_id, lang,
                   CAST(row_number() OVER (PARTITION BY lang
                     ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
                     AS INTEGER) AS rk
            FROM documents) t
-         WHERE rk <= 10 ORDER BY lang, rk""",
-    "q_text_normalize" ->
+         WHERE rk <= 10 ORDER BY lang, rk"""),
+    Query("q_text_normalize", textNormalize,
       """SELECT doc_id,
                 array_to_string(
                   list_transform(
@@ -3796,15 +3740,15 @@ object TextOps {
                                      'to', 'in', 'is', 'it')),
                     t -> regexp_replace(t, '(ing|ed|s)$', '')),
                   ' ') AS norm
-         FROM documents ORDER BY doc_id""",
-    "q_text_bpe_train" ->
+         FROM documents ORDER BY doc_id"""),
+    Query("q_text_bpe_train", bpeTrain,
       s"""$bpeOracleCtes
          SELECT round, merge_rule, cnt FROM (
            SELECT * FROM r1b UNION ALL SELECT * FROM r2b
            UNION ALL SELECT * FROM r3b UNION ALL SELECT * FROM r4b
            UNION ALL SELECT * FROM r5b) u
-         ORDER BY round""",
-    "q_text_bpe_encode" ->
+         ORDER BY round""", cap = 4),
+    Query("q_text_bpe_encode", bpeEncode,
       s"""$bpeOracleCtes
          SELECT subword, CAST(count(DISTINCT sym) AS BIGINT) AS n_words,
                 CAST(sum(f) AS BIGINT) AS occurrences
@@ -3812,10 +3756,10 @@ object TextOps {
                       unnest(string_split(trim(sym), '  ')) AS subword
                FROM r5) t
          GROUP BY subword
-         ORDER BY occurrences DESC, subword LIMIT 20""",
+         ORDER BY occurrences DESC, subword LIMIT 20""", cap = 4),
     // q_text_symspell's oracle IS the brute-force form: a hash-match
     // proves the delete-variant candidate generator is complete.
-    "q_text_symspell" ->
+    Query("q_text_symspell", symspell,
       s"""WITH v AS (
            SELECT tok AS token, count(*) AS cnt
            FROM (SELECT unnest(string_split(text, ' ')) AS tok
@@ -3832,8 +3776,8 @@ object TextOps {
                   row_number() OVER (PARTITION BY qs
                     ORDER BY dist, cnt DESC, token) AS rn
            FROM m) t
-         WHERE rn <= 3 ORDER BY qs, rn""",
-    "q_text_fuzzy_suggest" ->
+         WHERE rn <= 3 ORDER BY qs, rn"""),
+    Query("q_text_fuzzy_suggest", fuzzySuggest,
       s"""WITH v AS (
            SELECT tok AS token, count(*) AS cnt
            FROM (SELECT unnest(string_split(text, ' ')) AS tok
@@ -3850,8 +3794,8 @@ object TextOps {
                   row_number() OVER (PARTITION BY qs
                     ORDER BY dist, cnt DESC, token) AS rn
            FROM m) t
-         WHERE rn <= 3 ORDER BY qs, rn""",
-    "q_text_search_tfidf" ->
+         WHERE rn <= 3 ORDER BY qs, rn"""),
+    Query("q_text_search_tfidf", searchTfidf,
       """WITH tf AS (
            SELECT doc_id, tok, count(*) AS tf
            FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
@@ -3866,18 +3810,18 @@ object TextOps {
                       * 1000000 + 0.5) / 1000000.0 AS score
          FROM tf JOIN dfreq USING (tok) CROSS JOIN n
          GROUP BY doc_id
-         ORDER BY score DESC, doc_id LIMIT 20""",
-    "q_text_search_bm25" ->
+         ORDER BY score DESC, doc_id LIMIT 20""", cap = 3),
+    Query("q_text_search_bm25", searchBm25,
       s"""WITH $bm25CtesSql
          SELECT doc_id, score FROM bm25
-         ORDER BY score DESC, doc_id LIMIT 20""",
+         ORDER BY score DESC, doc_id LIMIT 20"""),
     // Both arms replayed verbatim (the bm25 CTE chain is SHARED with
     // q_text_search_bm25's oracle so the two cannot drift; the dense
     // arm is the q_sim_cosine_topk scoring), ranked with BIGINT
     // row_numbers, fused with CAST(1.0 AS DOUBLE)/(60+rank) fixed-order
     // terms (plain 1.0 is DECIMAL in the oracle engine — decimal
     // division would diverge).
-    "q_search_rrf" ->
+    Query("q_search_rrf", searchRrf,
       s"""WITH $bm25CtesSql,
          lex AS (SELECT doc_id,
                         CAST(row_number() OVER
@@ -3904,13 +3848,13 @@ object TextOps {
                   + coalesce(CAST(1.0 AS DOUBLE) / (60 + de.dense_rank),
                              CAST(0.0 AS DOUBLE)) AS rrf
          FROM lex l FULL OUTER JOIN dense de ON l.doc_id = de.doc_id
-         ORDER BY rrf DESC, doc_id LIMIT 10""",
-    "q_text_wordcount" ->
+         ORDER BY rrf DESC, doc_id LIMIT 10"""),
+    Query("q_text_wordcount", wordcount,
       """SELECT token, count(*) AS cnt
          FROM (SELECT unnest(string_split(text, ' ')) AS token
                FROM documents)
-         GROUP BY token ORDER BY token""",
-    "q_text_ttr" ->
+         GROUP BY token ORDER BY token"""),
+    Query("q_text_ttr", ttr,
       """SELECT doc_id,
                 CAST(count(DISTINCT tok) AS BIGINT) AS n_types,
                 CAST(count(*) AS BIGINT) AS n_tokens,
@@ -3918,8 +3862,8 @@ object TextOps {
                   * 1000000 + 0.5) / 1000000.0 AS ttr
          FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
                FROM documents) t
-         GROUP BY doc_id ORDER BY doc_id""",
-    "q_text_tf_top" ->
+         GROUP BY doc_id ORDER BY doc_id"""),
+    Query("q_text_tf_top", tfTop,
       """SELECT lang, token, cnt, CAST(rn AS BIGINT) AS rn FROM (
            SELECT lang, token, count(*) AS cnt,
                   row_number() OVER (PARTITION BY lang
@@ -3927,8 +3871,8 @@ object TextOps {
            FROM (SELECT lang, unnest(string_split(text, ' ')) AS token
                  FROM documents)
            GROUP BY lang, token) t
-         WHERE rn <= 5 ORDER BY lang, rn""",
-    "q_text_quality_gate" ->
+         WHERE rn <= 5 ORDER BY lang, rn"""),
+    Query("q_text_quality_gate", qualityGate,
       s"""WITH t AS (SELECT doc_id, n_chars, $qualityStatsColsSql
                      FROM documents)
          SELECT CASE WHEN n_tok < 20 THEN 'too_short'
@@ -3938,8 +3882,8 @@ object TextOps {
                      ELSE 'keep' END AS gate,
                 count(*) AS n_docs,
                 CAST(sum(n_chars) AS BIGINT) AS n_chars
-         FROM t GROUP BY gate ORDER BY gate""",
-    "q_text_nfc" ->
+         FROM t GROUP BY gate ORDER BY gate"""),
+    Query("q_text_nfc", textNfc,
       """SELECT doc_id, length(raw) AS len_raw,
                 length(nfc_normalize(raw)) AS len_nfc,
                 md5(nfc_normalize(raw)) AS h
@@ -3947,8 +3891,8 @@ object TextOps {
                       substr(text, 1, 16) || ' cafe' || chr(769)
                         || ' A' || chr(778) AS raw
                FROM documents)
-         ORDER BY doc_id""",
-    "q_text_span_dedup" ->
+         ORDER BY doc_id"""),
+    Query("q_text_span_dedup", spanDedup,
       """WITH tk AS (SELECT doc_id,
                             CAST(unnest(generate_series(1,
                               len(string_split(text, ' ')))) - 1 AS INTEGER)
@@ -3967,8 +3911,8 @@ object TextOps {
          SELECT span, count(DISTINCT doc_id) AS n_docs, count(*) AS n_occ
          FROM sp WHERE t7 IS NOT NULL
          GROUP BY span HAVING count(DISTINCT doc_id) >= 2
-         ORDER BY n_occ DESC, span LIMIT 20""",
-    "q_text_ngram" ->
+         ORDER BY n_occ DESC, span LIMIT 20"""),
+    Query("q_text_ngram", ngram,
       """SELECT doc_id, pos, token || ' ' || nxt AS bigram FROM (
            SELECT doc_id, pos, token,
                   lead(token, 1) OVER (PARTITION BY doc_id ORDER BY pos)
@@ -3979,21 +3923,22 @@ object TextOps {
                           AS pos,
                         unnest(string_split(text, ' ')) AS token
                  FROM documents) tk) t
-         WHERE nxt IS NOT NULL ORDER BY doc_id, pos""",
-    "q_text_prefix_suggest" ->
+         WHERE nxt IS NOT NULL ORDER BY doc_id, pos"""),
+    Query("q_text_prefix_suggest", prefixSuggest,
       """SELECT token, count(*) AS cnt
          FROM (SELECT unnest(string_split(text, ' ')) AS token
                FROM documents)
          WHERE token LIKE 's%'
-         GROUP BY token ORDER BY cnt DESC, token LIMIT 10""",
-    "q_dedup_exact" ->
+         GROUP BY token ORDER BY cnt DESC, token LIMIT 10"""),
+    Query("q_dedup_exact", dedupExact,
       """SELECT doc_id, fp FROM (
            SELECT doc_id, md5(text) AS fp,
                   row_number() OVER (PARTITION BY md5(text)
                     ORDER BY doc_id) AS rn
            FROM documents) t
-         WHERE rn = 1 ORDER BY doc_id""",
-    "q_dedup_near" ->
+         WHERE rn = 1 ORDER BY doc_id"""),
+    Query("q_dedup_near", dedupNear, dedupNearSql),
+    Query("q_dedup_prefix_filter", dedupPrefixFilter,
       """WITH tok AS (
            SELECT doc_id,
                   unnest(list_distinct(string_split(text, ' '))) AS tok
@@ -4011,27 +3956,8 @@ object TextOps {
          JOIN sz sb ON sb.doc_id = b
          WHERE i / (sa.n + sb.n - i) >= 0.8
            AND sa.n * 4 <= sb.n * 5 AND sb.n * 4 <= sa.n * 5
-         ORDER BY a, b""",
-    "q_dedup_prefix_filter" ->
-      """WITH tok AS (
-           SELECT doc_id,
-                  unnest(list_distinct(string_split(text, ' '))) AS tok
-           FROM documents),
-         sz AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-         inter AS (
-           SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS i
-           FROM tok x JOIN tok y ON x.tok = y.tok AND x.doc_id < y.doc_id
-           GROUP BY x.doc_id, y.doc_id)
-         SELECT a, b,
-                floor((i / (sa.n + sb.n - i)) * 1000000 + 0.5) / 1000000.0
-                  AS jacc_r
-         FROM inter
-         JOIN sz sa ON sa.doc_id = a
-         JOIN sz sb ON sb.doc_id = b
-         WHERE i / (sa.n + sb.n - i) >= 0.8
-           AND sa.n * 4 <= sb.n * 5 AND sb.n * 4 <= sa.n * 5
-         ORDER BY a, b""",
-    "q_text_search_phrase" ->
+         ORDER BY a, b""", cap = 10),
+    Query("q_text_search_phrase", phraseSearch,
       """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS ts
                       FROM documents),
          pos AS (SELECT doc_id, unnest(ts) AS t,
@@ -4040,14 +3966,14 @@ object TextOps {
          SELECT a.doc_id, count(*) AS n_hits
          FROM pos a JOIN pos b ON a.doc_id = b.doc_id AND b.p = a.p + 1
          WHERE a.t = 'hash' AND b.t = 'join'
-         GROUP BY a.doc_id ORDER BY a.doc_id""",
-    "q_text_search_boolean" ->
+         GROUP BY a.doc_id ORDER BY a.doc_id"""),
+    Query("q_text_search_boolean", booleanSearch,
       """SELECT doc_id, lang, source FROM documents
          WHERE list_contains(string_split(text, ' '), 'spark')
            AND list_contains(string_split(text, ' '), 'vector')
            AND NOT list_contains(string_split(text, ' '), 'dup')
-         ORDER BY doc_id""",
-    "q_text_sentiment" ->
+         ORDER BY doc_id"""),
+    Query("q_text_sentiment", sentiment,
       s"""SELECT doc_id,
                 floor((avg(coalesce(score, 0.0))) * 1000000 + 0.5)
                   / 1000000.0 AS sentiment
@@ -4055,9 +3981,9 @@ object TextOps {
                FROM documents) t
          LEFT JOIN (VALUES ${lexValues(sentimentLexicon)})
            AS lex(tok, score) ON t.token = lex.tok
-         GROUP BY doc_id ORDER BY doc_id""",
-    "q_text_langid" -> langidSql,
-    "q_eval_langid" ->
+         GROUP BY doc_id ORDER BY doc_id"""),
+    Query("q_text_langid", langid, langidSql, cap = 9),
+    Query("q_eval_langid", langidEval,
       s"""WITH pred AS ($langidSql),
          conf AS (
            SELECT d.lang, p.pred_lang, count(*) AS n
@@ -4068,8 +3994,8 @@ object TextOps {
                 floor((CAST(n AS DOUBLE) / t) * 1000000 + 0.5) / 1000000.0
                   AS share
          FROM conf JOIN tot ON conf.lang = tot.lang
-         ORDER BY conf.lang, pred_lang""",
-    "q_text_quality" ->
+         ORDER BY conf.lang, pred_lang""", cap = 11),
+    Query("q_text_quality", quality,
       s"""SELECT doc_id, CAST(n_tok AS INTEGER) AS n_tok,
                 floor(((n_chars - (n_tok - 1)) / n_tok) * 1000000 + 0.5)
                   / 1000000.0 AS avg_tok_len,
@@ -4081,8 +4007,8 @@ object TextOps {
                       * 1000000 + 0.5) / 1000000.0 AS quality
          FROM (SELECT doc_id, n_chars, $qualityStatsColsSql
                FROM documents) t
-         ORDER BY doc_id""",
-    "q_text_suggest_eval" ->
+         ORDER BY doc_id"""),
+    Query("q_text_suggest_eval", suggestEval,
       """WITH idx AS (
            SELECT token, CAST(count(*) AS BIGINT) AS cnt,
                   substring(token, 1, 1) AS prefix
@@ -4119,8 +4045,8 @@ object TextOps {
                   * 1000000 + 0.5) / 1000000.0 AS hit10,
                 floor((CAST(mrr_num AS DOUBLE) / (2520.0 * n_queries))
                   * 1000000 + 0.5) / 1000000.0 AS mrr
-         FROM a""",
-    "q_text_fertility" ->
+         FROM a"""),
+    Query("q_text_fertility", fertility,
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
                 CAST(sum(len(text)) AS BIGINT) AS n_chars,
                 CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_ws,
@@ -4134,8 +4060,8 @@ object TextOps {
                        / sum(len(regexp_extract_all(text,
                            '[a-z]{1,4}', 0))))
                   * 1000000 + 0.5) / 1000000.0 AS chars_per_token
-         FROM documents GROUP BY lang ORDER BY lang""",
-    "q_text_tokencount" ->
+         FROM documents GROUP BY lang ORDER BY lang"""),
+    Query("q_text_tokencount", tokencount,
       """SELECT doc_id,
                 CAST(len(string_split(text, ' ')) AS INTEGER) AS n_ws,
                 CAST(len(regexp_extract_all(text, '[a-z]+', 0)) AS INTEGER)
@@ -4143,15 +4069,15 @@ object TextOps {
                 CAST(len(regexp_extract_all(text, '[a-z]{1,4}', 0))
                      AS INTEGER) AS n_bpe,
                 CAST(length(text) AS INTEGER) AS n_chars_check
-         FROM documents ORDER BY doc_id""",
-    "q_text_fingerprint" ->
+         FROM documents ORDER BY doc_id"""),
+    Query("q_text_fingerprint", fingerprint,
       """SELECT doc_id, min(md5(substring(text, i, 8))) AS shingle_fp
          FROM (SELECT doc_id, text,
                       unnest(generate_series(1,
                         greatest(length(text) - 7, 1))) AS i
                FROM documents) t
-         GROUP BY doc_id ORDER BY doc_id""",
-    "q_text_chunk_dedup" ->
+         GROUP BY doc_id ORDER BY doc_id"""),
+    Query("q_text_chunk_dedup", chunkDedup,
       """WITH tk AS (
            SELECT doc_id,
                   CAST(unnest(generate_series(1, len(string_split(text, ' '))))
@@ -4179,5 +4105,7 @@ object TextOps {
                 max(n_toks) AS n_toks
          FROM chunks GROUP BY chunk_fp
          HAVING count(*) >= 2
-         ORDER BY chunk_fp""")
+         ORDER BY chunk_fp"""))
+
+  val queries: Map[String, Q] = Query.builders(declared)
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.{Artifact, Tables}
+import graft.{Artifact, Query, Tables}
+import graft.Query.Q
 import graft.Par.r6
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -26,8 +27,6 @@ import org.apache.spark.sql.functions._
   * top-k frontier is deterministic cross-engine.
   */
 object VectorOps {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Raw float arrays — graft_dot (custom codegen Expression, see
     * graft.functions.DotProductFloat) folds them in double directly,
     * with the same sequential accumulation order as the zip_with/aggregate
@@ -1527,44 +1526,6 @@ object VectorOps {
       .orderBy("qid")
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_sim_mmr" -> simMmr,
-    "q_eval_probe_sweep" -> evalProbeSweep,
-    "q_eval_cluster_purity" -> evalClusterPurity,
-    "q_eval_binary_recall" -> evalBinaryRecall,
-    "q_eval_ndcg" -> evalNdcg,
-    "q_eval_map" -> evalMap,
-    "q_eval_rbo" -> evalRbo,
-    "q_eval_kappa" -> evalKappa,
-    "q_ann_ivfpq" -> annIvfPq,
-    "q_embed_norm_stats" -> embedNormStats,
-    "q_vec_centroid_classify" -> centroidClassify,
-    "q_vec_project" -> vecProject,
-    "q_eval_rp_distortion" -> rpDistortion,
-    "q_vec_calibration" -> vecCalibration,
-    "q_embed_erank" -> embedErank,
-    "q_embed_pca_top1" -> pcaTop1,
-    "q_eval_lsh_recall" -> lshRecall,
-    "q_embed_drift" -> embedDrift,
-    "q_ann_kmeans" -> annKmeans,
-    "q_embed_pq" -> embedPq,
-    "q_eval_pq_recall" -> evalPqRecall,
-    "q_dedup_semantic" -> dedupSemantic,
-    "q_embed_quantize" -> embedQuantize,
-    "q_sim_cosine_topk" -> cosineTopk,
-    "q_dedup_embed" -> dedupEmbed,
-    "q_dedup_embed_lsh" -> dedupEmbedLsh,
-    "q_vec_norm" -> vecNorm,
-    "q_sim_knn_label" -> knnLabel,
-    "q_sim_hard_negatives" -> hardNegatives,
-    "q_embed_outliers" -> embedOutliers,
-    "q_ann_ivf" -> annIvf,
-    "q_vec_margin" -> vecMargin,
-    "q_vec_label_noise" -> labelNoise,
-    "q_sample_kcenter" -> sampleKcenter,
-    "q_eval_ivf_recall" -> evalIvfRecall,
-    "q_eval_mrl_recall" -> evalMrlRecall)
-
   /** Shared oracle fragment: the PQ training chain (8 subspaces × k=4,
     * one Lloyd round, r6 squared-L2 argmin with code tie-break) ending
     * in `a2` = final (vec_id, m, code, dist_r) — referenced by
@@ -1837,10 +1798,10 @@ object VectorOps {
        WHERE rn = 1)"""
   }
 
-  val oracle: Map[String, String] = Map(
+  val declared: Seq[Query] = Seq(
     // sign-bit codes packed into two shifted-flag halves, hamming =
     // bit_count(xor), ascending rank vs the exact graft_dot top-10
-    "q_eval_binary_recall" ->
+    Query("q_eval_binary_recall", evalBinaryRecall,
       """WITH el AS (
            SELECT vec_id,
                   CAST(unnest(generate_series(1, len(embedding))) - 1
@@ -1890,10 +1851,10 @@ object VectorOps {
                   * 1000000 + 0.5) / 1000000.0 AS recall
          FROM exact ex LEFT JOIN bin b
            ON b.qid = ex.qid AND b.nid = ex.nid
-         GROUP BY ex.qid ORDER BY ex.qid""",
+         GROUP BY ex.qid ORDER BY ex.qid"""),
     // kmeansCtes' round-2 assignment a3 → contingency census → purity
     // and NMI via ordered folds on exact integer counts
-    "q_eval_cluster_purity" ->
+    Query("q_eval_cluster_purity", evalClusterPurity,
       s"""WITH $kmeansCtes,
          lab AS (SELECT vec_id, label FROM embeddings),
          cells AS (SELECT a3.cid, lab.label,
@@ -1930,10 +1891,10 @@ object VectorOps {
                 floor((hl) * 1000000 + 0.5) / 1000000.0 AS h_label,
                 floor((2.0 * mi / (hc + hl)) * 1000000 + 0.5)
                   / 1000000.0 AS nmi
-         FROM mif CROSS JOIN hcf CROSS JOIN hlf CROSS JOIN ntf""",
+         FROM mif CROSS JOIN hcf CROSS JOIN hlf CROSS JOIN ntf""", cap = 9),
     // the ivfCtes centroid/query chain widened to a 3-deep probe rank;
     // candidates scored once, the sweep re-cuts them per probe depth
-    "q_eval_probe_sweep" ->
+    Query("q_eval_probe_sweep", evalProbeSweep,
       """WITH dm AS (
            SELECT vec_id, label,
                   CAST(unnest(generate_series(1, len(embedding))) - 1
@@ -1990,8 +1951,8 @@ object VectorOps {
          SELECT nprobe, n_exact, n_hit,
                 floor((CAST(n_hit AS DOUBLE) / n_exact)
                       * 1000000 + 0.5) / 1000000.0 AS recall
-         FROM res ORDER BY nprobe""",
-    "q_sim_mmr" ->
+         FROM res ORDER BY nprobe"""),
+    Query("q_sim_mmr", simMmr,
       s"""WITH q AS (SELECT vec_id AS qid, embedding AS qv
              FROM embeddings WHERE vec_id < 3),
          rel0 AS (
@@ -2026,12 +1987,12 @@ object VectorOps {
            SELECT * FROM s1 UNION ALL SELECT * FROM s2
            UNION ALL SELECT * FROM s3 UNION ALL SELECT * FROM s4
            UNION ALL SELECT * FROM s5) u
-         ORDER BY qid, step""",
+         ORDER BY qid, step""", cap = 9),
     // Both engines fold DCG terms sequentially in rank order and build
     // IDCG from an explicit 1..min(10,n_rel) series; list_reduce's
     // first-element init matches aggregate's 0D init exactly because
     // 0.0 + t == t in IEEE for finite t.
-    "q_eval_ndcg" ->
+    Query("q_eval_ndcg", evalNdcg,
       """WITH q AS (SELECT vec_id AS qid, label AS qlabel,
                            embedding AS qv
                     FROM embeddings WHERE vec_id < 3),
@@ -2067,11 +2028,11 @@ object VectorOps {
            FROM dcg d JOIN nrel USING (qid))
          SELECT qid, n_rel, dcg_r, idcg_r,
                 floor((dcg_r / idcg_r) * 1000000 + 0.5) / 1000000.0 AS ndcg
-         FROM j ORDER BY qid""",
+         FROM j ORDER BY qid""", cap = 5),
     // Precision terms are exact small-int divisions r6-pinned before a
     // ≤10-term ordered fold; min(10, n_rel) divides two bit-identical
     // doubles — the NDCG discipline applied to MAP.
-    "q_eval_map" ->
+    Query("q_eval_map", evalMap,
       """WITH q AS (SELECT vec_id AS qid, label AS qlabel,
                            embedding AS qv
                     FROM embeddings WHERE vec_id < 3),
@@ -2106,11 +2067,11 @@ object VectorOps {
          SELECT a.qid AS qid, n_rel, n_hits10,
                 floor((sum_t / least(10, n_rel)) * 1000000 + 0.5)
                   / 1000000.0 AS ap
-         FROM ap a JOIN nrel USING (qid) ORDER BY qid""",
+         FROM ap a JOIN nrel USING (qid) ORDER BY qid""", cap = 5),
     // Ranking B scores are integer dots of the q_embed_quantize affine
     // codes (exact cross-engine); the (qid, depth) grid is left-joined
     // so a 0-overlap prefix contributes a 0 term instead of dropping.
-    "q_eval_rbo" ->
+    Query("q_eval_rbo", evalRbo,
       """WITH q AS (SELECT vec_id AS qid, embedding AS qv
                     FROM embeddings WHERE vec_id < 3),
          exact AS (
@@ -2170,8 +2131,8 @@ object VectorOps {
                 max(CASE WHEN dep = 10 THEN x_d END) AS overlap10,
                 floor((0.1 * list_reduce(list(term ORDER BY dep),
                     (a, b) -> a + b)) * 1000000 + 0.5) / 1000000.0 AS rbo
-         FROM tm GROUP BY qid ORDER BY qid""",
-    "q_embed_norm_stats" ->
+         FROM tm GROUP BY qid ORDER BY qid"""),
+    Query("q_embed_norm_stats", embedNormStats,
       """WITH n AS (
            SELECT label,
                   floor(sqrt(list_inner_product(
@@ -2183,16 +2144,16 @@ object VectorOps {
                 floor(avg(norm_r) * 1000000 + 0.5) / 1000000.0 AS avg_norm,
                 min(norm_r) AS min_norm,
                 max(norm_r) AS max_norm
-         FROM n GROUP BY label ORDER BY label""",
-    "q_vec_centroid_classify" ->
+         FROM n GROUP BY label ORDER BY label"""),
+    Query("q_vec_centroid_classify", centroidClassify,
       s"""WITH $centroidPredCtesSql
          SELECT true_label, pred_label, CAST(count(*) AS BIGINT) AS n
          FROM pred GROUP BY true_label, pred_label
-         ORDER BY true_label, pred_label""",
+         ORDER BY true_label, pred_label""", cap = 5),
     // kappa = (N·agree − Σ row·col)/(N² − Σ row·col): one division of
     // exact BIGINTs over the |labels|² confusion census; the pred CTE
     // chain is SHARED with q_vec_centroid_classify's oracle.
-    "q_eval_kappa" ->
+    Query("q_eval_kappa", evalKappa,
       s"""WITH $centroidPredCtesSql,
          conf AS (SELECT true_label, pred_label,
                          CAST(count(*) AS BIGINT) AS n
@@ -2217,8 +2178,8 @@ object VectorOps {
                 floor((CAST(n_total * n_agree - sum_rc AS DOUBLE)
                        / (n_total * n_total - sum_rc))
                   * 1000000 + 0.5) / 1000000.0 AS kappa
-         FROM ag CROSS JOIN rc""",
-    "q_eval_rp_distortion" ->
+         FROM ag CROSS JOIN rc""", cap = 6),
+    Query("q_eval_rp_distortion", rpDistortion,
       """WITH pl AS (
            SELECT k, j,
                   CASE WHEN (strpos('0123456789abcdef', substring(
@@ -2263,8 +2224,8 @@ object VectorOps {
                         WHERE abs(rm / 1000000.0 - 1.0) <= 0.5)
                       AS DOUBLE) / count(*))
                   * 1000000 + 0.5) / 1000000.0 AS within_50pct_rate
-         FROM rr""",
-    "q_embed_erank" ->
+         FROM rr"""),
+    Query("q_embed_erank", embedErank,
       """WITH dm AS (
            SELECT CAST(unnest(generate_series(1, len(embedding))) - 1
                     AS INTEGER) AS pos,
@@ -2292,8 +2253,8 @@ object VectorOps {
                   * 1000000 + 0.5) / 1000000.0 AS erank,
                 floor((CAST(tv AS DOUBLE) * tv / tvv / n_dims)
                   * 1000000 + 0.5) / 1000000.0 AS erank_ratio
-         FROM t""",
-    "q_vec_calibration" ->
+         FROM t"""),
+    Query("q_vec_calibration", vecCalibration,
       """WITH sv AS (SELECT vec_id, label,
                             CAST(embedding AS DOUBLE[]) AS varr
                      FROM embeddings WHERE vec_id % 5 = 0),
@@ -2311,8 +2272,8 @@ object VectorOps {
                   * 1000000 + 0.5) / 1000000.0 AS same_rate,
                 floor((CAST(sum(cm) AS DOUBLE) / count(*) / 1000000.0)
                   * 1000000 + 0.5) / 1000000.0 AS avg_cos
-         FROM bb GROUP BY bin ORDER BY bin""",
-    "q_vec_project" ->
+         FROM bb GROUP BY bin ORDER BY bin"""),
+    Query("q_vec_project", vecProject,
       """WITH pl AS (
            SELECT k, j,
                   CASE WHEN (strpos('0123456789abcdef', substring(
@@ -2328,8 +2289,8 @@ object VectorOps {
          SELECT vec_id, k,
                 floor(list_inner_product(varr, parr) / sqrt(8.0)
                   * 1000000 + 0.5) / 1000000.0 AS proj
-         FROM q CROSS JOIN pa ORDER BY vec_id, k""",
-    "q_sim_hard_negatives" ->
+         FROM q CROSS JOIN pa ORDER BY vec_id, k"""),
+    Query("q_sim_hard_negatives", hardNegatives,
       """WITH q AS (SELECT vec_id AS qid, label AS qlabel,
                            CAST(embedding AS DOUBLE[]) AS qv
                     FROM embeddings WHERE vec_id < 10),
@@ -2344,8 +2305,8 @@ object VectorOps {
                          ORDER BY sim_r DESC, neg_id) AS rk
                 FROM scored)
          SELECT qid, rk, neg_id, sim_r FROM rk
-         WHERE rk <= 3 ORDER BY qid, rk""",
-    "q_embed_outliers" ->
+         WHERE rk <= 3 ORDER BY qid, rk"""),
+    Query("q_embed_outliers", embedOutliers,
       """WITH ex AS (SELECT vec_id, label,
                             CAST(embedding AS DOUBLE[]) AS varr
                      FROM embeddings),
@@ -2365,16 +2326,16 @@ object VectorOps {
          SELECT vec_id, label,
                 floor(sqrt(greatest(d2, 0)) * 1000000 + 0.5)
                   / 1000000.0 AS dist_r
-         FROM d ORDER BY dist_r DESC, vec_id LIMIT 20""",
-    "q_embed_pq" ->
+         FROM d ORDER BY dist_r DESC, vec_id LIMIT 20"""),
+    Query("q_embed_pq", embedPq,
       s"""WITH $pqCtes
          SELECT m, code, count(*) AS n_vecs,
                 floor((CAST(sum(CAST(floor(dist_r * 1000000 + 0.5)
                           AS BIGINT)) AS DOUBLE)
                        / (count(*) * 1000000.0))
                   * 1000000 + 0.5) / 1000000.0 AS mse_r
-         FROM a2 GROUP BY m, code ORDER BY m, code""",
-    "q_eval_pq_recall" ->
+         FROM a2 GROUP BY m, code ORDER BY m, code""", cap = 5),
+    Query("q_eval_pq_recall", evalPqRecall,
       s"""WITH $pqCtes,
          q AS (SELECT m, p, val FROM sub WHERE vec_id = 0),
          qd AS (SELECT c.m, c.code,
@@ -2400,11 +2361,11 @@ object VectorOps {
          SELECT count(*) AS n_hits,
                 floor((count(*) / 10.0) * 1000000 + 0.5) / 1000000.0
                   AS recall_r
-         FROM adc JOIN ex USING (vec_id)""",
+         FROM adc JOIN ex USING (vec_id)""", cap = 8),
     // IVF-PQ: the kmeans chain (coarse quantizer) and the pq_ chain
     // (codebooks, mechanically prefixed) compose in one WITH; ADC runs
     // only over the probed cluster's members.
-    "q_ann_ivfpq" ->
+    Query("q_ann_ivfpq", annIvfPq,
       s"""WITH $kmeansCtes,
          $pqCtesPrefixed,
          probe AS (SELECT cid FROM a3 WHERE vec_id = 0),
@@ -2424,17 +2385,17 @@ object VectorOps {
          JOIN cand c ON a.vec_id = c.vec_id
          JOIN qd ON a.m = qd.m AND a.code = qd.code
          GROUP BY a.vec_id, c.cid
-         ORDER BY est_micros, nid LIMIT 5""",
-    "q_ann_kmeans" ->
+         ORDER BY est_micros, nid LIMIT 5""", cap = 9),
+    Query("q_ann_kmeans", annKmeans,
       s"""WITH $kmeansCtes
          SELECT a3.cid, count(*) AS members,
                 floor((c2.carr[1]) * 1000000 + 0.5) / 1000000.0 AS c0_r
          FROM a3 JOIN c2 ON a3.cid = c2.cid
          GROUP BY a3.cid, c2.carr
-         ORDER BY a3.cid""",
+         ORDER BY a3.cid"""),
     // SemDeDup: the kmeans CTE chain pins the identical cluster
     // assignment, then the pair/drop logic replays within clusters only
-    "q_dedup_semantic" ->
+    Query("q_dedup_semantic", dedupSemantic,
       s"""WITH $kmeansCtes,
          pr AS (SELECT a.cid, a.vec_id AS va, b.vec_id AS vb
                 FROM a3 a JOIN a3 b
@@ -2451,8 +2412,8 @@ object VectorOps {
                 CAST(coalesce(np.n_pairs, 0) AS BIGINT) AS n_pairs,
                 CAST(coalesce(nd.n_dropped, 0) AS BIGINT) AS n_dropped
          FROM m LEFT JOIN np USING (cid) LEFT JOIN nd USING (cid)
-         ORDER BY m.cid""",
-    "q_embed_quantize" ->
+         ORDER BY m.cid"""),
+    Query("q_embed_quantize", embedQuantize,
       """WITH e AS (
            SELECT vec_id,
                   CAST(unnest(generate_series(1, len(embedding)))
@@ -2469,18 +2430,18 @@ object VectorOps {
                FROM e JOIN st USING (pos))
          SELECT vec_id,
                 string_agg(CAST(qv AS VARCHAR), ' ' ORDER BY pos) AS qvec
-         FROM q GROUP BY vec_id ORDER BY vec_id""",
-    "q_sim_cosine_topk" ->
+         FROM q GROUP BY vec_id ORDER BY vec_id"""),
+    Query("q_sim_cosine_topk", cosineTopk,
       """SELECT va, vb, sim_r FROM (
            SELECT a.vec_id AS va, b.vec_id AS vb,
                   floor((list_inner_product(CAST(a.embedding AS DOUBLE[]),
                                             CAST(b.embedding AS DOUBLE[])))
                         * 1000000 + 0.5) / 1000000.0 AS sim_r
            FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id) t
-         ORDER BY sim_r DESC, va, vb LIMIT 10""",
-    "q_dedup_embed" -> embedExactSql,
-    "q_sample_kcenter" -> kcenterSql,
-    "q_eval_lsh_recall" ->
+         ORDER BY sim_r DESC, va, vb LIMIT 10"""),
+    Query("q_dedup_embed", dedupEmbed, embedExactSql),
+    Query("q_sample_kcenter", sampleKcenter, kcenterSql),
+    Query("q_eval_lsh_recall", lshRecall,
       s"""WITH exact AS ($embedExactSql),
          lsh AS ($embedLshSql)
          SELECT ne.n_exact, nl.n_lsh, h.n_hit,
@@ -2489,8 +2450,8 @@ object VectorOps {
          FROM (SELECT count(*) AS n_exact FROM exact) ne
          CROSS JOIN (SELECT count(*) AS n_lsh FROM lsh) nl
          CROSS JOIN (SELECT count(*) AS n_hit
-                     FROM lsh JOIN exact USING (va, vb)) h""",
-    "q_vec_norm" ->
+                     FROM lsh JOIN exact USING (va, vb)) h"""),
+    Query("q_vec_norm", vecNorm,
       """SELECT vec_id,
                 floor((sqrt(list_inner_product(
                         CAST(embedding AS DOUBLE[]),
@@ -2501,10 +2462,10 @@ object VectorOps {
                            CAST(embedding AS DOUBLE[]),
                            CAST(embedding AS DOUBLE[]))))
                       * 1000000 + 0.5) / 1000000.0 AS c0_r
-         FROM embeddings ORDER BY vec_id""",
-    "q_dedup_embed_lsh" -> embedLshSql,
-    "q_embed_pca_top1" -> pcaSql,
-    "q_embed_drift" ->
+         FROM embeddings ORDER BY vec_id"""),
+    Query("q_dedup_embed_lsh", dedupEmbedLsh, embedLshSql),
+    Query("q_embed_pca_top1", pcaTop1, pcaSql),
+    Query("q_embed_drift", embedDrift,
       """WITH dm AS (
            SELECT vec_id, label,
                   CAST(unnest(generate_series(1, len(embedding))) - 1
@@ -2534,8 +2495,8 @@ object VectorOps {
                 floor((dot / (sqrt(na2) * sqrt(nb2))) * 1000000 + 0.5)
                   / 1000000.0 AS cos_ab
          FROM j JOIN counts ON j.label = counts.label
-         ORDER BY j.label""",
-    "q_vec_margin" ->
+         ORDER BY j.label""", cap = 10),
+    Query("q_vec_margin", vecMargin,
       s"""WITH $centCtes,
          sims AS (
            SELECT e.vec_id, e.label, ca.label AS clabel,
@@ -2554,8 +2515,8 @@ object VectorOps {
                   AS avg_margin,
                 CAST(count(*) FILTER (sim_r - nxt < 0.05) AS BIGINT)
                   AS n_low
-         FROM rk WHERE rn = 1 GROUP BY label ORDER BY label""",
-    "q_sim_knn_label" ->
+         FROM rk WHERE rn = 1 GROUP BY label ORDER BY label"""),
+    Query("q_sim_knn_label", knnLabel,
       s"""WITH $centCtes,
          sims AS (
            SELECT e.label, e.vec_id,
@@ -2568,8 +2529,8 @@ object VectorOps {
                   row_number() OVER (PARTITION BY label
                     ORDER BY sim_r DESC, vec_id) AS rn
            FROM sims) t
-         WHERE rn = 1 ORDER BY label""",
-    "q_vec_label_noise" ->
+         WHERE rn = 1 ORDER BY label"""),
+    Query("q_vec_label_noise", labelNoise,
       """WITH sims AS (
            SELECT a.vec_id, a.label, b.vec_id AS nid, b.label AS nlabel,
                   floor((list_inner_product(CAST(a.embedding AS DOUBLE[]),
@@ -2592,16 +2553,16 @@ object VectorOps {
              FROM votes) t
            WHERE vr = 1)
          SELECT vec_id, label, nlabel AS maj_label, votes
-         FROM maj WHERE nlabel != label ORDER BY vec_id""",
-    "q_ann_ivf" ->
+         FROM maj WHERE nlabel != label ORDER BY vec_id""", cap = 6),
+    Query("q_ann_ivf", annIvf,
       s"""WITH $ivfCtes
          SELECT qid, CAST(rnk AS BIGINT) AS rank, vec_id AS nid, sim_r
          FROM (SELECT qid, vec_id, sim_r,
                       row_number() OVER (PARTITION BY qid
                         ORDER BY sim_r DESC, vec_id) AS rnk
                FROM cand) t
-         WHERE rnk <= 3 ORDER BY qid, rank""",
-    "q_eval_ivf_recall" ->
+         WHERE rnk <= 3 ORDER BY qid, rank"""),
+    Query("q_eval_ivf_recall", evalIvfRecall,
       s"""WITH $ivfCtes,
          ivf AS (SELECT qid, vec_id FROM (
                    SELECT qid, vec_id, row_number() OVER (
@@ -2625,11 +2586,11 @@ object VectorOps {
                   / 1000000.0 AS recall
          FROM ext LEFT JOIN ivf ON ext.qid = ivf.qid
                               AND ext.vec_id = ivf.vec_id
-         GROUP BY ext.qid ORDER BY ext.qid""",
+         GROUP BY ext.qid ORDER BY ext.qid"""),
     // One scored scan yields both rankings; the truncated similarity
     // renormalizes by the 16-dim prefix norms (list slice is 1-based
     // inclusive in DuckDB, matching Spark's slice(v, 1, 16)).
-    "q_eval_mrl_recall" ->
+    Query("q_eval_mrl_recall", evalMrlRecall,
       """WITH q AS (SELECT vec_id AS qid, embedding FROM embeddings
                    WHERE vec_id < 5),
          sc AS (
@@ -2663,5 +2624,7 @@ object VectorOps {
                     ELSE 0 END) AS DOUBLE) / count(*)) * 1000000 + 0.5)
                   / 1000000.0 AS recall
          FROM f LEFT JOIN tr ON f.qid = tr.qid AND f.vec_id = tr.vec_id
-         GROUP BY f.qid ORDER BY f.qid""")
+         GROUP BY f.qid ORDER BY f.qid"""))
+
+  val queries: Map[String, Q] = Query.builders(declared)
 }

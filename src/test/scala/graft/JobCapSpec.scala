@@ -1,12 +1,13 @@
 package graft
 
 /** The suite's performance regression guard: every `sbt test` re-counts
-  * the jobs one warm run of each `JobCaps.jobCaps` key submits and fails
-  * if any exceeds its cap — so a reverted driver fold, a dropped session
-  * cache, or an un-batched iteration (each worth 3-20 jobs) fails the
-  * build on the commit that introduces it. Counts are config-invariant
-  * (measured identical at local[2]/sf0.01 and local[32]/sf0.1, see
-  * BASELINE.md), so host weather cannot move the verdict.
+  * the jobs one warm run of each key with a declared `Query.cap` submits
+  * and fails if any exceeds its cap — so a reverted driver fold, a
+  * dropped session cache, or an un-batched iteration (each worth 3-20
+  * jobs) fails the build on the commit that introduces it. Counts are
+  * config-invariant (measured identical at local[2]/sf0.01 and
+  * local[32]/sf0.1, see BASELINE.md), so host weather cannot move the
+  * verdict.
   *
   * Red demo: GRAFT_JOBCAP_BREAK_KEY=q_graph_reach sbt "testOnly
   * graft.JobCapSpec" runs 3 extra one-row counts (6 jobs under AQE)
@@ -14,7 +15,9 @@ package graft
 class JobCapSpec extends SparkSpec {
   test("guarded keys stay within their recorded job-count caps") {
     val sf01 = "/root/testdata/sf0.01"
-    val over = JobCaps.jobCaps.toSeq.sortBy(_._1).flatMap {
+    val caps = SparkEntry.declared.flatMap(q => q.cap.map(q.key -> _))
+    assert(caps.size === 104, "a job cap was added or dropped")
+    val over = caps.sortBy(_._1).flatMap {
       case (key, cap) =>
         val n = JobCaps.countJobs(spark, sf01, key).jobs
         info(f"${if (n <= cap) "OK  " else "OVER"} $key%-28s $n%3d jobs (cap $cap)")

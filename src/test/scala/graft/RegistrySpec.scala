@@ -7,22 +7,19 @@ package graft
 class RegistrySpec extends SparkSpec {
 
   test("no key is declared by two operator packs (silent shadowing)") {
-    val packs = Seq(
-      "RelationalOps" -> operators.RelationalOps.queries.keySet,
-      "ScalarOps" -> operators.ScalarOps.queries.keySet,
-      "EventOps" -> operators.EventOps.queries.keySet,
-      "TextOps" -> operators.TextOps.queries.keySet,
-      "VectorOps" -> operators.VectorOps.queries.keySet,
-      "FunctionOps" -> operators.FunctionOps.queries.keySet,
-      "DedupOps" -> operators.DedupOps.queries.keySet,
-      "GraphOps" -> operators.GraphOps.queries.keySet,
-      "StatsOps" -> operators.StatsOps.queries.keySet,
-      "MultimodalOps" -> operators.MultimodalOps.queries.keySet)
-    val all = packs.flatMap { case (p, ks) => ks.map(_ -> p) }
-    val dups = all.groupBy(_._1).filter(_._2.size > 1)
-    assert(dups.isEmpty, s"keys declared twice: ${dups.map {
-      case (k, ps) => s"$k in ${ps.map(_._2).mkString("+")}" }}")
-    assert(all.size === SparkEntry.queries.size)
+    // within a pack as well as across packs
+    val keys = SparkEntry.declared.map(_.key)
+    assert(keys.diff(keys.distinct).isEmpty,
+      s"keys declared twice: ${keys.diff(keys.distinct)}")
+    assert(keys.size === 369)
+    assert(SparkEntry.queries.size === keys.size)
+  }
+
+  test("deriving the registry throws on a duplicated declaration") {
+    val q = SparkEntry.declared.head
+    val e = intercept[IllegalArgumentException](
+      Query.byKey(SparkEntry.declared :+ q))
+    assert(e.getMessage.contains(q.key))
   }
 
   test("declared artifact names are unique") {
