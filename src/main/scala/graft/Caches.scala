@@ -129,6 +129,15 @@ object Caches {
     case _ =>
   }
 
+  /** Release the checkpoints `df`'s plan reads. A build calls it once
+    * the value it keeps has been materialized from `df` and no longer
+    * reads them, so intermediates do not outlive the build. */
+  private[graft] def releaseInputs(df: Dataset[_]): Unit =
+    df.queryExecution.logical.collectLeaves().foreach {
+      case r: LogicalRDD => persisted(r.rdd).foreach(_.unpersist(false))
+      case _ =>
+    }
+
   /** The nearest persisted RDD along one-to-one dependencies. */
   private def persisted(rdd: RDD[_]): Option[RDD[_]] =
     if (rdd.getStorageLevel != StorageLevel.NONE) Some(rdd)

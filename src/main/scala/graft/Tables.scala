@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -142,23 +146,31 @@ object Tables {
   def documents(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "documents")
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "embeddings")
 
-  /** Sniff the parquet logical type of `ts` via Spark's own schema
-    * inference (with nanosAsLong=true a TIMESTAMP(NANOS) column infers as
-    * LongType; TIMESTAMP(MICROS, NTZ) infers as TimestampNTZType). The
+  /** Sniff the parquet logical type of `ts` from the footer of the
+    * events.parquet file, read on the driver and converted by Spark's
+    * own ParquetToSparkSchemaConverter under the session conf: with
+    * nanosAsLong=true a TIMESTAMP(NANOS) column converts to LongType;
+    * TIMESTAMP(MICROS, NTZ) converts to TimestampNTZType. This is the
+    * type schema inference would report,
+    * without the inference job `spark.read.parquet(p).schema` runs. The
     * round-5 testdata regeneration silently flipped NANOS→MICROS and a
     * hardcoded `div 1000` collapsed a month of events into 43 minutes of
     * 1970 — hence unit detection instead of a declared assumption. An
-    * artifact, so the sniff is one driver-side schema read per (session,
-    * dir) although events() is called hundreds of times per bench run. */
+    * artifact, so the sniff is one footer read per (session, dir)
+    * although events() is called hundreds of times per bench run. */
   val eventsTsUnit = Artifact("events_ts_unit") { (spark, dir) =>
     configure(spark)
     val p = s"$dir/events.parquet"
-    spark.read.parquet(p).schema.fields.find(_.name == "ts")
-      .map(_.dataType) match {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(p),
+      spark.sessionState.newHadoopConf()))
+    val footer =
+      try reader.getFooter.getFileMetaData.getSchema finally reader.close()
+    new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(footer)
+      .fields.find(_.name == "ts").map(_.dataType) match {
       case Some(LongType)                              => "ns"
       case Some(TimestampNTZType) | Some(TimestampType) => "us"
       case other => sys.error(
-        s"events.ts at $p has unsupported parquet-inferred type $other " +
+        s"events.ts at $p has unsupported parquet footer type $other " +
           "(expected TIMESTAMP(NANOS)->long or TIMESTAMP(MICROS)->ntz); " +
           "update Tables.eventsTsUnit for the new testdata layout")
     }

@@ -6,6 +6,7 @@ import graft.Par.{r2, r6}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Relational core: scans, predicates, joins, aggregations, windows, sorts,
   * set ops (SURVEY.md §2.1–§2.7).
@@ -674,11 +675,13 @@ object RelationalOps {
     * (session, dir) scans lineitem once, joins the constant curve LUT,
     * and runs the four exact Dist.withNtile(16) passes (natural, zorder
     * over zx/zy; hilbert, morton over hx/hy); every consumer then reads
-    * a persisted ≤64-row frame — exactly the footer-stats manifest a
-    * lakehouse table maintains incrementally at 100 TB, where each
-    * OPTIMIZE pass appends file stats rather than re-sorting the corpus
-    * per audit query. The zx/zy data bounds ride along as columns so the
-    * skipping box needs no extra scan. */
+    * a ≤64-row frame held on the driver — exactly the footer-stats
+    * manifest a lakehouse table maintains incrementally at 100 TB, where
+    * each OPTIMIZE pass appends file stats rather than re-sorting the
+    * corpus per audit query. The zx/zy data bounds ride along as columns
+    * so the skipping box needs no extra scan. Holding the rows on the
+    * driver lets the build release the coordinate checkpoint and the
+    * four ranged copies they came from. */
   private val layoutStats = Artifact("layout_stats") { (s, d) =>
     // one shared base scan: Morton coords (zx, zy, zval — mod-65536
     // keys) plus the 8-bit multiplicative-hash grid (hx, hy) and its
@@ -710,7 +713,7 @@ object RelationalOps {
     val bounds = coords.agg(
       min(col("zx")).as("bx0"), max(col("zx")).as("bx1"),
       min(col("zy")).as("by0"), max(col("zy")).as("by1"))
-    files("natural", "zx", "zy",
+    val stats = files("natural", "zx", "zy",
         Seq(col("l_orderkey"), col("l_linenumber")),
         Seq("l_orderkey", "l_linenumber", "zx", "zy"))
       .unionAll(files("zorder", "zx", "zy",
@@ -723,7 +726,9 @@ object RelationalOps {
         Seq(col("mor"), col("l_orderkey"), col("l_linenumber")),
         Seq("mor", "l_orderkey", "l_linenumber", "hx", "hy")))
       .crossJoin(broadcast(bounds))
-      .persist()
+    val kept = s.createDataFrame(stats.collect().toSeq.asJava, stats.schema)
+    graft.Caches.releaseInputs(stats)
+    kept
   }
 
   private val layoutSkipping: Q = (s, d) =>

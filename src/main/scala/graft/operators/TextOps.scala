@@ -1680,11 +1680,14 @@ object TextOps {
         .select(lit(round.toLong).as("round"),
           col("pr").as("merge_rule"), col("cnt"))
         .localCheckpoint()
-      state = state.crossJoin(broadcast(best.select(col("merge_rule"))))
+      val next = state.crossJoin(broadcast(best.select(col("merge_rule"))))
         .select(expr("replace(sym, ' ' || replace(merge_rule, ' ', '  ')" +
           " || ' ', ' ' || replace(merge_rule, ' ', '') || ' ')").as("sym"),
           col("f"))
         .localCheckpoint()
+      // the replaced state is read by nothing kept: release it now
+      graft.Caches.release(state)
+      state = next
       best
     }
     (merges, state)

@@ -290,16 +290,78 @@ object VectorOps {
     * pass a curation pipeline uses to pick a maximally-spread subset:
     * greedily add the point farthest (1 − cosine, r6-rounded before the
     * argmax so both engines rank identical values) from the chosen set.
-    * k=8 rounds; smallest-id start and tie-breaks. Driver state is k
-    * rows — the bounded-collect pattern of the k-means trainer; each
-    * round is one broadcast-literal dot pass + a TakeOrdered(1). The
-    * emitted radius sequence is the classic 2-approximation coverage
-    * certificate (non-increasing). Rounds recompute the lineage chain
-    * (k² cheap passes at bench scale); at 100 TB persist the running
-    * min-distance frame per round instead — the algorithm is unchanged. */
+    * k=8 rounds; smallest-id start and tie-breaks. The emitted radius
+    * sequence is the classic 2-approximation coverage certificate
+    * (non-increasing).
+    *
+    * The round count is fixed by k and each round needs the previous
+    * round's pick, so when the embeddings fit one process the k rounds
+    * run in ONE task (kcenterPicks): the frame is lazy, building it runs
+    * no job, and the action is the key's only job. "Fit one process" is
+    * the line Spark already draws for shipping a whole relation to one
+    * place: the relation's Catalyst size estimate (a statistic, no job)
+    * within the session's spark.sql.autoBroadcastJoinThreshold. Above
+    * it, kcenterLoop is the unbounded-scale path: one broadcast-literal
+    * dot pass + TakeOrdered(1) per round on the driver. Both paths
+    * share the arithmetic, so they pick the same rows. */
   private val sampleKcenter: Q = (s, d) => {
     val k = 8
     val e = vecs(s, d)
+    if (e.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        s.sessionState.conf.autoBroadcastJoinThreshold) {
+      import s.implicits._
+      e.as[(Long, Int, Array[Float])]
+        .coalesce(1)
+        .mapPartitions(kcenterPicks(k))
+        .toDF("round", "vec_id", "label", "radius")
+    } else kcenterLoop(s, e, k)
+  }
+
+  /** The greedy rounds over one partition: the vectors in vec_id order,
+    * a running minimum distance per vector, and a strict-`>` argmax so
+    * a tie goes to the smaller vec_id. Distances use graft_dot's
+    * arithmetic (a sequential float→double fold) and Par.r6d, the same
+    * doubles kcenterLoop and the oracle rank. Emits the k picks in
+    * round order; with fewer than k vectors the later rounds repeat the
+    * smallest-id vector among the farthest, as the oracle's LIMIT 1
+    * does. */
+  private def kcenterPicks(k: Int)(rows: Iterator[(Long, Int, Array[Float])])
+      : Iterator[(Int, Long, Int, Double)] = {
+    val pts = rows.toArray.sortBy(_._1)
+    def dist(a: Array[Float], b: Array[Float]): Double = {
+      var acc = 0.0
+      var i = 0
+      while (i < math.min(a.length, b.length)) {
+        acc += a(i).toDouble * b(i).toDouble
+        i += 1
+      }
+      graft.Par.r6d(1.0 - acc)
+    }
+    val minDist = Array.fill(pts.length)(Double.PositiveInfinity)
+    var pick = 0
+    var radius = 2.0
+    if (pts.isEmpty) Iterator.empty
+    else (0 until k).iterator.map { round =>
+      if (round > 0) {
+        pts.indices.foreach { j =>
+          minDist(j) = math.min(minDist(j), dist(pts(j)._3, pts(pick)._3))
+        }
+        pick = 0
+        pts.indices.foreach(j => if (minDist(j) > minDist(pick)) pick = j)
+        radius = minDist(pick)
+      }
+      (round, pts(pick)._1, pts(pick)._2, radius)
+    }
+  }
+
+  /** The distributed rounds: each round collects its argmax (one
+    * broadcast-literal dot pass + a TakeOrdered(1)), and driver state is
+    * k rows — the bounded-collect pattern of the k-means trainer.
+    * Rounds recompute the lineage chain (k² passes); at 100 TB persist
+    * the running min-distance frame per round instead — the algorithm
+    * is unchanged. */
+  private def kcenterLoop(s: SparkSession, e: DataFrame, k: Int)
+      : DataFrame = {
     val c0 = e.orderBy("vec_id").limit(1).collect()(0)
     var sel = Vector[(Int, Long, Int, Double)](
       (0, c0.getLong(0), c0.getInt(1), 2.0))
@@ -2440,7 +2502,7 @@ object VectorOps {
            FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id) t
          ORDER BY sim_r DESC, va, vb LIMIT 10"""),
     Query("q_dedup_embed", dedupEmbed, embedExactSql),
-    Query("q_sample_kcenter", sampleKcenter, kcenterSql),
+    Query("q_sample_kcenter", sampleKcenter, kcenterSql, cap = 3),
     Query("q_eval_lsh_recall", lshRecall,
       s"""WITH exact AS ($embedExactSql),
          lsh AS ($embedLshSql)

@@ -86,7 +86,11 @@ class CacheSpec extends SparkSpec {
     // family: the census must not grow.
     withPrivateDir { aDir =>
       assert(Caches.entriesFor(aDir) === 0)
+      def persisted = spark.sparkContext.getPersistentRDDs.keySet
+      val idsBefore = persisted
       Caches.declared.foreach(_.warm(spark, aDir))
+      val warmed = persisted -- idsBefore
+      assert(warmed.nonEmpty)
       Caches.declared.foreach(a =>
         assert(a.entriesFor(aDir) > 0, s"artifact ${a.name} was not warmed"))
       val before = Caches.entriesFor(aDir)
@@ -115,6 +119,12 @@ class CacheSpec extends SparkSpec {
           s"$k built a session cache the warmup did not — declare it " +
             "as a graft.Artifact")
       }
+      // invalidate releases everything the warmup persisted, the
+      // intermediate checkpoints the builds did not keep included
+      Caches.invalidate(aDir)
+      val leaked = persisted intersect warmed
+      assert(leaked.isEmpty, s"${leaked.size} of ${warmed.size} RDDs the " +
+        s"warmup persisted are still persisted after invalidate: $leaked")
     }
   }
 

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.Files
+
 /** The suite's performance regression guard: every `sbt test` re-counts
   * the jobs one warm run of each key with a declared `Query.cap` submits
   * and fails if any exceeds its cap — so a reverted driver fold, a
@@ -16,7 +18,7 @@ class JobCapSpec extends SparkSpec {
   test("guarded keys stay within their recorded job-count caps") {
     val sf01 = "/root/testdata/sf0.01"
     val caps = SparkEntry.declared.flatMap(q => q.cap.map(q.key -> _))
-    assert(caps.size === 104, "a job cap was added or dropped")
+    assert(caps.size === 105, "a job cap was added or dropped")
     val over = caps.sortBy(_._1).flatMap {
       case (key, cap) =>
         val n = JobCaps.countJobs(spark, sf01, key).jobs
@@ -24,5 +26,31 @@ class JobCapSpec extends SparkSpec {
         if (n > cap) Some(s"$key: $n jobs > cap $cap") else None
     }
     assert(over.isEmpty, s"\njob-cap breach:\n${over.mkString("\n")}")
+  }
+
+  test("building q_sample_kcenter and q_events_retention submits no job") {
+    // A fresh private copy of the data dir: no artifact is built for it
+    // (events_ts_unit among them), so the count covers everything a
+    // first build of each key runs eagerly. Only the builder call is
+    // counted; no action runs.
+    val dir = Files.createTempDirectory("graft-build-jobs")
+    new java.io.File("/root/testdata/sf0.01").listFiles().foreach { f =>
+      Files.copy(f.toPath, dir.resolve(f.getName))
+    }
+    try {
+      val built = Seq("q_sample_kcenter", "q_events_retention").map { key =>
+        val counter = new JobCaps.JobCounter(spark)
+        try {
+          counter.reset()
+          SparkEntry.queries(key)(spark, dir.toString)
+          key -> counter.get
+        } finally counter.close()
+      }
+      assert(built.forall(_._2 == 0), s"jobs submitted while building: $built")
+    } finally {
+      Caches.invalidate(dir.toString)
+      dir.toFile.listFiles().foreach(_.delete())
+      dir.toFile.delete(): Unit
+    }
   }
 }

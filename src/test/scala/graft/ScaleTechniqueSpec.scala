@@ -214,6 +214,37 @@ class ScaleTechniqueSpec extends SparkSpec {
     } finally DedupOps.DriverCcEdgeThreshold = saved
   }
 
+  test("greedy k-center: the one-task rounds equal the distributed loop") {
+    // Fewer than k = 8 vectors, with duplicates: exercises the vec_id
+    // tie-breaks and the n < k rounds that repeat a pick.
+    val small = Files.createTempDirectory("graft-kcenter").toString
+    val rnd = new scala.util.Random(7)
+    val base = Seq.fill(3)(Array.fill(64)(rnd.nextGaussian().toFloat))
+      .map { v => val n = math.sqrt(v.map(x => x * x).sum); v.map(_ / n.toFloat) }
+    Seq((5L, base(0), 1), (3L, base(1), 0), (9L, base(0), 2),
+        (4L, base(2), 1), (7L, base(1), 1))
+      .toDF("vec_id", "embedding", "label").coalesce(1)
+      .write.parquet(s"$small/embeddings.parquet")
+    val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
+    def picks(dir: String) = {
+      val df = SparkEntry.queries("q_sample_kcenter")(spark, dir)
+      (df.queryExecution.analyzed.toString.contains("MapPartitions"),
+        df.collect().map(_.toSeq).toSeq)
+    }
+    for (dir <- Seq(sfDir, small)) {
+      val (oneTaskPath, oneTask) = picks(dir)
+      // force the distributed loop on the SAME embeddings
+      val saved = spark.conf.get(thresholdKey)
+      spark.conf.set(thresholdKey, "-1")
+      try {
+        val (loopOneTask, loop) = picks(dir)
+        assert(oneTaskPath && !loopOneTask, s"$dir: path not selected")
+        assert(oneTask === loop, s"$dir")
+        assert(oneTask.map(_.head) === (0 until 8))
+      } finally spark.conf.set(thresholdKey, saved)
+    }
+  }
+
   test("all-pairs ceiling: q_dedup_near and q_dedup_containment flip to" +
       " banded plans with identical output") {
     import graft.operators.TextOps
