@@ -18,22 +18,39 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   fold or a dropped session artifact costs 3-20 jobs and trips it,
   *   organic variance does not. Capped keys are the ones whose counts
   *   the job work pinned down (session artifacts, bounded-census driver
-  *   folds, iteration unrolls) and the slowest keys of the fleet. */
+  *   folds, iteration unrolls) and the slowest keys of the fleet.
+  * @param allowances the `PlanLint` shapes this key's plan may hold,
+  *   each with the bound Catalyst cannot see, in words */
 final class Query private (val key: String, val build: Query.Q,
-    val oracle: Option[String], val cap: Option[Int])
+    val oracle: Option[String], val cap: Option[Int],
+    val allowances: Map[PlanLint.Shape, String]) {
+
+  /** Allows a global window over a frame Catalyst cannot bound. */
+  def allowGlobalWindow(bound: String): Query =
+    allow(PlanLint.GlobalWindow, bound)
+
+  /** Allows a non-equi join whose two sides Catalyst cannot bound. */
+  def allowUnboundedJoin(bound: String): Query =
+    allow(PlanLint.UnboundedJoin, bound)
+
+  private def allow(shape: PlanLint.Shape, bound: String): Query = {
+    require(bound.trim.nonEmpty, s"$key: an allowance needs its bound")
+    new Query(key, build, oracle, cap, allowances + (shape -> bound))
+  }
+}
 
 object Query {
   type Q = (SparkSession, String) => DataFrame
 
   def apply(key: String, build: Q, oracle: String): Query =
-    new Query(key, build, Some(oracle), None)
+    new Query(key, build, Some(oracle), None, Map.empty)
 
   def apply(key: String, build: Q, oracle: String, cap: Int): Query =
-    new Query(key, build, Some(oracle), Some(cap))
+    new Query(key, build, Some(oracle), Some(cap), Map.empty)
 
   /** A key with no exact oracle; a spec bounds its error instead. */
   def withoutOracle(key: String, build: Q): Query =
-    new Query(key, build, None, None)
+    new Query(key, build, None, None, Map.empty)
 
   /** The declarations by key. Throws on a key declared twice, which a
     * `Map(...)` literal would resolve silently by keeping the last. */

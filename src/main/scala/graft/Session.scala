@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The local session of the command-line entry points (Bench, Verify,
-  * JobCount, TimeOne and ExplainAudit): `local[N]` with N shuffle
+  * JobCount and TimeOne): `local[N]` with N shuffle
   * partitions, N from SPARK_GRAFT_CPUS (default 4), with the tables
   * configured. Spark's generated-class cache holds 100 entries (a static
   * conf), and a 369-key run evicts everything; it is sized here to hold

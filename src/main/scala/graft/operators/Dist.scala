@@ -42,8 +42,8 @@ object Dist {
     df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
 
   /** Runs the eager actions inside Dist (range checkpoint, offset
-    * collects) with AQE off, restoring the conf after (serialized per
-    * session, the GraphOps.noAqeCheckpoint discipline). AQE has nothing
+    * collects) with AQE off, restoring the conf after; GraphOps'
+    * AQE-off checkpoints run in the same scope. AQE has nothing
     * to improve here — the range exchange carries an EXPLICIT partition
     * count AQE must respect and the offset aggregates are
     * O(partitions)-row — but each materialization would still fan into
@@ -52,8 +52,15 @@ object Dist {
     * Dist-using key's cost). The scope covers ONLY the
     * construction-time actions: consumer plans downstream still run
     * with the session's AQE setting. */
-  private def noAqe[A](s: org.apache.spark.sql.SparkSession)(f: => A): A =
+  private[operators] def noAqe[A](s: org.apache.spark.sql.SparkSession)(
+      f: => A): A =
     s.synchronized {
+      // serialized per session: the save/set/restore of a SHARED session
+      // conf would otherwise race with concurrent query construction on
+      // the same SparkSession (planning an unrelated query with AQE off,
+      // or leaking 'false' via interleaved restores). Registry callers
+      // are sequential; the lock makes the scope safe for library users
+      // who construct queries from multiple threads.
       val key = "spark.sql.adaptive.enabled"
       val saved = s.conf.get(key, "true")
       s.conf.set(key, "false")

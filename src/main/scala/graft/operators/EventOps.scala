@@ -1423,8 +1423,8 @@ object EventOps {
     // crossJoin(broadcast(agg)) form evaluated the whole s1/c1/p1
     // upstream TWICE (once per action on perUser) and paid a broadcast
     // QueryStage job; this is one pass, one subtree (15 → 7 jobs).
-    // Partition-less window over a |depths|-bounded census = the
-    // allowlisted census-window pattern.
+    // Partition-less window over a |depths|-bounded census: the
+    // declared census-window allowance.
     val census = perUser.groupBy("depth").agg(count(lit(1)).as("n_users"))
     val wAll = org.apache.spark.sql.expressions.Window
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
@@ -1617,7 +1617,8 @@ object EventOps {
                 floor((CAST(count(*) AS DOUBLE) / n_total)
                   * 1000000 + 0.5) / 1000000.0 AS share
          FROM pu CROSS JOIN tot
-         GROUP BY depth, n_total ORDER BY depth""", cap = 14),
+         GROUP BY depth, n_total ORDER BY depth""", cap = 14)
+      .allowGlobalWindow("<= 4-row depth census"),
     Query("q_events_markov_stationary", markovStationary,
       s"""WITH pr AS (
            SELECT user_id, event_type AS a,
@@ -1898,7 +1899,8 @@ object EventOps {
                        ELSE pv + (nv - pv) * CAST(hr - ph AS DOUBLE)
                             / (nh - ph) END) * 1000000 + 0.5)
                   / 1000000.0 AS v_fill
-         FROM f ORDER BY hr"""),
+         FROM f ORDER BY hr""")
+      .allowGlobalWindow("|hours| spine"),
     Query("q_events_forecast_naive", forecastNaive,
       """WITH daily AS (
            SELECT epoch_us(ts) // 86400000000 AS day,
@@ -1950,7 +1952,9 @@ object EventOps {
          SELECT day, count(*) AS n_days,
                 floor(quantile_cont(rev, 0.5) * 100 + 0.5) / 100.0 AS med7
          FROM daily JOIN spine ON day_num >= day - 6 AND day_num <= day
-         GROUP BY day ORDER BY day"""),
+         GROUP BY day ORDER BY day""")
+      .allowUnboundedJoin(
+        "|days| daily revenues x a 7-day band of the |days| spine"),
     // Token bucket folded with the identical integer lambda; the init
     // state is prepended (list_reduce seeds from the first element).
     Query("q_events_rate_limit", rateLimit,
@@ -2026,7 +2030,8 @@ object EventOps {
                 CAST(sum(ov_us) AS BIGINT) AS overlap_us_sum,
                 CAST(sum(ov_us) AS BIGINT) / 1000000.0 AS overlap_s
          FROM pairs GROUP BY b_start_hr, b_end_hr
-         ORDER BY b_start_hr"""),
+         ORDER BY b_start_hr""")
+      .allowGlobalWindow("|hours| burst census"),
     Query("q_events_bursts", bursts,
       """WITH hourly AS (
            SELECT epoch_us(ts) // 3600000000 AS hr, count(*) AS c
@@ -2043,7 +2048,8 @@ object EventOps {
            FROM flagged)
          SELECT min(hr) AS start_hr, max(hr) AS end_hr,
                 count(*) AS n_hours, max(c) AS peak
-         FROM grp GROUP BY grp ORDER BY start_hr"""),
+         FROM grp GROUP BY grp ORDER BY start_hr""")
+      .allowGlobalWindow("|hours| spine"),
     Query("q_events_seasonality", seasonality,
       """WITH b AS (
            SELECT (epoch_us(ts) // 86400000000 + 4) % 7 AS dow,
@@ -2196,7 +2202,9 @@ object EventOps {
                 count(DISTINCT user_id)
                   FILTER (day_num = day) AS uniques_1d
          FROM du JOIN spine ON day_num >= day - 6 AND day_num <= day
-         GROUP BY day ORDER BY day"""),
+         GROUP BY day ORDER BY day""")
+      .allowUnboundedJoin(
+        "|day x user| rows x a 7-day band of the |days| spine"),
     Query("q_events_funnel_time", funnelTime,
       """WITH ev AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us
                      FROM events),
@@ -2286,7 +2294,8 @@ object EventOps {
                 floor((sum(v) OVER (ORDER BY dnum
                   RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)) * 100 + 0.5)
                   / 100.0 AS v_7d
-         FROM dd ORDER BY day"""),
+         FROM dd ORDER BY day""")
+      .allowGlobalWindow("|days| spine"),
     Query("q_events_dau_mau", dauMau,
       """WITH e AS (SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
                            date_trunc('month', ts) AS month, user_id

@@ -32,30 +32,11 @@ object GraphOps {
     * statically known shapes, so AQE's re-planning has nothing to
     * improve; iterative keys where AQE's coalescing DOES win (lpa:
     * 0.8 s with, 2.1 s without) keep it on. The localCheckpoint runs
-    * the work eagerly inside the conf scope (the kcore/hits accepted
-    * caveat) and hands back a lineage-free bounded frame. */
-  /** When true, noAqeCheckpoint returns the UNmaterialized plan (no
-    * conf scope, no checkpoint) so `.explain` shows the real BFS/agg
-    * shape instead of a degenerate ExistingRDD scan — the plan-audit
-    * hook (ExplainAudit sets it; execution paths never do). */
-  private[graft] var ExplainPlansOnly = false
-
+    * the work eagerly inside the conf scope, while the frame is built,
+    * and hands back a lineage-free bounded frame. */
   private def noAqeCheckpoint(s: SparkSession)(build: => DataFrame)
       : DataFrame =
-    if (ExplainPlansOnly) build
-    else s.synchronized {
-      // serialized per session: the save/set/restore of a SHARED session
-      // conf would otherwise race with concurrent query construction on
-      // the same SparkSession (planning an unrelated query with AQE off,
-      // or leaking 'false' via interleaved restores). Registry callers
-      // are sequential; the lock makes the scope safe for library users
-      // who construct queries from multiple threads.
-      val key = "spark.sql.adaptive.enabled"
-      val saved = s.conf.get(key, "true")
-      s.conf.set(key, "false")
-      try build.localCheckpoint()
-      finally s.conf.set(key, saved)
-    }
+    Dist.noAqe(s)(build.localCheckpoint())
 
   /** Bipartite customer↔part edges, BOTH directions (undirected
     * PageRank), cached per (session, dir) — the index artifact shared
@@ -978,7 +959,8 @@ object GraphOps {
                        - (deg_sum / (2.0 * m)) * (deg_sum / (2.0 * m)))
                   * 1000000 + 0.5) / 1000000.0 AS contribution
          FROM ds JOIN intra USING (component), m
-         ORDER BY component""", cap = 13),
+         ORDER BY component""", cap = 13)
+      .allowGlobalWindow("|components| census"),
     // Three synchronous min-label supersteps as chained CTEs (the
     // markov piIter pattern) — argmax by (count DESC, label ASC)
     // row_number, exactly the Spark window.

@@ -1485,8 +1485,9 @@ object RelationalOps {
         r2(sum(col("o_totalprice"))).as("revenue"))
     // bounds are declared over the |days|-row aggregate; Catalyst then
     // proves min-over-group-keys = min-over-rows and rewrites this to a
-    // direct min/max over the single pruned o_orderdate column (see
-    // docs/PLANS.txt) — either way the full-width table is read once
+    // direct min/max over the single pruned o_orderdate column (its
+    // optimized plan shows it) — either way the full-width table is
+    // read once
     val bounds = daily.agg(min("day").as("lo"), max("day").as("hi"))
     val spine = bounds.select(
       explode(expr("sequence(lo, hi, interval 1 day)")).as("day"))
@@ -2249,7 +2250,8 @@ object RelationalOps {
          SELECT yr, rev,
                 floor(((rev - prev) / prev) * 1000000 + 0.5) / 1000000.0
                   AS yoy
-         FROM l ORDER BY yr"""),
+         FROM l ORDER BY yr""")
+      .allowGlobalWindow("|years| census"),
     Query("q_tpch_q18", tpchQ18,
       """SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
                 floor(sum(l_quantity) * 100 + 0.5) / 100.0 AS total_qty
@@ -2319,7 +2321,8 @@ object RelationalOps {
          FROM w
          WHERE (mprice IS NULL OR p_retailprice < mprice)
            AND p_retailprice = sprice
-         ORDER BY p_size DESC, p_partkey"""),
+         ORDER BY p_size DESC, p_partkey""")
+      .allowGlobalWindow("|distinct p_size| <= 50 census"),
     Query("q_scan_project", scanProject,
       """SELECT l_orderkey, l_linenumber, l_partkey, l_quantity
          FROM lineitem
@@ -2924,7 +2927,10 @@ object RelationalOps {
          JOIN estt eb ON eb.t = p.tb
          JOIN estu ON estu.ta = p.ta AND estu.tb = p.tb
          LEFT JOIN ex ON ex.ta = p.ta AND ex.tb = p.tb
-         ORDER BY p.ta, p.tb"""),
+         ORDER BY p.ta, p.tb""")
+      .allowUnboundedJoin(
+        "|types|^2 type pairs; each event joins the <= |types|-1 pairs " +
+        "naming its type"),
     Query("q_agg_approx_distinct_kmv", aggApproxDistinctKmv,
       s"""WITH g AS (SELECT DISTINCT event_type FROM events),
           h AS (
@@ -3414,7 +3420,8 @@ object RelationalOps {
                 CAST(sum(delta) OVER (ORDER BY day
                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                   AS BIGINT) AS in_flight
-         FROM daily ORDER BY day"""))
+         FROM daily ORDER BY day""")
+      .allowGlobalWindow("|days| census prefix sum"))
 
   val queries: Map[String, Q] = Query.builders(declared)
 }

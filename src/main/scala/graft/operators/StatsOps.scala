@@ -576,8 +576,7 @@ object StatsOps {
     * the fixed-point value range, NOT the corpus — the per-type census
     * windows stay |grid|-bounded at any scale. The BH step-up itself
     * (rank by p, running min of m·p/i from the worst rank down) runs
-    * on the |types|-row frame — two global census windows,
-    * allowlisted. p and each BH term are r6-pinned before the running
+    * on the |types|-row frame — two global census windows. p and each BH term are r6-pinned before the running
     * min (round-then-replay). */
   /** The per-type KS test family on the md5 A/A split — extracted so
     * q_stats_bh (step-UP FDR) and q_stats_holm (step-DOWN FWER) correct
@@ -891,7 +890,7 @@ object StatsOps {
     * series: for every split day s, score = n1·n2/(n1+n2)·(m1−m2)² (the
     * between-segment SSE reduction; the argmax is the first binary-seg
     * cut). Prefix sums stay exact longs over the |days| census (global
-    * window, bounded — allowlisted); the score is one double expression
+    * window; Catalyst bounds the pinned census); the score is one double expression
     * per row with identical association in both engines. Emits the full
     * scored census ranked by score, so the consumer sees the margin,
     * not just the winner. */
@@ -2067,7 +2066,7 @@ object StatsOps {
     * (m−i+1)·p_(i), capped at 1 — a running MAX from the BEST rank
     * down, where BH runs a min from the worst rank up; having both
     * keys pins the direction difference executably. Runs on the
-    * |event types|-row census (global windows allowlisted); every term
+    * |event types|-row census (global census windows); every term
     * r6-pinned before the cummax (round-then-replay). */
   private val holm: Q = (s, d) => {
     // Holm step-down on the driver-side ranked census: adjusted p =
@@ -2329,8 +2328,8 @@ object StatsOps {
     * Mann-Whitney identity U_t = 2·R_t − t(n+1): the wilcoxon
     * twice-midrank census keeps every rank an exact long, R_t is a
     * running sum over the PINNED |days|-bounded census (global windows
-    * allowlisted — the census is a LocalRelation, so there is nothing
-    * to distribute), and K = max|U_t| and the argmax day are exact
+    * over a LocalRelation, whose row count Catalyst knows, so there is
+    * nothing to distribute), and K = max|U_t| and the argmax day are exact
     * integer decisions — the ONLY float is the final approximate
     * p = 2exp(−6K²/(n³+n²)), r6-pinned and compared to 0.05. Ties
     * broken to the earliest day. The synthetic events stream is
@@ -2531,8 +2530,8 @@ object StatsOps {
     * day boundary, which is how dashboards are actually read. Per-day
     * (arm × day) cents census, PINNED to a LocalRelation, then
     * day-ordered exact prefix sums and the micros-quantized running
-    * maximum as global windows over the bounded census (allowlisted —
-    * exact long decisions, never a float cummax); δ̂ and the pooled σ²
+    * maximum as global windows over the bounded census (the pinned
+    * LocalRelation bounds them — exact long decisions, never a float cummax); δ̂ and the pooled σ²
     * are pinned divisions of exact integers and the per-day log-LR
     * replays from them in one shared formula text. Synthetic arms
     * (user_id % 2) on a stationary stream: the A/A spec pins that no
@@ -3541,7 +3540,8 @@ object StatsOps {
                      ELSE CAST(ceil(zsum * zsum
                        / ((p1 - p0) * (p1 - p0))) AS BIGINT) END
                   AS n_per_arm
-         FROM z"""),
+         FROM z""")
+      .allowUnboundedJoin("one arm-0 row x one arm-1 row"),
     Query("q_stats_runs_test", runsTest,
       """WITH daily AS (
            SELECT epoch_us(ts) // 86400000000 AS day,
@@ -3942,7 +3942,8 @@ object StatsOps {
                   / 1000000.0 AS w_share,
                 CAST(floor(1000.0 * wh / z) AS BIGINT) AS alloc_neyman,
                 CAST(floor(1000.0 * n_h / n_tot) AS BIGINT) AS alloc_prop
-         FROM w, t ORDER BY event_type""", cap = 5),
+         FROM w, t ORDER BY event_type""", cap = 5)
+      .allowGlobalWindow("|types| strata census"),
     Query("q_stats_changepoint", changepoint,
       """WITH daily AS (
            SELECT epoch_us(ts)::BIGINT // 86400000000 AS day,
@@ -4039,7 +4040,8 @@ object StatsOps {
         " * ln(((a + 1) / CAST(ta + 10 AS DOUBLE))" +
         " / ((b + 1) / CAST(tb + 10 AS DOUBLE))))",
         1000000)} AS psi
-         FROM c CROSS JOIN t""", cap = 4),
+         FROM c CROSS JOIN t""", cap = 4)
+      .allowGlobalWindow("10-bucket spine census"),
     Query("q_stats_gini", gini,
       s"""WITH rev AS (
            SELECT o_custkey,
@@ -4316,7 +4318,8 @@ object StatsOps {
                 ${rsql("ln(1.0 + 1.0 / digit) / ln(10.0)", 1000000)}
                   AS benford
          FROM b CROSS JOIN tot
-         GROUP BY digit, tot ORDER BY digit""", cap = 5),
+         GROUP BY digit, tot ORDER BY digit""", cap = 5)
+      .allowGlobalWindow("9-digit census"),
     Query("q_stats_regression", regression,
       s"""SELECT l_returnflag, count(*) AS n,
                 ${rsql("regr_slope(l_extendedprice, l_quantity)", 1000000)}

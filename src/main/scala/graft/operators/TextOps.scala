@@ -291,11 +291,7 @@ object TextOps {
     * evaluation (near 5 + recall 7 → 2 + 4 jobs, A/B'd). The cache key
     * CARRIES the ceiling, so the flip-boundary spec's ceiling override still
     * executes the banded plan instead of reading the sub-ceiling
-    * cache; ExplainPlansOnly (the GraphOps audit hook's twin) bypasses
-    * the cache entirely so the plan audit shows the real pair-join
-    * shapes, not an InMemoryRelation. */
-  private[graft] var ExplainPlansOnly = false
-
+    * cache. */
   private val nearPairsCached = Artifact("near_pairs", Seq(AllPairsRowCeiling)) {
     (s, d, ceiling: Long) => nearPairsBuild(s, d, ceiling).persist()
   }
@@ -307,8 +303,7 @@ object TextOps {
     else dedupNearAllPairs(s, d)
 
   private[operators] def nearPairs(s: SparkSession, d: String): DataFrame =
-    if (ExplainPlansOnly) nearPairsBuild(s, d, AllPairsRowCeiling)
-    else nearPairsCached(s, d, AllPairsRowCeiling)
+    nearPairsCached(s, d, AllPairsRowCeiling)
 
   private val dedupNear: Q = (s, d) =>
     nearPairs(s, d).orderBy("a", "b")
@@ -744,8 +739,8 @@ object TextOps {
     * through the ANN index at 100 TB; here the exact dense baseline)
     * and the fusion is a full-outer join of two k-row lists, driver-
     * trivial at any corpus size. The per-arm rank windows run over
-    * 20-row TakeOrdered frontiers (the q_text_tok_zipf allowlist
-    * argument); both RRF terms are fixed-order IEEE doubles
+    * 20-row TakeOrdered frontiers, which Catalyst bounds for the plan
+    * lint; both RRF terms are fixed-order IEEE doubles
     * (1.0/(60+rank)), so the sum needs no rounding machinery. Query =
     * the fixed bm25Terms on the lexical arm and doc 0's embedding on
     * the dense arm (arms are pluggable by contract — fusion only sees
@@ -2164,7 +2159,7 @@ object TextOps {
       .agg(sum(col("nb")).as("n"), sum(col("n1b")).as("n_pos"),
         max(lit(nt)).as("nt"), max(lit(npos)).as("npos"))
     // the decile census is ≤10 rows BY CONSTRUCTION (a constant, not a
-    // data-bounded count), so its prefix sum is the allowlisted
+    // data-bounded count), so its prefix sum is a declared
     // bounded-census window (the |days|/|hours| calendar discipline) —
     // exact long sums, identical to the Dist form it replaces, minus
     // that form's range shuffle + checkpoint + offset collect (round 9:
@@ -2621,8 +2616,9 @@ object TextOps {
     val wAll = Window.rowsBetween(
       Window.unboundedPreceding, Window.unboundedFollowing)
     // the row margin collapses to a |vocab|-row table; the global total
-    // n rides IT as a vocab-bounded global window (allowlist-legal) and
-    // one broadcast join delivers both ra and n to every bigram row.
+    // n rides IT as a vocab-bounded global window (a declared lint
+    // allowance) and one broadcast join delivers both ra and n to every
+    // bigram row.
     // cb2 stays a PARTITIONED window (parallel — partitionBy("b")): the
     // double-margin broadcast variant cost one more job (8 vs 7) and
     // +0.6 s warm, A/B'd round 11.
@@ -2803,7 +2799,8 @@ object TextOps {
                 CAST(count(*) FILTER (est - exact <=
                   (2 * n_stream) // 32) AS BIGINT) AS n_within_bound
          FROM est CROSS JOIN ns GROUP BY n_stream ORDER BY n_stream""",
-      cap = 9),
+      cap = 9)
+      .allowGlobalWindow("|vocab| estimate census"),
     // PMI's bigram census; margins from the bigram table; the shared
     // llrFrag closed form; rank on the pinned llr
     Query("q_text_llr", llrCollocations,
@@ -2835,7 +2832,8 @@ object TextOps {
          SELECT a, b, k11,
                 floor(($llrFrag) * 1000000 + 0.5) / 1000000.0 AS llr
          FROM cells
-         ORDER BY llr DESC, a, b LIMIT 20""", cap = 9),
+         ORDER BY llr DESC, a, b LIMIT 20""", cap = 9)
+      .allowGlobalWindow("|vocab| row-margin census"),
     // size() is INT in Spark, len() BIGINT in DuckDB → CAST AS INTEGER
     // (the tokencount convention); formula text shared thereafter
     Query("q_text_readability", readability,
@@ -2981,7 +2979,8 @@ object TextOps {
                   AS p_temp,
                 floor(1000.0 * wt / z * 100 + 0.5) / 100.0
                   AS expected_docs
-         FROM x CROSS JOIN z ORDER BY lang"""),
+         FROM x CROSS JOIN z ORDER BY lang""")
+      .allowGlobalWindow("|langs| census"),
     Query("q_sample_dsir", sampleDsir,
       s"""WITH $dsirCtesSql
          SELECT doc_id, source, n_tok, score_r FROM scores
@@ -3161,7 +3160,8 @@ object TextOps {
                 FROM a1)
          SELECT lang, source, n, n_correct, acc_r, acc_all_r, z_r,
                 z_r < -1.9599639845400545 AS underperforms
-         FROM a2 ORDER BY lang, source""", cap = 6),
+         FROM a2 ORDER BY lang, source""", cap = 6)
+      .allowGlobalWindow("|lang x source| census"),
     // Exact p-micros OLS moments (HUGEINT here, DECIMAL in Spark —
     // same exact integers, same one double division), slope pinned
     // before the intercept uses it.
@@ -3262,7 +3262,8 @@ object TextOps {
                   AS gain_r,
                 ${rsql("(CAST(cum_pos AS DOUBLE) / cum_n)" +
                   " / (CAST(npos AS DOUBLE) / nt)", 1000000)} AS lift_r
-         FROM g ORDER BY decile""", cap = 8),
+         FROM g ORDER BY decile""", cap = 8)
+      .allowGlobalWindow("<= 10-row decile census"),
     // Calibration: same trained chain, probabilities binned ×10, per-
     // bin confidence as exact micros; the ECE fold is sequential in
     // bin order (list_reduce over the ordered list).
@@ -3294,7 +3295,8 @@ object TextOps {
                       / sum(n)) * 1000000 + 0.5) / 1000000.0 AS ece_r
                FROM g)
          SELECT bin, n, n_pos, conf_r, acc_r, ece_r
-         FROM g CROSS JOIN e ORDER BY bin""", cap = 5),
+         FROM g CROSS JOIN e ORDER BY bin""", cap = 5)
+      .allowGlobalWindow("10-bin calibration census"),
     Query("q_text_repetition", repetition,
       """WITH tk AS (
            SELECT doc_id,
@@ -3373,7 +3375,10 @@ object TextOps {
                 CAST(CASE WHEN coalesce(n_super, 0) > 0 THEN 1 ELSE 0 END
                   AS INTEGER) AS subsumed
          FROM sz LEFT JOIN sup ON sup.a = sz.doc_id
-         ORDER BY sz.doc_id"""),
+         ORDER BY sz.doc_id""")
+      .allowUnboundedJoin(
+        "all doc pairs, below AllPairsRowCeiling docs only; above it the " +
+        "prefix-filtered equi join runs"),
     // One profile pass per md5-digit slice (q_data_profile shape), the
     // rounded shift ratio feeds the drift flag on both sides.
     Query("q_quality_schema_drift", schemaDrift, {
@@ -3421,7 +3426,8 @@ object TextOps {
                    FROM tok t JOIN vc USING (tok) CROSS JOIN tot)
          SELECT doc_id, count(*) AS n_tok,
                 floor(avg(nll) * 1000000 + 0.5) / 1000000.0 AS ppl_proxy
-         FROM sc GROUP BY doc_id ORDER BY doc_id""", cap = 7),
+         FROM sc GROUP BY doc_id ORDER BY doc_id""", cap = 7)
+      .allowGlobalWindow("|vocab| LM census (total)"),
     // λ-interpolated bigram LM: in-row bigram enumeration (1-based list
     // indexing here vs 0-based arrays in the engine — same pairs),
     // −ln p floored to micros, BIGINT mean to one division.
@@ -3453,7 +3459,8 @@ object TextOps {
          SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
                 floor((CAST(sum(nm) AS DOUBLE) / (count(*) * 1000000.0))
                   * 1000000 + 0.5) / 1000000.0 AS ppl_bi
-         FROM sc GROUP BY doc_id ORDER BY doc_id""", cap = 9),
+         FROM sc GROUP BY doc_id ORDER BY doc_id""", cap = 9)
+      .allowGlobalWindow("|vocab| LM census (total)"),
     Query("q_text_pmi", pmiCollocations,
       """WITH tokp AS (
            SELECT doc_id,
@@ -3477,7 +3484,8 @@ object TextOps {
                   JOIN uni ub ON big.b = ub.token
                   CROSS JOIN t1 CROSS JOIN t2
          WHERE cab >= 5
-         ORDER BY pmi DESC, a, b LIMIT 15""", cap = 12),
+         ORDER BY pmi DESC, a, b LIMIT 15""", cap = 12)
+      .allowGlobalWindow("|vocab| unigram and margin censuses"),
     Query("q_text_pack", textPack,
       """WITH d AS (SELECT doc_id,
                            CAST(len(string_split(text, ' ')) AS BIGINT)
@@ -3505,7 +3513,8 @@ object TextOps {
                   FROM documents GROUP BY split, lang)
          SELECT split, lang, n,
                 floor((n / total) * 1000000 + 0.5) / 1000000.0 AS frac
-         FROM g, t ORDER BY split, lang"""),
+         FROM g, t ORDER BY split, lang""")
+      .allowGlobalWindow("3-row split census"),
     Query("q_text_decontaminate", decontaminate,
       s"""WITH tok AS (
             SELECT doc_id,
@@ -3601,7 +3610,8 @@ object TextOps {
                  target AS target_tokens, planned AS planned_tokens,
                  ${graft.Par.sql("planned / CAST(avail AS DOUBLE)", 10000)}
                    AS epochs
-          FROM t3, z ORDER BY source""", cap = 5),
+          FROM t3, z ORDER BY source""", cap = 5)
+      .allowGlobalWindow("|sources| census"),
     Query("q_text_dataset_diff", datasetDiff,
       """WITH oldsnap AS (
            SELECT doc_id AS old_id,
@@ -3851,7 +3861,8 @@ object TextOps {
                   + coalesce(CAST(1.0 AS DOUBLE) / (60 + de.dense_rank),
                              CAST(0.0 AS DOUBLE)) AS rrf
          FROM lex l FULL OUTER JOIN dense de ON l.doc_id = de.doc_id
-         ORDER BY rrf DESC, doc_id LIMIT 10"""),
+         ORDER BY rrf DESC, doc_id LIMIT 10""")
+      .allowUnboundedJoin("|vectors| x the one query vector (vec_id = 0)"),
     Query("q_text_wordcount", wordcount,
       """SELECT token, count(*) AS cnt
          FROM (SELECT unnest(string_split(text, ' ')) AS token
@@ -3959,7 +3970,10 @@ object TextOps {
          JOIN sz sb ON sb.doc_id = b
          WHERE i / (sa.n + sb.n - i) >= 0.8
            AND sa.n * 4 <= sb.n * 5 AND sb.n * 4 <= sa.n * 5
-         ORDER BY a, b""", cap = 10),
+         ORDER BY a, b""", cap = 10)
+      .allowUnboundedJoin(
+        "all doc pairs a < b: the size band and prefix bitmap prune the " +
+        "verify, not the n^2/2 enumeration"),
     Query("q_text_search_phrase", phraseSearch,
       """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS ts
                       FROM documents),

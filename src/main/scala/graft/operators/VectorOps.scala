@@ -1913,7 +1913,8 @@ object VectorOps {
                   * 1000000 + 0.5) / 1000000.0 AS recall
          FROM exact ex LEFT JOIN bin b
            ON b.qid = ex.qid AND b.nid = ex.nid
-         GROUP BY ex.qid ORDER BY ex.qid"""),
+         GROUP BY ex.qid ORDER BY ex.qid""")
+      .allowUnboundedJoin("|vectors| x 5 query codes (vec_id < 5)"),
     // kmeansCtes' round-2 assignment a3 → contingency census → purity
     // and NMI via ordered folds on exact integer counts
     Query("q_eval_cluster_purity", evalClusterPurity,
@@ -2013,7 +2014,9 @@ object VectorOps {
          SELECT nprobe, n_exact, n_hit,
                 floor((CAST(n_hit AS DOUBLE) / n_exact)
                       * 1000000 + 0.5) / 1000000.0 AS recall
-         FROM res ORDER BY nprobe"""),
+         FROM res ORDER BY nprobe""")
+      .allowUnboundedJoin(
+        "|vectors| x 5 query vectors; 5 queries x |labels| centroids"),
     Query("q_sim_mmr", simMmr,
       s"""WITH q AS (SELECT vec_id AS qid, embedding AS qv
              FROM embeddings WHERE vec_id < 3),
@@ -2193,7 +2196,8 @@ object VectorOps {
                 max(CASE WHEN dep = 10 THEN x_d END) AS overlap10,
                 floor((0.1 * list_reduce(list(term ORDER BY dep),
                     (a, b) -> a + b)) * 1000000 + 0.5) / 1000000.0 AS rbo
-         FROM tm GROUP BY qid ORDER BY qid"""),
+         FROM tm GROUP BY qid ORDER BY qid""")
+      .allowUnboundedJoin("|vectors| x 3 query vectors (vec_id < 3)"),
     Query("q_embed_norm_stats", embedNormStats,
       """WITH n AS (
            SELECT label,
@@ -2286,7 +2290,9 @@ object VectorOps {
                         WHERE abs(rm / 1000000.0 - 1.0) <= 0.5)
                       AS DOUBLE) / count(*))
                   * 1000000 + 0.5) / 1000000.0 AS within_50pct_rate
-         FROM rr"""),
+         FROM rr""")
+      .allowUnboundedJoin(
+        "pairs of the 1-in-5 vector sample; sample x 8 projection planes"),
     Query("q_embed_erank", embedErank,
       """WITH dm AS (
            SELECT CAST(unnest(generate_series(1, len(embedding))) - 1
@@ -2334,7 +2340,8 @@ object VectorOps {
                   * 1000000 + 0.5) / 1000000.0 AS same_rate,
                 floor((CAST(sum(cm) AS DOUBLE) / count(*) / 1000000.0)
                   * 1000000 + 0.5) / 1000000.0 AS avg_cos
-         FROM bb GROUP BY bin ORDER BY bin"""),
+         FROM bb GROUP BY bin ORDER BY bin""")
+      .allowUnboundedJoin("pairs of the 1-in-5 vector sample"),
     Query("q_vec_project", vecProject,
       """WITH pl AS (
            SELECT k, j,
@@ -2351,7 +2358,8 @@ object VectorOps {
          SELECT vec_id, k,
                 floor(list_inner_product(varr, parr) / sqrt(8.0)
                   * 1000000 + 0.5) / 1000000.0 AS proj
-         FROM q CROSS JOIN pa ORDER BY vec_id, k"""),
+         FROM q CROSS JOIN pa ORDER BY vec_id, k""")
+      .allowUnboundedJoin("20 vectors (vec_id < 20) x 8 projection planes"),
     Query("q_sim_hard_negatives", hardNegatives,
       """WITH q AS (SELECT vec_id AS qid, label AS qlabel,
                            CAST(embedding AS DOUBLE[]) AS qv
@@ -2367,7 +2375,8 @@ object VectorOps {
                          ORDER BY sim_r DESC, neg_id) AS rk
                 FROM scored)
          SELECT qid, rk, neg_id, sim_r FROM rk
-         WHERE rk <= 3 ORDER BY qid, rk"""),
+         WHERE rk <= 3 ORDER BY qid, rk""")
+      .allowUnboundedJoin("|vectors| x 10 query vectors (vec_id < 10)"),
     Query("q_embed_outliers", embedOutliers,
       """WITH ex AS (SELECT vec_id, label,
                             CAST(embedding AS DOUBLE[]) AS varr
@@ -2500,7 +2509,9 @@ object VectorOps {
                                             CAST(b.embedding AS DOUBLE[])))
                         * 1000000 + 0.5) / 1000000.0 AS sim_r
            FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id) t
-         ORDER BY sim_r DESC, va, vb LIMIT 10"""),
+         ORDER BY sim_r DESC, va, vb LIMIT 10""")
+      .allowUnboundedJoin(
+        "all vector pairs a < b: exact ground truth, not the scale path"),
     Query("q_dedup_embed", dedupEmbed, embedExactSql),
     Query("q_sample_kcenter", sampleKcenter, kcenterSql, cap = 3),
     Query("q_eval_lsh_recall", lshRecall,
@@ -2577,7 +2588,8 @@ object VectorOps {
                   AS avg_margin,
                 CAST(count(*) FILTER (sim_r - nxt < 0.05) AS BIGINT)
                   AS n_low
-         FROM rk WHERE rn = 1 GROUP BY label ORDER BY label"""),
+         FROM rk WHERE rn = 1 GROUP BY label ORDER BY label""")
+      .allowUnboundedJoin("|vectors| x |labels| centroids"),
     Query("q_sim_knn_label", knnLabel,
       s"""WITH $centCtes,
          sims AS (
@@ -2615,7 +2627,9 @@ object VectorOps {
              FROM votes) t
            WHERE vr = 1)
          SELECT vec_id, label, nlabel AS maj_label, votes
-         FROM maj WHERE nlabel != label ORDER BY vec_id""", cap = 6),
+         FROM maj WHERE nlabel != label ORDER BY vec_id""", cap = 6)
+      .allowUnboundedJoin(
+        "all vector pairs a < b: exact kNN ground truth, not the scale path"),
     Query("q_ann_ivf", annIvf,
       s"""WITH $ivfCtes
          SELECT qid, CAST(rnk AS BIGINT) AS rank, vec_id AS nid, sim_r
@@ -2623,7 +2637,8 @@ object VectorOps {
                       row_number() OVER (PARTITION BY qid
                         ORDER BY sim_r DESC, vec_id) AS rnk
                FROM cand) t
-         WHERE rnk <= 3 ORDER BY qid, rank"""),
+         WHERE rnk <= 3 ORDER BY qid, rank""")
+      .allowUnboundedJoin("5 query vectors x |labels| centroids"),
     Query("q_eval_ivf_recall", evalIvfRecall,
       s"""WITH $ivfCtes,
          ivf AS (SELECT qid, vec_id FROM (
@@ -2648,7 +2663,9 @@ object VectorOps {
                   / 1000000.0 AS recall
          FROM ext LEFT JOIN ivf ON ext.qid = ivf.qid
                               AND ext.vec_id = ivf.vec_id
-         GROUP BY ext.qid ORDER BY ext.qid"""),
+         GROUP BY ext.qid ORDER BY ext.qid""")
+      .allowUnboundedJoin(
+        "|vectors| x 5 query vectors; 5 queries x |labels| centroids"),
     // One scored scan yields both rankings; the truncated similarity
     // renormalizes by the 16-dim prefix norms (list slice is 1-based
     // inclusive in DuckDB, matching Spark's slice(v, 1, 16)).
@@ -2686,7 +2703,8 @@ object VectorOps {
                     ELSE 0 END) AS DOUBLE) / count(*)) * 1000000 + 0.5)
                   / 1000000.0 AS recall
          FROM f LEFT JOIN tr ON f.qid = tr.qid AND f.vec_id = tr.vec_id
-         GROUP BY f.qid ORDER BY f.qid"""))
+         GROUP BY f.qid ORDER BY f.qid""")
+      .allowUnboundedJoin("|vectors| x 5 query vectors (vec_id < 5)"))
 
   val queries: Map[String, Q] = Query.builders(declared)
 }

@@ -30,78 +30,61 @@ class OperatorEdgeSpec extends SparkSpec {
       (68423.46, 6842346L, "68423.46"))) // 2-decimal value: all agree
   }
 
+  /** One pass over the registry at sf0.001, read by the two tests
+    * below: each key is built once, its optimized plan linted against
+    * its declaration, then counted. */
+  private final case class KeyRun(key: String, findings: Seq[String],
+      rows: Long)
+  private lazy val registryPass: Seq[KeyRun] =
+    SparkEntry.declared.sortBy(_.key).map { q =>
+      val df = q.build(spark, sfDir)
+      val findings = PlanLint.check(q, df.queryExecution.optimizedPlan)
+      KeyRun(q.key, findings, df.count())
+    }
+
   test("every declared query runs at sf0.001 (rows > 0 unless inherently empty)") {
     // q_join_anti is legitimately empty when every customer has orders
     val mayBeEmpty = Set("q_join_anti")
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sfDir).count()
-      if (!mayBeEmpty(name)) assert(n > 0, s"$name returned no rows")
+    registryPass.foreach { r =>
+      if (!mayBeEmpty(r.key)) assert(r.rows > 0, s"${r.key} returned no rows")
     }
   }
 
-  test("global windows only over bounded census frames (allowlist)") {
-    // A Window with no partition key moves its whole frame to ONE task.
-    // That is only acceptable over a BOUNDED census (|days|, |hours|,
-    // |langs|, |distinct sizes|, top-k frontiers) — never a frame that
-    // grows with the data (those use operators/Dist). This pins the
-    // constraint executably: a new key with a global window fails here
-    // until it is consciously added with a boundedness argument.
-    val allow = Set(
-      "q_yoy_growth",          // |years| census
-      "q_orders_backlog",      // |days| census prefix sum
-      "q_skyline",             // |distinct p_size| ≤ 50 census
-      "q_text_tok_zipf",       // top-100 frontier after TakeOrdered
-      "q_search_rrf",          // two 20-row TakeOrdered arm frontiers
-      "q_join_interval_overlap", // |hours| burst census (bursts shape)
-      "q_sample_temperature",  // |langs| census
-      "q_sample_split",        // 3-row split census
-      "q_events_interpolate",  // |hours| spine
-      "q_events_bursts",       // |hours| spine
-      "q_events_rolling_7d",   // |days| spine
-      "q_stats_hill_tail",     // 501-row TakeOrdered tail frontier
-      "q_stats_cusum",         // |days| census
-      "q_stats_changepoint",   // |days| census
-      "q_stats_decompose",     // |days| census
-      "q_stats_anomaly_stl",   // |days| census
-      "q_stats_ewma",          // |days| census
-      "q_stats_runs_test",     // |days| census (sign + run windows)
-      "q_stats_pettitt",       // |days| census, PINNED LocalRelation
-      "q_stats_msprt",         // |days| census, PINNED LocalRelation
-      "q_eval_lift_gains",     // ≤10-row decile census (round 9)
-      // round-10 census-window folds (each replaced a separate total
-      // aggregate + crossJoin(broadcast) over the SAME bounded frame —
-      // the boundedness arguments live at the call sites):
-      "q_stats_psi",           // 10-bucket spine census
-      "q_stats_pacf",          // |days| census (global moments)
-      "q_pipeline_mix",        // |sources| census (three scalars)
-      "q_eval_ece",            // 10-bin calibration census
-      "q_stats_benford",       // 9-digit census
-      "q_stats_cooks_distance", // |days| OLS census (ssq)
-      "q_text_perplexity",     // |vocab| LM census (total)
-      "q_text_perplexity_bigram", // |vocab| LM census (total)
-      "q_sample_neyman",       // |types| strata census
-      "q_eval_slice_audit",    // |lang×source| census
-      "q_events_window_funnel", // ≤4-row depth census
-      "q_eval_cms_error",      // |vocab| estimate census
-      // round-11 margin-table rework (ADVICE r10): the bigram-census
-      // global windows were a scale hazard (that frame grows with the
-      // corpus); totals now ride |vocab|-row MARGIN tables as global
-      // windows before a broadcast fan-out
-      "q_text_llr",            // |vocab| row-margin census (ra + n)
-      "q_text_pmi",            // |vocab| unigram (t1) + margin (t2)
-      "q_graph_modularity")    // |components| census (2m)
-    val offenders = SparkEntry.queries.keys.toSeq.sorted.filter { name =>
-      val plan = SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.optimizedPlan
-      plan.collect {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window
-            if w.partitionSpec.isEmpty => w
-      }.nonEmpty
-    }.toSet
-    assert((offenders -- allow).isEmpty,
-      s"unbounded global window in: ${offenders -- allow}")
-    assert((allow -- offenders).isEmpty,
-      s"stale allowlist entries: ${allow -- offenders}")
+  test("plan lint: unbounded global windows and non-equi joins only where declared") {
+    // A global window moves its whole frame into one task and a
+    // non-equi join pairs every row with every row: acceptable only
+    // where Catalyst bounds the input or the key declares the bound.
+    // A new offender fails here until its declaration carries an
+    // allowance with its bound; an allowance the plan no longer needs
+    // fails as stale.
+    val findings = registryPass.flatMap(_.findings)
+    assert(findings.isEmpty, findings.mkString("\n"))
+  }
+
+  test("plan lint flags unbounded frames and passes bounded ones") {
+    import org.apache.spark.sql.expressions.Window
+    // a parquet scan has no maxRows; range(100) does (Catalyst knows
+    // its 100 rows), so the unbounded frame is a table, not a range
+    val scan = Tables.orders(spark, sfDir).select(col("o_orderkey").as("id"))
+    def shapes(df: org.apache.spark.sql.DataFrame) =
+      PlanLint.offenders(df.queryExecution.optimizedPlan).map(_.shape)
+    def ranked(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("rn", row_number().over(Window.orderBy("id")))
+    assert(shapes(ranked(scan)) === Seq(PlanLint.GlobalWindow))
+    assert(shapes(scan.crossJoin(scan.toDF("id2"))) ===
+      Seq(PlanLint.UnboundedJoin))
+    assert(shapes(ranked(scan.limit(10))).isEmpty)
+    assert(shapes(scan.crossJoin(scan.agg(count(lit(1))))).isEmpty)
+    assert(shapes(ranked(spark.range(100).toDF())).isEmpty)
+    // an allowance passes its offender, and fails once the plan no
+    // longer has that shape
+    val q = Query("q_lint_probe", (_, _) => ranked(scan), "SELECT 1")
+    val plan = ranked(scan).queryExecution.optimizedPlan
+    assert(PlanLint.check(q, plan).size === 1)
+    assert(PlanLint.check(q.allowGlobalWindow("test"), plan).isEmpty)
+    val stale = PlanLint.check(q.allowGlobalWindow("test")
+      .allowUnboundedJoin("test"), plan)
+    assert(stale.size === 1 && stale.head.contains("stale"), stale)
   }
 
   test("queries and oracleSql keys line up") {

@@ -2,8 +2,7 @@ package graft
 
 /** Consistency of the declared contract surface itself — the failure
   * modes here are silent (a duplicate key across operator packs shadows
-  * an implementation; a renamed key quietly drops out of the plan
-  * audit) so they get explicit guards. */
+  * an implementation) so they get explicit guards. */
 class RegistrySpec extends SparkSpec {
 
   test("no key is declared by two operator packs (silent shadowing)") {
@@ -27,11 +26,6 @@ class RegistrySpec extends SparkSpec {
     val names = Caches.declared.map(_.name)
     assert(names.distinct.size === names.size,
       s"artifact names declared twice: ${names.diff(names.distinct)}")
-  }
-
-  test("plan-audit keys exist in the query registry") {
-    ExplainAudit.audited.foreach(k =>
-      assert(SparkEntry.queries.contains(k), s"audited key $k missing"))
   }
 
   test("every oracle key has rounded floats or integer/string columns only") {
