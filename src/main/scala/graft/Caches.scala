@@ -86,9 +86,10 @@ object Caches {
     artifacts.asScala.toSeq
   }
 
-  /** Live entry count across every artifact. CacheSpec's warmup audit
-    * checks through it that no query builds an artifact the warmup has
-    * not built. */
+  /** Live entry count across every artifact (perfbench's
+    * `caches.entries`). The suite's registry sweep checks, per dir
+    * through `entriesFor`, that no query builds an artifact the warmup
+    * has not built. */
   def totalEntries: Int = artifacts.asScala.map(_.size).sum
 
   /** Live entry count for ONE data dir across every artifact, so an

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Window}
+import org.apache.spark.sql.classic.SparkSession
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
 /** The plan-shape lint of the registry (docs/SCALE.md). Two shapes in a
   * key's optimized logical plan stop it from scaling with the data:
@@ -13,7 +15,12 @@ import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Window}
   * window's child, or both sides of the join, have no `maxRows` (a
   * scalar aggregate, a `limit` or a literal range all have one). An
   * offender passes only when its key declares an allowance for that
-  * shape, with the bound the plan does not show. */
+  * shape, with the bound the plan does not show.
+  *
+  * A persisted frame (a session artifact) is read through the plan it
+  * was cached from, optimized by the active session, so an artifact's
+  * build is linted in every key that reads it. A checkpointed frame
+  * keeps no plan, so the lint stops at its `LogicalRDD`. */
 object PlanLint {
   sealed abstract class Shape(val name: String)
   case object GlobalWindow extends Shape("global window over an unbounded frame")
@@ -21,12 +28,16 @@ object PlanLint {
 
   final case class Offender(shape: Shape, node: LogicalPlan)
 
-  def offenders(plan: LogicalPlan): Seq[Offender] = plan.collect {
+  def offenders(plan: LogicalPlan): Seq[Offender] = plan.flatMap {
     case w: Window if w.partitionSpec.isEmpty && w.child.maxRows.isEmpty =>
-      Offender(GlobalWindow, w)
+      Seq(Offender(GlobalWindow, w))
     case j: Join if ExtractEquiJoinKeys.unapply(j).isEmpty &&
         j.left.maxRows.isEmpty && j.right.maxRows.isEmpty =>
-      Offender(UnboundedJoin, j)
+      Seq(Offender(UnboundedJoin, j))
+    case m: InMemoryRelation =>
+      offenders(SparkSession.active.sessionState.optimizer
+        .execute(m.cacheBuilder.logicalPlan))
+    case _ => Nil
   }
 
   /** The lint's findings for one key's plan, empty when it passes: each

@@ -9,10 +9,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   hash-match (table names plain: each parquet file is registered as a
   *   view); None only for an approximate sketch
   * @param cap    the suite's performance regression guard, checked by
-  *   JobCapSpec: the most Spark jobs one warm run of the key may submit.
+  *   the cap test of `RegistrySweep`: the most Spark jobs one warm run
+  *   of the key (its build plus a `count()`) may submit.
   *   A key's scheduler exposure is its job count (about 11-26 ms per
   *   job, BASELINE.md), and unlike wall time the count is
-  *   config-invariant (identical at local[2]/sf0.01 and local[32]/sf0.1),
+  *   config-invariant (identical at local[2]/sf0.01 and local[32]/sf0.1,
+  *   and at sf0.001 for all but q_customer_rfm: 8 there, 9-10 at
+  *   sf0.01),
   *   so host weather cannot move it. A cap is the measured count + 2,
   *   since AQE may add a stage job as data shifts: a reverted driver
   *   fold or a dropped session artifact costs 3-20 jobs and trips it,

@@ -3951,7 +3951,8 @@ object TextOps {
                     ORDER BY doc_id) AS rn
            FROM documents) t
          WHERE rn = 1 ORDER BY doc_id"""),
-    Query("q_dedup_near", dedupNear, dedupNearSql),
+    Query("q_dedup_near", dedupNear, dedupNearSql)
+      .allowUnboundedJoin("all doc pairs a < b (near_pairs): exact truth"),
     Query("q_dedup_prefix_filter", dedupPrefixFilter,
       """WITH tok AS (
            SELECT doc_id,

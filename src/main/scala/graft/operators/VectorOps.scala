@@ -2093,7 +2093,8 @@ object VectorOps {
            FROM dcg d JOIN nrel USING (qid))
          SELECT qid, n_rel, dcg_r, idcg_r,
                 floor((dcg_r / idcg_r) * 1000000 + 0.5) / 1000000.0 AS ndcg
-         FROM j ORDER BY qid""", cap = 5),
+         FROM j ORDER BY qid""", cap = 5)
+      .allowUnboundedJoin("|vectors| x 3 query vectors (retrieval_ranked)"),
     // Precision terms are exact small-int divisions r6-pinned before a
     // ≤10-term ordered fold; min(10, n_rel) divides two bit-identical
     // doubles — the NDCG discipline applied to MAP.
@@ -2132,7 +2133,8 @@ object VectorOps {
          SELECT a.qid AS qid, n_rel, n_hits10,
                 floor((sum_t / least(10, n_rel)) * 1000000 + 0.5)
                   / 1000000.0 AS ap
-         FROM ap a JOIN nrel USING (qid) ORDER BY qid""", cap = 5),
+         FROM ap a JOIN nrel USING (qid) ORDER BY qid""", cap = 5)
+      .allowUnboundedJoin("|vectors| x 3 query vectors (retrieval_ranked)"),
     // Ranking B scores are integer dots of the q_embed_quantize affine
     // codes (exact cross-engine); the (qid, depth) grid is left-joined
     // so a 0-overlap prefix contributes a 0 term instead of dropping.
@@ -2512,7 +2514,8 @@ object VectorOps {
          ORDER BY sim_r DESC, va, vb LIMIT 10""")
       .allowUnboundedJoin(
         "all vector pairs a < b: exact ground truth, not the scale path"),
-    Query("q_dedup_embed", dedupEmbed, embedExactSql),
+    Query("q_dedup_embed", dedupEmbed, embedExactSql)
+      .allowUnboundedJoin("all vector pairs a < b (embed_pairs): exact truth"),
     Query("q_sample_kcenter", sampleKcenter, kcenterSql, cap = 3),
     Query("q_eval_lsh_recall", lshRecall,
       s"""WITH exact AS ($embedExactSql),
@@ -2523,7 +2526,8 @@ object VectorOps {
          FROM (SELECT count(*) AS n_exact FROM exact) ne
          CROSS JOIN (SELECT count(*) AS n_lsh FROM lsh) nl
          CROSS JOIN (SELECT count(*) AS n_hit
-                     FROM lsh JOIN exact USING (va, vb)) h"""),
+                     FROM lsh JOIN exact USING (va, vb)) h""")
+      .allowUnboundedJoin("vector pairs a < b; |vectors| x 16 LSH planes"),
     Query("q_vec_norm", vecNorm,
       """SELECT vec_id,
                 floor((sqrt(list_inner_product(
@@ -2536,7 +2540,8 @@ object VectorOps {
                            CAST(embedding AS DOUBLE[]))))
                       * 1000000 + 0.5) / 1000000.0 AS c0_r
          FROM embeddings ORDER BY vec_id"""),
-    Query("q_dedup_embed_lsh", dedupEmbedLsh, embedLshSql),
+    Query("q_dedup_embed_lsh", dedupEmbedLsh, embedLshSql)
+      .allowUnboundedJoin("|vectors| x 16 LSH planes (embed_pairs)"),
     Query("q_embed_pca_top1", pcaTop1, pcaSql),
     Query("q_embed_drift", embedDrift,
       """WITH dm AS (

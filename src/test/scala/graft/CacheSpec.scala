@@ -45,89 +45,6 @@ class CacheSpec extends SparkSpec {
     assert(rebuilt.select("doc_id").distinct().count() === 5)
   }
 
-  /** A private copy of the sf0.001 dir: artifact keys carry the data
-    * dir, so a fresh dir starts with an empty census (entries built by
-    * EARLIER suites in this JVM would otherwise mask a gap), and a
-    * dir-scoped invalidate at the end leaves the artifacts later suites
-    * in the shared session rely on alone. */
-  private def withPrivateDir(body: String => Unit): Unit = {
-    val auditDir = Files.createTempDirectory("graft-warmup-audit")
-    new java.io.File(sfDir).listFiles().foreach { f =>
-      Files.copy(f.toPath, auditDir.resolve(f.getName))
-    }
-    val aDir = auditDir.toString
-    try body(aDir)
-    finally {
-      // Release everything built for the private dir: the artifacts,
-      // the tmpdir layout parquets and warehouse bucket tables keyed by
-      // the fresh dir's hash, and the copied data itself.
-      Caches.invalidate(aDir)
-      val tag = Integer.toHexString(aDir.hashCode & 0x7fffffff)
-      Seq(s"graft_orders_bck_$tag", s"graft_customer_bck_$tag")
-        .foreach { t =>
-          spark.sql(s"DROP TABLE IF EXISTS $t")
-          rmTree(new java.io.File(
-            spark.conf.get("spark.sql.warehouse.dir")
-              .stripPrefix("file:"), t))
-        }
-      Seq(s"graft_events_by_day_$tag", s"graft_calendar_dim_$tag")
-        .foreach(d => rmTree(
-          new java.io.File(sys.props("java.io.tmpdir"), d)))
-      rmTree(auditDir.toFile)
-    }
-  }
-
-  test("every session cache is warmup-built: timed keys add no entries") {
-    // Bench times one pass after its warmup, and no key of the timed
-    // pass may pay an artifact build: a build that lands on whichever
-    // consumer runs first charges that key for shared work and moves
-    // with key order. Warm every declared artifact the way Bench does,
-    // check each holds an entry, then run one consumer per artifact
-    // family: the census must not grow.
-    withPrivateDir { aDir =>
-      assert(Caches.entriesFor(aDir) === 0)
-      def persisted = spark.sparkContext.getPersistentRDDs.keySet
-      val idsBefore = persisted
-      Caches.declared.foreach(_.warm(spark, aDir))
-      val warmed = persisted -- idsBefore
-      assert(warmed.nonEmpty)
-      Caches.declared.foreach(a =>
-        assert(a.entriesFor(aDir) > 0, s"artifact ${a.name} was not warmed"))
-      val before = Caches.entriesFor(aDir)
-      val probes = Seq(
-        "q_search_rrf", // bm25_per_doc
-        "q_stats_dw", "q_stats_pettitt", "q_stats_pacf", // daily_census
-        "q_stats_ljung_box",
-        "q_dedup_near", // tokens / vocab / bitmaps / near_pairs
-        "q_ann_ivf", "q_ann_ivfpq", // kmeans_centroids / pq_codebook
-        "q_eval_auroc", // quality_classifier
-        "q_multimodal_phash_hamming", // packed_fingerprints
-        "q_multimodal_block_jaccard", // block_inventory
-        "q_layout_skipping", // layout_stats
-        "q_text_bpe_encode", // bpe_trained
-        "q_dedup_simhash_pairs", "q_dedup_containment", // simhashes / pairs
-        "q_graph_hits", "q_graph_modularity", // graph edges / components
-        // disk-backed layouts: co-bucketed tables, calendar dim
-        "q_layout_bucket_join", "q_layout_dpp",
-        "q_sim_sparse_topk", "q_text_keywords", // tfidf_index
-        "q_text_search_tfidf",
-        "q_eval_pq_recall", "q_embed_pq") // pq_codes / pq_query_dist
-      probes.foreach { k =>
-        assert(SparkEntry.queries.contains(k), s"probe key $k missing")
-        SparkEntry.queries(k)(spark, aDir).count()
-        assert(Caches.entriesFor(aDir) === before,
-          s"$k built a session cache the warmup did not — declare it " +
-            "as a graft.Artifact")
-      }
-      // invalidate releases everything the warmup persisted, the
-      // intermediate checkpoints the builds did not keep included
-      Caches.invalidate(aDir)
-      val leaked = persisted intersect warmed
-      assert(leaked.isEmpty, s"${leaked.size} of ${warmed.size} RDDs the " +
-        s"warmup persisted are still persisted after invalidate: $leaked")
-    }
-  }
-
   test("invalidate(dir) releases checkpointed artifacts") {
     // q_text_quality_classifier's trained state holds a localCheckpoint
     // frame, and the distributed cluster loop hands back a frame over a
@@ -146,11 +63,6 @@ class CacheSpec extends SparkSpec {
       assert((persisted intersect built).isEmpty,
         s"still persisted after invalidate: ${persisted intersect built}")
     }
-  }
-
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rmTree)
-    f.delete(): Unit
   }
 
   test("clearAll drops every cached entry") {

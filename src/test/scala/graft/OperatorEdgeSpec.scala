@@ -30,37 +30,6 @@ class OperatorEdgeSpec extends SparkSpec {
       (68423.46, 6842346L, "68423.46"))) // 2-decimal value: all agree
   }
 
-  /** One pass over the registry at sf0.001, read by the two tests
-    * below: each key is built once, its optimized plan linted against
-    * its declaration, then counted. */
-  private final case class KeyRun(key: String, findings: Seq[String],
-      rows: Long)
-  private lazy val registryPass: Seq[KeyRun] =
-    SparkEntry.declared.sortBy(_.key).map { q =>
-      val df = q.build(spark, sfDir)
-      val findings = PlanLint.check(q, df.queryExecution.optimizedPlan)
-      KeyRun(q.key, findings, df.count())
-    }
-
-  test("every declared query runs at sf0.001 (rows > 0 unless inherently empty)") {
-    // q_join_anti is legitimately empty when every customer has orders
-    val mayBeEmpty = Set("q_join_anti")
-    registryPass.foreach { r =>
-      if (!mayBeEmpty(r.key)) assert(r.rows > 0, s"${r.key} returned no rows")
-    }
-  }
-
-  test("plan lint: unbounded global windows and non-equi joins only where declared") {
-    // A global window moves its whole frame into one task and a
-    // non-equi join pairs every row with every row: acceptable only
-    // where Catalyst bounds the input or the key declares the bound.
-    // A new offender fails here until its declaration carries an
-    // allowance with its bound; an allowance the plan no longer needs
-    // fails as stale.
-    val findings = registryPass.flatMap(_.findings)
-    assert(findings.isEmpty, findings.mkString("\n"))
-  }
-
   test("plan lint flags unbounded frames and passes bounded ones") {
     import org.apache.spark.sql.expressions.Window
     // a parquet scan has no maxRows; range(100) does (Catalyst knows
@@ -76,6 +45,10 @@ class OperatorEdgeSpec extends SparkSpec {
     assert(shapes(ranked(scan.limit(10))).isEmpty)
     assert(shapes(scan.crossJoin(scan.agg(count(lit(1))))).isEmpty)
     assert(shapes(ranked(spark.range(100).toDF())).isEmpty)
+    // a persisted frame is read through the plan it was cached from
+    val cached = scan.crossJoin(scan.toDF("id2")).persist()
+    try assert(shapes(cached.select("id")) === Seq(PlanLint.UnboundedJoin))
+    finally cached.unpersist(): Unit
     // an allowance passes its offender, and fails once the plan no
     // longer has that shape
     val q = Query("q_lint_probe", (_, _) => ranked(scan), "SELECT 1")
